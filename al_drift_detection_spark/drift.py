@@ -568,7 +568,7 @@ def categorical_drift(
       that window's rows and ref_props, never on which categories OTHER
       windows/micro-batches happened to contain (a data-dependent union
       would shift every window's expected masses when a new category shows
-      up anywhere — pinned by test_stream_cat_drift_matches_batch);
+      up anywhere — pinned by test_closed_cat_drift_split_window_parity);
     - the grid is bounded by |ref_props|+1 regardless of data cardinality: a
       corrupted high-cardinality column cannot blow up the broadcast frame.
     Output: one row per window (window_id, n, chi2_stat, dof, p_value,

@@ -574,7 +574,7 @@ def dedup_clusters(
     themselves); keep ⇔ the node is its cluster's minimum id.
 
     CONTRACT NOTE: `pairs` is consumed — its plan is materialized into a
-    localCheckpoint here and any persisted self-join child it carried
+    persisted edge list here and any persisted self-join child it carried
     (functions._persist) is RELEASED as part of that. A caller that wants to
     reuse `pairs` for further queries afterwards will silently recompute its
     pipeline (twice, for the self-join); materialize your own copy first if
@@ -582,14 +582,17 @@ def dedup_clusters(
     """
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        # pairs may be an expensive plan (shingle join / LSH); materialize once
-        .localCheckpoint(eager=True)
+        # pairs may be an expensive plan (shingle join / LSH); materialize
+        # once. persist, not localCheckpoint: neither result references
+        # edges, and unpersist() cannot free a localCheckpoint RDD
+        .persist()
     )
-    # the pair plan is now materialized into the checkpoint — release any
+    n_edges = edges.count()
+    # the pair plan is now materialized into the cache — release any
     # persisted self-join child it carried (attach_persisted survives only on
     # the original frame, so composition points like this one must release)
     release(pairs)
-    if edges.count() <= driver_edge_limit:
+    if n_edges <= driver_edge_limit:
         parent: dict = {}
 
         def find(x):
@@ -604,6 +607,7 @@ def dedup_clusters(
             ra, rb = find(r["src"]), find(r["dst"])
             if ra != rb:
                 parent[rb] = ra
+        edges.unpersist()
         comp: dict = {}
         for x in set(parent) | {find(x) for x in parent}:
             comp.setdefault(find(x), set()).add(x)
@@ -654,6 +658,7 @@ def dedup_clusters(
         if changed == 0:
             break
     else:
+        edges.unpersist()
         # silently-wrong clusters are worse than a loud failure: an
         # unconverged fixpoint leaves chain tails with intermediate labels,
         # splitting true clusters (duplicate docs would survive dedup)
@@ -662,6 +667,7 @@ def dedup_clusters(
             f"{max_iter} rounds ({changed} labels still changing) — raise "
             "max_iter (long dup chains) or lower driver_edge_limit"
         )
+    edges.unpersist()
     return labels.select(
         F.col("node").alias(id_col),
         F.col("lbl").alias("canonical_id"),

@@ -101,7 +101,9 @@ def mg_summary(partials: DataFrame, k: int = 16) -> DataFrame:
     reduction once per window — subtract the (k+1)-th largest sum, drop
     non-positives (Agarwal et al.'s merge; deficit stays ≤ n/(k+1)). Input
     is already O(chunks × k) rows, so the rank window is bounded by
-    construction. Output: (window, item, est, n_total) — est ≤ true count."""
+    construction. Output: (window, item, est, n_total) — est ≤ true count.
+    A window whose partials carry no `(n)` row has no defined n_total and
+    is dropped."""
     # ONE window pass over the summed partials (r8): the `(n)` total row
     # rides the SAME per-window partition as the item rows — ordered LAST
     # (flag-first sort key), so items still occupy ranks 1..m — and
@@ -131,6 +133,7 @@ def mg_summary(partials: DataFrame, k: int = 16) -> DataFrame:
     )
     return ranked.filter(
         (F.col("_is_n") == 0)
+        & F.col("n_total").isNotNull()
         & (F.col("rank") <= k)
         & (F.col("cnt") - F.col("t") > 0)
     ).select(

@@ -67,10 +67,11 @@ def volume_anomaly(
     the reference — resolved from the persisted O(windows) count frame via
     orderBy/limit (works for sparse and non-numeric window ids; no extra
     scan of the table).
-    ref_mean: alternatively, a FIXED reference volume — the streaming form
-    (stream_health) passes this so a window's verdict never depends on what
-    other micro-batches contained (the same deterministic-reference rule as
-    categorical_drift); with a literal reference there is no persist.
+    ref_mean: alternatively, a FIXED reference volume, so a window's verdict
+    never depends on which other windows the input holds (the same
+    deterministic-reference rule as categorical_drift and the closed-window
+    streaming twin, closed.window_health_spec); with a literal reference
+    there is no persist.
     A data-derived reference that selects NO windows raises loudly instead
     of emitting NULL-ratio all-'pass' rows (review-caught: NULL comparisons
     fall through to the otherwise-branch).
@@ -144,9 +145,9 @@ def completeness_drift(
     null). ONE groupBy(window) computes every column's ratio; the reference
     ratio is a count-weighted aggregate of the same (persisted) frame,
     folded back as a literal.
-    ref_ratios: alternatively a FIXED per-column reference ratio map — the
-    streaming form (stream_health), same deterministic-reference rule as
-    volume_anomaly's ref_mean; with literals there is no persist.
+    ref_ratios: alternatively a FIXED per-column reference ratio map — same
+    deterministic-reference rule as volume_anomaly's ref_mean; with literals
+    there is no persist.
     A data-derived reference selecting no windows raises loudly (same
     NULL→'pass' trap as volume_anomaly).
     """

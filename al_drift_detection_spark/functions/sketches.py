@@ -84,7 +84,7 @@ def exact_cumulative_distinct(
     count(DISTINCT ...), which both ignore NULLs; a raw groupBy would count
     the null group as one extra 'distinct' value and diverge from the
     estimate and the oracle (review-caught; same null-parity class as
-    closed_window_uniqueness's r5 fix). Output:
+    closed.window_uniqueness_spec's r5 fix). Output:
     (window_col, n_exact_cum:long)."""
     first = (
         df.filter(F.col(col).isNotNull())

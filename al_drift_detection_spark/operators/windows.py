@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 from pyspark.sql.window import Window
 
 
@@ -64,11 +65,18 @@ def global_cumulative(
     window's sort, so a cumulative+lead consumer (q_wasserstein's ECDF ×
     merged-support step) pays ONE tiny driver job instead of two and one
     join instead of two (r8, guide §1.2/§2.4). Requires exactly one order
-    column, typed double (the boundary column is double).
+    column, typed numeric (the boundary column is double, so the lead of an
+    integer column comes back as double).
     """
     sums = sums or {}
-    if lead_col and len(order_cols) != 1:
-        raise ValueError("lead_col requires exactly one order column")
+    if lead_col:
+        if len(order_cols) != 1:
+            raise ValueError("lead_col requires exactly one order column")
+        dtype = df.select(order_cols[0]).schema[0].dataType
+        if not isinstance(dtype, NumericType):
+            raise ValueError(
+                f"lead_col requires a numeric order column, got {dtype.simpleString()}"
+            )
     d = df.withColumn("_bkt", bucket.cast("long"))
     aggs = [F.count(F.lit(1)).alias("_cnt")] + [
         x
@@ -93,7 +101,7 @@ def global_cumulative(
                 run["_cnt"],
                 *[v for o in sums for v in (run[f"_s_{o}"], run[f"_n_{o}"])],
                 *(
-                    [per_bucket[i + 1]["_min"] if i + 1 < len(per_bucket) else None]
+                    [float(per_bucket[i + 1]["_min"]) if i + 1 < len(per_bucket) else None]
                     if lead_col
                     else []
                 ),

@@ -2,12 +2,11 @@
 whose verdict is emitted ONCE, when the watermark passes the window end —
 never per micro-batch fragment.
 
-stream_cat_drift / stream_health score each micro-batch's fragment of a
-window independently (documented caveat in streaming/validate.py): a window
-straddling two batches gets two partial verdicts that never reconcile. The
-reference's detector only votes when a window CLOSES (gan.py:737-757 — it
-never emits on a partial window). These operators reproduce that contract
-with applyInPandasWithState + EventTimeTimeout:
+Scoring each micro-batch's fragment of a window independently would give a
+window straddling two batches two partial verdicts that never reconcile.
+The reference's detector only votes when a window CLOSES (gan.py:737-757 —
+it never emits on a partial window). These operators reproduce that
+contract with applyInPandasWithState + EventTimeTimeout:
 
 - group key = the event-time window (start, end) of ts_col — tumbling by
   default, SLIDING when `slide` is given (each overlapping window instance
@@ -31,13 +30,12 @@ with applyInPandasWithState + EventTimeTimeout:
   micro-batches therefore yields ONE verdict, byte-equal to the batch
   operator on the same rows (parity pinned in tests/test_closed_windows.py).
 
-ARCHITECTURE (round 7 — VERDICT r6 Next #1): each family is a `ClosedSpec`
-— (JVM input projection, per-chunk reduce, partial→state fold, window-close
-verdict) — defined ONCE and executed by two runners that share every line
-of family logic:
+ARCHITECTURE (VERDICT r6 Next #1): each family is a `ClosedSpec` — (JVM
+input projection, per-chunk reduce, partial→state fold, window-close
+verdict) — built by its `*_spec` function, which documents the family's
+parity and state-bound contract. ONE stateful runner executes every
+spec:
 
-- the per-family builders (`closed_cat_drift`, ...) run one spec per query
-  (the share-nothing mode: each sink resumes from its own checkpoint);
 - `closed_multi(specs)` runs ANY number of specs in ONE streaming query
   over ONE source scan: a single projection mints every spec's input
   columns, a single mapInPandas pre-reducer emits `_check`-tagged generic
@@ -47,8 +45,14 @@ of family logic:
   one trigger sequence instead of N (VERDICT r6 "What's wrong" #3: the
   reference scores ALL features in one window pass, gan.py:730-735).
   Outputs are generic long-format rows; `split_closed` projects a check's
-  rows back to the family's exact per-query schema — parity with the
-  per-family sinks is pinned row-for-row in tests/test_closed_combined.py.
+  rows back to the family's own schema;
+- `closed(stream_df, ts_col, spec)` is the one-family form —
+  `split_closed(closed_multi(..., [spec]), spec)` — used by the
+  share-nothing driver mode (one query and checkpoint per family) and the
+  per-family parity tests. Combined and one-family sinks are therefore the
+  same code; their row-for-row equality is pinned in
+  tests/test_closed_combined.py and each family's sink schema in
+  tests/test_plans.py.
 
 Partials and state ride GENERIC mergeable slots (`_n` + long/double/
 double-array vectors) so the combined state store has one schema; every
@@ -103,16 +107,6 @@ from al_drift_detection_spark.kernels import (
     subsample,
 )
 
-CAT_OUT_SCHEMA = (
-    "window_start timestamp, window_end timestamp, n long, chi2_stat double, "
-    "dof long, p_value double, verdict string"
-)
-
-HEALTH_OUT_SCHEMA = (
-    "window_start timestamp, window_end timestamp, check string, column string, "
-    "n_rows long, metric double, ref double, verdict string"
-)
-
 # generic mergeable slots shared by every family: a count plus one vector of
 # each payload shape. Unused slots ride as empty arrays (a few bytes per
 # partial row / state entry).
@@ -137,8 +131,7 @@ GEN_OUT_COLUMNS = [
 
 @dataclass(frozen=True)
 class ClosedSpec:
-    """One closed-window verdict family, factored so the per-family builder
-    and the single-scan `closed_multi` run the SAME reduce/fold/close code
+    """One closed-window verdict family as the pieces `closed_multi` runs
     (module docstring). All callables are driver-built pure closures over
     the family's fixed reference config."""
 
@@ -151,8 +144,6 @@ class ClosedSpec:
     fold: Callable[[tuple, pd.DataFrame], tuple]
     # (generic state tuple, w_start, w_end) -> family out rows (may be [])
     close: Callable[[tuple, object, object], list]
-    out_schema: str                # family per-query output schema
-    out_columns: list              # family per-query output column names
     # family row (incl. leading w_start, w_end) -> (s1,s2,l1,l2,d1..d4,verdict)
     to_generic: Callable[[tuple], tuple]
     # ordered (generic col, family col, cast|None) for split_closed
@@ -185,11 +176,7 @@ def _windowed(stream_df: DataFrame, ts_col: str, window: str, slide: str | None 
 def _project(win: DataFrame, ts_col: str, specs: list[ClosedSpec]) -> DataFrame:
     """ONE projection minting every spec's JVM input columns, namespaced
     `{spec}__{local}` so families can't collide on local names."""
-    seen = set()
     for s in specs:
-        if s.name in seen:
-            raise ValueError(f"duplicate spec name {s.name!r}")
-        seen.add(s.name)
         if s.prepare is not None:
             win = s.prepare(win)
     exprs = [
@@ -250,41 +237,6 @@ def _arm_timeout(state: GroupState, w_end) -> None:
     )
 
 
-def _spec_fn(spec: ClosedSpec):
-    """Per-family stateful close: key = (window start, end). Captures only
-    the spec's picklable callables, never the spec itself (its `cols` hold
-    JVM Column refs)."""
-    init, fold, close, out_columns = spec.init, spec.fold, spec.close, spec.out_columns
-
-    def fn(key, pdfs, state: GroupState):
-        w_start, w_end = key[0], key[1]
-        if state.hasTimedOut:
-            rows = close(tuple(state.get), w_start, w_end)
-            state.remove()
-            if rows:
-                yield pd.DataFrame(rows, columns=out_columns)
-            return
-        st = tuple(state.get) if state.exists else init()
-        for pdf in pdfs:
-            st = fold(st, pdf)
-        state.update(tuple(st))
-        _arm_timeout(state, w_end)
-        return
-        yield  # pragma: no cover — generator form
-
-    return fn
-
-
-def _run_spec(stream_df: DataFrame, ts_col: str, spec: ClosedSpec,
-              window: str, watermark: str, slide: str | None) -> DataFrame:
-    win = _windowed(stream_df, ts_col, window, slide)
-    reduced = _pre_reduce(_project(win, ts_col, [spec]), [spec], watermark)
-    return reduced.drop("_check").groupBy("_w_start", "_w_end").applyInPandasWithState(
-        _spec_fn(spec), spec.out_schema, GEN_STATE_SCHEMA, "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-
-
 def closed_multi(
     stream_df: DataFrame,
     ts_col: str,
@@ -299,8 +251,8 @@ def closed_multi(
     `_check`, one stateful dispatcher keyed by (_check, window) whose state
     entry and close verdict belong to exactly one spec — per-(check, window)
     timeouts fire independently, so each family's emission times match its
-    share-nothing query. Output is the generic long format (GEN_OUT_SCHEMA);
-    `split_closed` recovers each family's exact per-query frame."""
+    one-family query (`closed`). Output is the generic long format
+    (GEN_OUT_SCHEMA); `split_closed` recovers each family's own frame."""
     if len({s.name for s in specs}) != len(specs):
         raise ValueError("spec names must be unique")
     # capture only picklable pieces — the specs' `cols` hold JVM Column refs
@@ -336,14 +288,30 @@ def closed_multi(
 
 def split_closed(generic_df: DataFrame, spec: ClosedSpec) -> DataFrame:
     """Project one check's rows out of a closed_multi (generic) frame back
-    to the family's exact per-query schema — the inverse of
-    spec.to_generic, so combined and share-nothing sinks are row-identical
-    (tests/test_closed_combined.py)."""
+    to the family's own schema — the inverse of spec.to_generic; the
+    schema each family's sink gets is pinned in tests/test_plans.py."""
     cols = [F.col("window_start"), F.col("window_end")]
     for gen, out, cast in spec.split_fields:
         c = F.col(gen)
         cols.append((c.cast(cast) if cast else c).alias(out))
     return generic_df.filter(F.col("check") == spec.name).select(*cols)
+
+
+def closed(
+    stream_df: DataFrame,
+    ts_col: str,
+    spec: ClosedSpec,
+    window: str = "5 minutes",
+    watermark: str = "10 minutes",
+    slide: str | None = None,
+) -> DataFrame:
+    """One closed-window family as its own streaming frame: the family's
+    verdict rows, one set per closed window, in the family's own schema
+    (the `*_spec` builder documents its contract). `slide` < `window`
+    makes the windows sliding (_windowed)."""
+    return split_closed(
+        closed_multi(stream_df, ts_col, [spec], window, watermark, slide), spec
+    )
 
 
 def dedupe_verdicts(df: DataFrame, key_cols: list[str] | None = None) -> DataFrame:
@@ -385,7 +353,7 @@ def dedupe_verdicts(df: DataFrame, key_cols: list[str] | None = None) -> DataFra
 
 
 # ---------------------------------------------------------------------------
-# family specs + per-query builders
+# family specs
 # ---------------------------------------------------------------------------
 
 
@@ -396,6 +364,13 @@ def cat_drift_spec(
     eps: float = 1e-6,
     name: str = "cat_drift",
 ) -> ClosedSpec:
+    """Closed-window chi-square categorical drift: the streaming twin of
+    drift.categorical_drift with window-close emission. Same deterministic
+    universe (ref_props keys + '(other)' catch-all, NULL → '(null)'), same
+    normalization and statistic; one output row per closed window. Raw rows
+    are pre-reduced to per-chunk count vectors before the stateful shuffle
+    (module docstring) — only O(chunks × |universe|) longs reach the state
+    task per trigger."""
     if not ref_props:
         raise ValueError("ref_props is empty — no reference distribution to test against")
     if "(other)" in ref_props:
@@ -438,37 +413,12 @@ def cat_drift_spec(
         init=lambda: (0, [0] * k, [], [], []),
         fold=fold,
         close=close,
-        out_schema=CAT_OUT_SCHEMA,
-        out_columns=["window_start", "window_end", "n", "chi2_stat",
-                     "dof", "p_value", "verdict"],
         to_generic=lambda r: (None, None, int(r[2]), int(r[4]),
                               float(r[3]), float(r[5]), None, None, r[6]),
         split_fields=[("l1", "n", "long"), ("d1", "chi2_stat", None),
                       ("l2", "dof", "long"), ("d2", "p_value", None),
                       ("verdict", "verdict", None)],
     )
-
-
-def closed_cat_drift(
-    stream_df: DataFrame,
-    ts_col: str,
-    cat_col: str,
-    ref_props: dict[str, float],
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    slide: str | None = None,
-    alpha: float = 0.01,
-    eps: float = 1e-6,
-) -> DataFrame:
-    """Closed-window chi-square categorical drift: the streaming twin of
-    drift.categorical_drift with window-close emission. Same deterministic
-    universe (ref_props keys + '(other)' catch-all, NULL → '(null)'), same
-    normalization and statistic; one output row per closed window. Raw rows
-    are pre-reduced to per-chunk count vectors before the stateful shuffle
-    (module docstring) — only O(chunks × |universe|) longs reach the state
-    task per trigger."""
-    spec = cat_drift_spec(cat_col, ref_props, alpha, eps)
-    return _run_spec(stream_df, ts_col, spec, window, watermark, slide)
 
 
 def window_health_spec(
@@ -479,6 +429,13 @@ def window_health_spec(
     threshold: float = 0.05,
     name: str = "health",
 ) -> ClosedSpec:
+    """Closed-window volume + completeness verdicts: the streaming twin of
+    health.volume_anomaly / completeness_drift (fixed references — the
+    deterministic-reference rule) with window-close emission. Output is
+    long-format: one 'volume' row plus one 'completeness' row per tracked
+    column per closed window, values rounded exactly like the batch ops.
+    Raw rows pre-reduce to per-chunk (n, null-count) partials before the
+    stateful shuffle (module docstring)."""
     if not ref_volume > 0:
         raise ValueError(
             f"ref_volume must be positive, got {ref_volume} — a zero "
@@ -519,45 +476,12 @@ def window_health_spec(
         init=lambda: (0, [0] * len(cols), [], [], []),
         fold=fold,
         close=close,
-        out_schema=HEALTH_OUT_SCHEMA,
-        out_columns=["window_start", "window_end", "check", "column",
-                     "n_rows", "metric", "ref", "verdict"],
         to_generic=lambda r: (r[2], r[3], int(r[4]), None,
                               float(r[5]), float(r[6]), None, None, r[7]),
         split_fields=[("s1", "check", None), ("s2", "column", None),
                       ("l1", "n_rows", "long"), ("d1", "metric", None),
                       ("d2", "ref", None), ("verdict", "verdict", None)],
     )
-
-
-def closed_window_health(
-    stream_df: DataFrame,
-    ts_col: str,
-    ref_volume: float,
-    ref_null_ratios: dict[str, float],
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    slide: str | None = None,
-    low: float = 0.5,
-    high: float = 2.0,
-    threshold: float = 0.05,
-) -> DataFrame:
-    """Closed-window volume + completeness verdicts: the streaming twin of
-    health.volume_anomaly / completeness_drift (fixed references — the
-    deterministic-reference rule) with window-close emission. Output is
-    long-format: one 'volume' row plus one 'completeness' row per tracked
-    column per closed window, values rounded exactly like the batch ops.
-    Raw rows pre-reduce to per-chunk (n, null-count) partials before the
-    stateful shuffle (module docstring)."""
-    spec = window_health_spec(ref_volume, ref_null_ratios, low, high, threshold)
-    return _run_spec(stream_df, ts_col, spec, window, watermark, slide)
-
-
-DRIFT_OUT_SCHEMA = (
-    "window_start timestamp, window_end timestamp, n_rows long, column string, "
-    "kernel string, statistic double, p_value double, threshold double, "
-    "verdict string"
-)
 
 
 def drift_scores_spec(
@@ -572,6 +496,33 @@ def drift_scores_spec(
     name: str = "drift",
     **adv_thresholds: float,
 ) -> ClosedSpec:
+    """Closed-window KS/PSI/MMD drift: the streaming twin of
+    drift.drift_scores with window-close emission — the core north_star
+    kernel trio, scored once per event-time window against the broadcast
+    reference when the watermark passes the window end (the reference's
+    window-close vote, gan.py:737-757: it never votes on a partial window).
+
+    extra_kernels: the SAME opt-in advisory set as drift_scores
+    ({"wasserstein", "js", "cvm", "ad"}), computed at window close from the
+    same bounded state sample through the SHARED drift._advisory_rows
+    implementation — batch and streaming advisory rows cannot diverge;
+    advisory rows never join the 2-of-3 vote. Thresholds override via
+    wasserstein_threshold / js_threshold / cvm_threshold / ad_threshold
+    kwargs (drift_scores' defaults otherwise).
+
+    Raw rows pre-reduce per chunk to (count, ≤2·max_n-value bounded sample)
+    partials before the stateful shuffle (module docstring); the state task
+    merges samples under the same 2·max_n cap, above which the merged
+    sorted sample collapses to its even-stride grid (the stateful_drift.py
+    precedent) — the kernels subsample to max_n per side anyway, so the
+    collapse costs no detection power. Windows that fit under the cap score
+    on their exact row multiset, so their verdicts equal drift_scores on
+    the same rows (split-window parity pinned in
+    tests/test_closed_windows.py); n_rows always reports the window's TRUE
+    size. Output: one row per (window, column, kernel) + the per-column
+    2-of-3 majority 'vote' row, exactly drift_scores' contract keyed by
+    window bounds.
+    """
     from al_drift_detection_spark.drift import (
         _AD_DEFAULT_THRESHOLD,
         _ADVISORY_KERNELS,
@@ -657,9 +608,6 @@ def drift_scores_spec(
         init=lambda: (0, [], [], [[] for _ in vcols], vcols),
         fold=fold,
         close=close,
-        out_schema=DRIFT_OUT_SCHEMA,
-        out_columns=["window_start", "window_end", "n_rows", "column",
-                     "kernel", "statistic", "p_value", "threshold", "verdict"],
         to_generic=lambda r: (
             r[3], r[4], int(r[2]), None,
             None if r[5] is None else float(r[5]),
@@ -673,62 +621,6 @@ def drift_scores_spec(
     )
 
 
-def closed_drift_scores(
-    stream_df: DataFrame,
-    ts_col: str,
-    value_cols: list[str],
-    ref_samples: dict,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    slide: str | None = None,
-    ks_alpha: float = 0.01,
-    psi_threshold: float = 0.25,
-    mmd_threshold: float = 0.05,
-    max_n: int = 2048,
-    mmd_max_n: int = 512,
-    extra_kernels: tuple[str, ...] = (),
-    **adv_thresholds: float,
-) -> DataFrame:
-    """Closed-window KS/PSI/MMD drift: the streaming twin of
-    drift.drift_scores with window-close emission — the core north_star
-    kernel trio, scored once per event-time window against the broadcast
-    reference when the watermark passes the window end (the reference's
-    window-close vote, gan.py:737-757: it never votes on a partial window).
-
-    extra_kernels: the SAME opt-in advisory set as drift_scores
-    ({"wasserstein", "js", "cvm", "ad"}), computed at window close from the
-    same bounded state sample through the SHARED drift._advisory_rows
-    implementation — batch and streaming advisory rows cannot diverge;
-    advisory rows never join the 2-of-3 vote. Thresholds override via
-    wasserstein_threshold / js_threshold / cvm_threshold / ad_threshold
-    kwargs (drift_scores' defaults otherwise).
-
-    Raw rows pre-reduce per chunk to (count, ≤2·max_n-value bounded sample)
-    partials before the stateful shuffle (module docstring); the state task
-    merges samples under the same 2·max_n cap, above which the merged
-    sorted sample collapses to its even-stride grid (the stateful_drift.py
-    precedent) — the kernels subsample to max_n per side anyway, so the
-    collapse costs no detection power. Windows that fit under the cap score
-    on their exact row multiset, so their verdicts equal drift_scores on
-    the same rows (split-window parity pinned in
-    tests/test_closed_windows.py); n_rows always reports the window's TRUE
-    size. Output: one row per (window, column, kernel) + the per-column
-    2-of-3 majority 'vote' row, exactly drift_scores' contract keyed by
-    window bounds.
-    """
-    spec = drift_scores_spec(
-        value_cols, ref_samples, ks_alpha, psi_threshold, mmd_threshold,
-        max_n, mmd_max_n, extra_kernels, **adv_thresholds,
-    )
-    return _run_spec(stream_df, ts_col, spec, window, watermark, slide)
-
-
-UNIQ_OUT_SCHEMA = (
-    "window_start timestamp, window_end timestamp, n_rows long, "
-    "n_distinct long, ratio double, ref_ratio double, verdict string"
-)
-
-
 def window_uniqueness_spec(
     key_col: str,
     ref_ratio: float,
@@ -736,12 +628,35 @@ def window_uniqueness_spec(
     k: int = 4096,
     name: str = "uniqueness",
 ) -> ClosedSpec:
+    """Closed-window UNIQUENESS (distinct-ratio duplicate-surge alarm): the
+    streaming twin of health.uniqueness_drift with window-close emission,
+    completing the closed family (volume / completeness / cat-drift /
+    KS-PSI-MMD / uniqueness).
+
+    State per window is a K-MINIMUM-VALUES sketch — the k smallest
+    normalized key hashes — which is MERGEABLE across fragments (union,
+    keep k smallest) and bounded at k doubles no matter how many rows
+    streamed by (HLL would also merge, but KMV keeps the under-k case
+    EXACT: a window with fewer than k distinct keys reports its exact
+    distinct count, so small-window verdicts equal uniqueness_drift's
+    approx=False form; over-k windows use the standard (k−1)/m_k estimator,
+    relative error ≈ 1/√(k−2) ≈ 1.6% at the default k). The key hash is
+    computed JVM-side (xxhash64 → uniform [0,1)) so only (ts, hash) columns
+    reach Python — the key bytes themselves never do; each chunk pre-merges
+    its hashes to a ≤k KMV partial before the stateful shuffle (module
+    docstring), so only O(chunks × k) doubles reach the state task per
+    trigger. The threshold-vs-sketch-noise rule mirrors uniqueness_drift:
+    threshold must clear 3/√(k−2).
+
+    Output mirrors uniqueness_drift: fail iff ref_ratio − ratio > threshold
+    (one-sided — uniqueness DROPPING).
+    """
     if not 0.0 < ref_ratio <= 1.0:
         raise ValueError(f"ref_ratio must be in (0, 1], got {ref_ratio}")
     rel_err = 1.0 / max(k - 2, 1) ** 0.5
     if threshold < 3.0 * rel_err:
         raise ValueError(
-            f"closed_window_uniqueness: threshold {threshold} is inside the "
+            f"window_uniqueness_spec: threshold {threshold} is inside the "
             f"KMV noise band (k={k} → rel err ≈ {rel_err:.4f}; need "
             f"threshold ≥ {3.0 * rel_err:.4f}); raise k or the threshold"
         )
@@ -791,59 +706,12 @@ def window_uniqueness_spec(
         init=lambda: (0, [], [], [], []),
         fold=fold,
         close=close,
-        out_schema=UNIQ_OUT_SCHEMA,
-        out_columns=["window_start", "window_end", "n_rows", "n_distinct",
-                     "ratio", "ref_ratio", "verdict"],
         to_generic=lambda r: (None, None, int(r[2]), int(r[3]),
                               float(r[4]), float(r[5]), None, None, r[6]),
         split_fields=[("l1", "n_rows", "long"), ("l2", "n_distinct", "long"),
                       ("d1", "ratio", None), ("d2", "ref_ratio", None),
                       ("verdict", "verdict", None)],
     )
-
-
-def closed_window_uniqueness(
-    stream_df: DataFrame,
-    ts_col: str,
-    key_col: str,
-    ref_ratio: float,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    slide: str | None = None,
-    threshold: float = 0.05,
-    k: int = 4096,
-) -> DataFrame:
-    """Closed-window UNIQUENESS (distinct-ratio duplicate-surge alarm): the
-    streaming twin of health.uniqueness_drift with window-close emission,
-    completing the closed family (volume / completeness / cat-drift /
-    KS-PSI-MMD / uniqueness).
-
-    State per window is a K-MINIMUM-VALUES sketch — the k smallest
-    normalized key hashes — which is MERGEABLE across fragments (union,
-    keep k smallest) and bounded at k doubles no matter how many rows
-    streamed by (HLL would also merge, but KMV keeps the under-k case
-    EXACT: a window with fewer than k distinct keys reports its exact
-    distinct count, so small-window verdicts equal uniqueness_drift's
-    approx=False form; over-k windows use the standard (k−1)/m_k estimator,
-    relative error ≈ 1/√(k−2) ≈ 1.6% at the default k). The key hash is
-    computed JVM-side (xxhash64 → uniform [0,1)) so only (ts, hash) columns
-    reach Python — the key bytes themselves never do; each chunk pre-merges
-    its hashes to a ≤k KMV partial before the stateful shuffle (module
-    docstring), so only O(chunks × k) doubles reach the state task per
-    trigger. The threshold-vs-sketch-noise rule mirrors uniqueness_drift:
-    threshold must clear 3/√(k−2).
-
-    Output mirrors uniqueness_drift: fail iff ref_ratio − ratio > threshold
-    (one-sided — uniqueness DROPPING).
-    """
-    spec = window_uniqueness_spec(key_col, ref_ratio, threshold, k)
-    return _run_spec(stream_df, ts_col, spec, window, watermark, slide)
-
-
-QUANT_OUT_SCHEMA = (
-    "window_start timestamp, window_end timestamp, q double, "
-    "quantile double, n_total long"
-)
 
 
 def window_quantiles_spec(
@@ -854,6 +722,17 @@ def window_quantiles_spec(
     n_bins: int = 256,
     name: str = "quantiles",
 ) -> ClosedSpec:
+    """Closed-window quantiles over the mergeable fixed-grid histogram — the
+    streaming twin of functions/histograms (same grid semantics: bin −1
+    underflow / n_bins overflow / least-clamped interior; same interpolation
+    formula; NULLs excluded), emitted once per window at watermark close.
+
+    Scale shape: raw rows pre-reduce to ONE dense count vector per
+    (window × Arrow chunk) in the distributed mapInPandas combine (module
+    docstring), so only O(chunks × n_bins) longs reach the state task per
+    trigger; state is a single length-(n_bins+2) vector per open window —
+    bounded input AND bounded state. Batch ≡ streaming parity pinned in
+    tests/test_closed_windows.py."""
     if not (hi > lo) or n_bins < 1:
         raise ValueError(f"need hi > lo and n_bins >= 1, got [{lo}, {hi}] × {n_bins}")
     b = int(n_bins)
@@ -909,46 +788,11 @@ def window_quantiles_spec(
         init=lambda: (0, [0] * (b + 2), [], [], []),
         fold=fold,
         close=close,
-        out_schema=QUANT_OUT_SCHEMA,
-        out_columns=["window_start", "window_end", "q", "quantile", "n_total"],
         to_generic=lambda r: (None, None, int(r[4]), None,
                               float(r[2]), float(r[3]), None, None, None),
         split_fields=[("d1", "q", None), ("d2", "quantile", None),
                       ("l1", "n_total", "long")],
     )
-
-
-def closed_window_quantiles(
-    stream_df: DataFrame,
-    ts_col: str,
-    col: str,
-    lo: float,
-    hi: float,
-    qs: list[float],
-    n_bins: int = 256,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    slide: str | None = None,
-) -> DataFrame:
-    """Closed-window quantiles over the mergeable fixed-grid histogram — the
-    streaming twin of functions/histograms (same grid semantics: bin −1
-    underflow / n_bins overflow / least-clamped interior; same interpolation
-    formula; NULLs excluded), emitted once per window at watermark close.
-
-    Scale shape: raw rows pre-reduce to ONE dense count vector per
-    (window × Arrow chunk) in the distributed mapInPandas combine (module
-    docstring), so only O(chunks × n_bins) longs reach the state task per
-    trigger; state is a single length-(n_bins+2) vector per open window —
-    bounded input AND bounded state. Batch ≡ streaming parity pinned in
-    tests/test_closed_windows.py."""
-    spec = window_quantiles_spec(col, lo, hi, qs, n_bins)
-    return _run_spec(stream_df, ts_col, spec, window, watermark, slide)
-
-
-ASSOC_OUT_SCHEMA = (
-    "window_start timestamp, window_end timestamp, n long, mi double, "
-    "ref_mi double, abs_diff double, cramers_v double, verdict string"
-)
 
 
 def association_drift_spec(
@@ -960,6 +804,27 @@ def association_drift_spec(
     max_abs_diff: float = 0.1,
     name: str = "association",
 ) -> ClosedSpec:
+    """Closed-window ASSOCIATION drift: the streaming twin of
+    health.association_drift with window-close emission — each closed
+    window's mutual information between two categorical columns vs the
+    reference MI the caller computed from the reference windows' summed
+    joint counts (health.categorical_association / association_drift's
+    eager fold; joint contingencies merge losslessly, so batch and stream
+    share one reference number).
+
+    Same deterministic universes as the batch operator (cats + '(other)'
+    catch-all, NULL → '(null)' coalesced with the SAME Spark expressions so
+    non-string categoricals bucket identically). State per window is ONE
+    flattened (|cats_a|+1)·(|cats_b|+1) long matrix — bounded by the fixed
+    universes regardless of data cardinality — and raw rows are pre-reduced
+    to per-chunk joint-count matrices before the stateful shuffle (module
+    docstring), so only O(chunks × grid) longs reach the state task per
+    trigger. At watermark close the matrix folds to (n, mi, cramers_v)
+    with exactly the batch operator's conventions: zero cells contribute 0
+    to MI, chi² runs over the observed-marginal grid, V is NULL when the
+    window saw a single category on either side. Oracle/parity:
+    tests/test_closed_windows.py splits a window across micro-batches and
+    matches health.association_drift on the full row set."""
     if "(other)" in cats_a or "(other)" in cats_b:
         raise ValueError('"(other)" is the reserved catch-all bucket name')
     ua = [str(c) for c in cats_a] + ["(other)"]
@@ -1013,9 +878,6 @@ def association_drift_spec(
         init=lambda: (0, [0] * (ka * kb), [], [], []),
         fold=fold,
         close=close,
-        out_schema=ASSOC_OUT_SCHEMA,
-        out_columns=["window_start", "window_end", "n", "mi", "ref_mi",
-                     "abs_diff", "cramers_v", "verdict"],
         to_generic=lambda r: (
             None, None, int(r[2]), None, float(r[3]), float(r[4]),
             float(r[5]), None if r[6] is None else float(r[6]), r[7],
@@ -1026,50 +888,6 @@ def association_drift_spec(
     )
 
 
-def closed_association_drift(
-    stream_df: DataFrame,
-    ts_col: str,
-    col_a: str,
-    col_b: str,
-    cats_a: list[str],
-    cats_b: list[str],
-    ref_mi: float,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    slide: str | None = None,
-    max_abs_diff: float = 0.1,
-) -> DataFrame:
-    """Closed-window ASSOCIATION drift: the streaming twin of
-    health.association_drift with window-close emission — each closed
-    window's mutual information between two categorical columns vs the
-    reference MI the caller computed from the reference windows' summed
-    joint counts (health.categorical_association / association_drift's
-    eager fold; joint contingencies merge losslessly, so batch and stream
-    share one reference number).
-
-    Same deterministic universes as the batch operator (cats + '(other)'
-    catch-all, NULL → '(null)' coalesced with the SAME Spark expressions so
-    non-string categoricals bucket identically). State per window is ONE
-    flattened (|cats_a|+1)·(|cats_b|+1) long matrix — bounded by the fixed
-    universes regardless of data cardinality — and raw rows are pre-reduced
-    to per-chunk joint-count matrices before the stateful shuffle (module
-    docstring), so only O(chunks × grid) longs reach the state task per
-    trigger. At watermark close the matrix folds to (n, mi, cramers_v)
-    with exactly the batch operator's conventions: zero cells contribute 0
-    to MI, chi² runs over the observed-marginal grid, V is NULL when the
-    window saw a single category on either side. Oracle/parity:
-    tests/test_closed_windows.py splits a window across micro-batches and
-    matches health.association_drift on the full row set."""
-    spec = association_drift_spec(col_a, col_b, cats_a, cats_b, ref_mi, max_abs_diff)
-    return _run_spec(stream_df, ts_col, spec, window, watermark, slide)
-
-
-REF_OUT_SCHEMA = (
-    "window_start timestamp, window_end timestamp, n long, orphans long, "
-    "rate double, ref_rate double, verdict string"
-)
-
-
 def referential_drift_spec(
     key_col: str,
     dim_keys: DataFrame,
@@ -1077,6 +895,22 @@ def referential_drift_spec(
     max_abs_jump: float = 0.05,
     name: str = "referential",
 ) -> ClosedSpec:
+    """Closed-window REFERENTIAL-integrity drift: the streaming twin of
+    health.referential_drift with window-close emission — each closed
+    window's orphan rate (fact keys absent from the dimension) vs the
+    reference rate the caller computed from the reference windows
+    (health.referential_drift's eager fold; orphan counts merge
+    losslessly, so batch and stream share one reference number).
+
+    The orphan flag is minted by a STREAM-STATIC left join against the
+    dimension's one-column distinct-key frame BEFORE the pre-reducer —
+    Catalyst broadcasts the static side, so flagging happens where the
+    stream rows already sit and only per-chunk (n, orphans) partials reach
+    the stateful task (state per window is two longs). NULL fact keys are
+    excluded by the same FK rule as the batch operator. Verdict is
+    one-sided: 'fail' iff rate − ref_rate > max_abs_jump. Parity:
+    tests/test_closed_windows.py splits a window across micro-batches and
+    matches health.referential_drift on the full row set."""
     keys = F.broadcast(
         dim_keys.select(F.col(dim_keys.columns[0]).alias("_dk")).distinct()
     )
@@ -1101,9 +935,8 @@ def referential_drift_spec(
     def close(st, w_start, w_end):
         n, orphans = int(st[0]), int(st[1][0])
         if n == 0:
-            # a window whose every fact key was NULL: the share-nothing
-            # builder never materialized such a window (its rows were
-            # filtered pre-window) — emit nothing, not a vacuous pass
+            # a window whose every fact key was NULL has no scored rows
+            # under the batch FK rule — emit nothing, not a vacuous pass
             return []
         rate = orphans / n
         return [(w_start, w_end, n, orphans, rate, float(ref_rate),
@@ -1118,9 +951,6 @@ def referential_drift_spec(
         init=lambda: (0, [0], [], [], []),
         fold=fold,
         close=close,
-        out_schema=REF_OUT_SCHEMA,
-        out_columns=["window_start", "window_end", "n", "orphans",
-                     "rate", "ref_rate", "verdict"],
         to_generic=lambda r: (None, None, int(r[2]), int(r[3]),
                               float(r[4]), float(r[5]), None, None, r[6]),
         split_fields=[("l1", "n", "long"), ("l2", "orphans", "long"),
@@ -1128,43 +958,6 @@ def referential_drift_spec(
                       ("verdict", "verdict", None)],
         prepare=prepare,
     )
-
-
-def closed_referential_drift(
-    stream_df: DataFrame,
-    ts_col: str,
-    key_col: str,
-    dim_keys: DataFrame,
-    ref_rate: float,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    slide: str | None = None,
-    max_abs_jump: float = 0.05,
-) -> DataFrame:
-    """Closed-window REFERENTIAL-integrity drift: the streaming twin of
-    health.referential_drift with window-close emission — each closed
-    window's orphan rate (fact keys absent from the dimension) vs the
-    reference rate the caller computed from the reference windows
-    (health.referential_drift's eager fold; orphan counts merge
-    losslessly, so batch and stream share one reference number).
-
-    The orphan flag is minted by a STREAM-STATIC left join against the
-    dimension's one-column distinct-key frame BEFORE the pre-reducer —
-    Catalyst broadcasts the static side, so flagging happens where the
-    stream rows already sit and only per-chunk (n, orphans) partials reach
-    the stateful task (state per window is two longs). NULL fact keys are
-    excluded by the same FK rule as the batch operator. Verdict is
-    one-sided: 'fail' iff rate − ref_rate > max_abs_jump. Parity:
-    tests/test_closed_windows.py splits a window across micro-batches and
-    matches health.referential_drift on the full row set."""
-    spec = referential_drift_spec(key_col, dim_keys, ref_rate, max_abs_jump)
-    return _run_spec(stream_df, ts_col, spec, window, watermark, slide)
-
-
-FREQ_OUT_SCHEMA = (
-    "window_start timestamp, window_end timestamp, item string, est long, "
-    "rank int, n_rows long"
-)
 
 
 def frequent_items_spec(
@@ -1226,9 +1019,6 @@ def frequent_items_spec(
         init=lambda: (0, [], [], [], []),
         fold=fold,
         close=close,
-        out_schema=FREQ_OUT_SCHEMA,
-        out_columns=["window_start", "window_end", "item", "est",
-                     "rank", "n_rows"],
         to_generic=lambda r: (r[2], None, int(r[3]), int(r[4]),
                               float(r[5]), None, None, None, None),
         split_fields=[("s1", "item", None), ("l1", "est", "long"),
@@ -1236,25 +1026,6 @@ def frequent_items_spec(
     )
 
 
-def closed_frequent_items(
-    stream_df: DataFrame,
-    ts_col: str,
-    col: str,
-    k: int = 16,
-    top: int = 5,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    slide: str | None = None,
-) -> DataFrame:
-    """Per-query builder for frequent_items_spec (docstring there)."""
-    spec = frequent_items_spec(col, k=k, top=top)
-    return _run_spec(stream_df, ts_col, spec, window, watermark, slide)
-
-
-SLICED_OUT_SCHEMA = (
-    "window_start timestamp, window_end timestamp, slice string, "
-    "n_cur long, psi double, rank int, verdict string"
-)
 _SL_SEP = "\x1f"  # unit separator — cannot occur in a coalesced slice name
 
 
@@ -1355,9 +1126,6 @@ def sliced_drift_spec(
         init=lambda: (0, [], [], [], []),
         fold=fold,
         close=close,
-        out_schema=SLICED_OUT_SCHEMA,
-        out_columns=["window_start", "window_end", "slice", "n_cur", "psi",
-                     "rank", "verdict"],
         to_generic=lambda r: (r[2], None, int(r[3]), int(r[5]),
                               None if r[4] is None else float(r[4]),
                               None, None, None, r[6]),
@@ -1365,34 +1133,6 @@ def sliced_drift_spec(
                       ("d1", "psi", None), ("l2", "rank", "int"),
                       ("verdict", "verdict", None)],
     )
-
-
-def closed_sliced_drift(
-    stream_df: DataFrame,
-    ts_col: str,
-    value_col: str,
-    slice_col: str,
-    ref: dict,
-    eps: float = 1e-4,
-    threshold: float = 0.2,
-    min_rows: int = 50,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    slide: str | None = None,
-) -> DataFrame:
-    """Per-query builder for sliced_drift_spec (docstring there)."""
-    spec = sliced_drift_spec(
-        value_col, slice_col, ref, eps=eps, threshold=threshold,
-        min_rows=min_rows,
-    )
-    return _run_spec(stream_df, ts_col, spec, window, watermark, slide)
-
-
-COND_COMPLETENESS_OUT_SCHEMA = (
-    "window_start timestamp, window_end timestamp, category string, "
-    "n_cur long, null_ratio double, ref_ratio double, delta double, "
-    "verdict string"
-)
 
 
 def conditional_completeness_spec(
@@ -1470,9 +1210,6 @@ def conditional_completeness_spec(
         init=lambda: (0, [], [], [], []),
         fold=fold,
         close=close,
-        out_schema=COND_COMPLETENESS_OUT_SCHEMA,
-        out_columns=["window_start", "window_end", "category", "n_cur",
-                     "null_ratio", "ref_ratio", "delta", "verdict"],
         to_generic=lambda r: (r[2], None, int(r[3]), None,
                               None if r[4] is None else float(r[4]),
                               float(r[5]),
@@ -1482,33 +1219,6 @@ def conditional_completeness_spec(
                       ("d1", "null_ratio", None), ("d2", "ref_ratio", None),
                       ("d3", "delta", None), ("verdict", "verdict", None)],
     )
-
-
-def closed_conditional_completeness(
-    stream_df: DataFrame,
-    ts_col: str,
-    cond_col: str,
-    target_col: str,
-    ref: dict,
-    threshold: float = 0.05,
-    min_rows: int = 50,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    slide: str | None = None,
-) -> DataFrame:
-    """Per-query builder for conditional_completeness_spec (docstring
-    there)."""
-    spec = conditional_completeness_spec(
-        cond_col, target_col, ref, threshold=threshold, min_rows=min_rows
-    )
-    return _run_spec(stream_df, ts_col, spec, window, watermark, slide)
-
-
-EMB_OUT_OUT_SCHEMA = (
-    "window_start timestamp, window_end timestamp, n long, "
-    "n_outliers long, rate double, threshold double, "
-    "expected_rate double, verdict string"
-)
 
 
 def embedding_outliers_spec(
@@ -1570,9 +1280,6 @@ def embedding_outliers_spec(
         init=lambda: (0, [], [], [], []),
         fold=fold,
         close=close,
-        out_schema=EMB_OUT_OUT_SCHEMA,
-        out_columns=["window_start", "window_end", "n", "n_outliers",
-                     "rate", "threshold", "expected_rate", "verdict"],
         to_generic=lambda r: (None, None, int(r[2]), int(r[3]),
                               None if r[4] is None else float(r[4]),
                               float(r[5]), float(r[6]), None, r[7]),
@@ -1582,23 +1289,3 @@ def embedding_outliers_spec(
                       ("verdict", "verdict", None)],
     )
 
-
-def closed_embedding_outliers(
-    stream_df: DataFrame,
-    ts_col: str,
-    vec_col: str,
-    centroids: list,
-    threshold: float,
-    tail: float = 0.05,
-    rate_factor: float = 3.0,
-    min_rows: int = 20,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    slide: str | None = None,
-) -> DataFrame:
-    """Per-query builder for embedding_outliers_spec (docstring there)."""
-    spec = embedding_outliers_spec(
-        vec_col, centroids, threshold, tail=tail, rate_factor=rate_factor,
-        min_rows=min_rows,
-    )
-    return _run_spec(stream_df, ts_col, spec, window, watermark, slide)

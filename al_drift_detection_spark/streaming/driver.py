@@ -31,8 +31,8 @@ Iceberg/file feed and skips it — the query graphs are identical.
 
 Scale shape: staging is one repartition("_b") write (one task per window,
 one file per window — O(windows) renames driver-side, no data through the
-driver); the four verdict streams share the pre-reduced closed-window
-plans whose per-trigger state input is O(chunks) partials, not raw rows
+driver); every verdict stream runs the pre-reduced closed_multi plan
+whose per-trigger state input is O(chunks) partials, not raw rows
 (streaming/closed.py module docstring). References are the same
 deterministic batch references (window_id < ref_windows) the batch pass
 uses — a window's verdict never depends on other windows or on micro-batch
@@ -273,10 +273,11 @@ def _w_bucket_col(w_lo: float, w_hi: float):
 
 def stream_specs(refs: dict, cat_cols: list[str]) -> list:
     """The CLI stream's verdict families as ClosedSpecs — ONE config list
-    shared verbatim by the share-nothing path (run_closed_streams) and the
-    single-scan combined path (run_closed_streams_combined), so the two
-    modes cannot diverge on thresholds, universes, or references. Spec
-    names are the sink directory names."""
+    shared verbatim by the share-nothing path (run_closed_streams: one
+    closed.closed query per spec) and the single-scan combined path
+    (run_closed_streams_combined: every spec in one closed_multi query), so
+    the two modes cannot diverge on thresholds, universes, or references.
+    Spec names are the sink directory names."""
     from al_drift_detection_spark.streaming import closed as C
 
     specs = [
@@ -402,12 +403,14 @@ def run_closed_streams(
 ) -> dict[str, int]:
     """Run the closed-window verdict streams over the staged feed with
     parquet sinks + checkpoints, availableNow-bounded; returns per-table
-    emitted-window row counts. Each query reads the file source
-    independently (share-nothing), so a failed sink resumes from its own
-    checkpoint without touching the others — the streaming analog of the
-    batch checkpoint's per-partition resume. N families therefore cost N
-    corpus scans; run_closed_streams_combined is the single-scan mode."""
-    from al_drift_detection_spark.streaming.closed import _run_spec
+    emitted-window row counts. Each family is its own query
+    (closed.closed — the one-spec form of the same closed_multi runner the
+    combined mode uses) reading the file source independently
+    (share-nothing), so a failed sink resumes from its own checkpoint
+    without touching the others — the streaming analog of the batch
+    checkpoint's per-partition resume. N families therefore cost N corpus
+    scans; run_closed_streams_combined is the single-scan mode."""
+    from al_drift_detection_spark.streaming.closed import closed
 
     window = f"{window_seconds} seconds"
     slide = f"{slide_seconds} seconds" if slide_seconds else None
@@ -422,7 +425,7 @@ def run_closed_streams(
 
     specs = stream_specs(refs, cat_cols)
     outs = {
-        spec.name: _run_spec(src(), "ts", spec, window, watermark, slide)
+        spec.name: closed(src(), "ts", spec, window, watermark, slide)
         for spec in specs
     }
 

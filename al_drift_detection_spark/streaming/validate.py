@@ -13,6 +13,9 @@ The reference's detector is a sequential single-pass scan with driver state
   kernels (late rows re-enter via watermark semantics instead of the
   reference's 500k-row abort, gan.py:744-747).
 
+Per-window drift and health VERDICTS are not scored here: they are emitted
+once per closed window by the ClosedSpec families (streaming/closed.py).
+
 Smoke-tested with the file source + an in-memory sink via
 processAllAvailable() (no Kafka in the sandbox; source swap is config-only).
 """
@@ -61,139 +64,6 @@ def stream_suite(
             .partitionBy("batch_id")
             .parquet(out_path)
         )
-
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_cat_drift(
-    spark: SparkSession,
-    input_path: str,
-    schema,
-    cat_col: str,
-    ref_props: dict[str, float],
-    out_path: str,
-    checkpoint_path: str,
-    window_col: str = "window_id",
-    alpha: float = 0.01,
-    max_files_per_trigger: int = 4,
-):
-    """Streaming twin of `runner --cat-drift`: per micro-batch, the SAME
-    drift.categorical_drift (chi-square goodness-of-fit vs the broadcast
-    reference proportions) over the batch's windows, verdict rows written to
-    a batch_id partition — identical engine code for batch and streaming, so a
-    window fully contained in one micro-batch gets exactly the batch
-    verdict. (Windows split across micro-batches are scored per fragment —
-    the low-latency tradeoff; streaming/closed.closed_cat_drift is the
-    watermark-close variant that emits ONE batch-identical verdict per
-    window regardless of batch boundaries.)
-    """
-    from al_drift_detection_spark.drift import categorical_drift
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-    )
-
-    def run_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        out = categorical_drift(
-            batch_df, cat_col, ref_props, window_col=window_col, alpha=alpha
-        )
-        # same idempotent per-batch-partition overwrite as stream_suite: a
-        # replayed batch_id rewrites its partition instead of appending
-        # duplicate per-window verdict rows (ADVICE r3)
-        (
-            out.withColumn("batch_id", F.lit(batch_id))
-            .withColumn("column", F.lit(cat_col))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
-
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_health(
-    spark: SparkSession,
-    input_path: str,
-    schema,
-    ref_volume: float,
-    ref_null_ratios: dict[str, float],
-    out_path: str,
-    checkpoint_path: str,
-    window_col: str = "window_id",
-    low: float = 0.5,
-    high: float = 2.0,
-    threshold: float = 0.05,
-    uniqueness_col: str | None = None,
-    ref_uniqueness: float | None = None,
-    max_files_per_trigger: int = 4,
-):
-    """Streaming twin of `runner --health`: per micro-batch, the SAME
-    functions.health operators with FIXED references (ref_volume /
-    ref_null_ratios / ref_uniqueness literals — the deterministic-reference
-    rule: a window's verdict never depends on what other micro-batches
-    contained, so a window fully contained in one batch gets exactly the
-    batch verdict). Writes volume/ and completeness/ sub-tables — plus
-    uniqueness/ when uniqueness_col + ref_uniqueness are given (the HLL
-    distinct-ratio duplicate-surge alarm; a window SPLIT across batches is
-    scored per fragment, same caveat as stream_cat_drift — see
-    streaming/closed.closed_window_health for the watermark-close variant)
-    — each partitioned by batch_id with dynamic overwrite
-    (replay-idempotent, same as stream_suite)."""
-    from al_drift_detection_spark.functions.health import (
-        completeness_drift,
-        uniqueness_drift,
-        volume_anomaly,
-    )
-
-    if (uniqueness_col is None) != (ref_uniqueness is None):
-        raise ValueError("pass uniqueness_col and ref_uniqueness together")
-    cols = list(ref_null_ratios)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-    )
-
-    def run_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        frames = [
-            ("volume", volume_anomaly(
-                batch_df, window_col, ref_mean=ref_volume, low=low, high=high
-            )),
-            ("completeness", completeness_drift(
-                batch_df, cols, window_col, ref_ratios=ref_null_ratios,
-                threshold=threshold,
-            )),
-        ]
-        if uniqueness_col is not None:
-            frames.append(("uniqueness", uniqueness_drift(
-                batch_df, uniqueness_col, window_col, ref_ratio=ref_uniqueness,
-                threshold=threshold,
-            )))
-        for sub, frame in frames:
-            (
-                frame.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{out_path}/{sub}")
-            )
 
     return (
         stream.writeStream.foreachBatch(run_batch)

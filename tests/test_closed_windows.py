@@ -48,7 +48,7 @@ def test_closed_cat_drift_split_window_parity(spark, tmp_path_factory):
     (n, chi2_stat, p, verdict) equal drift.categorical_drift on W1's full
     row set."""
     from al_drift_detection_spark.drift import categorical_drift
-    from al_drift_detection_spark.streaming.closed import closed_cat_drift
+    from al_drift_detection_spark.streaming.closed import cat_drift_spec, closed
 
     inp = str(tmp_path_factory.mktemp("ccd") / "in")
     rng = np.random.default_rng(23)
@@ -73,8 +73,9 @@ def test_closed_cat_drift_split_window_parity(spark, tmp_path_factory):
         .option("maxFilesPerTrigger", 1)
         .parquet(inp)
     )
-    out = closed_cat_drift(
-        stream, "ts", "fmt", ref_props, window="5 minutes", watermark="1 minute"
+    out = closed(
+        stream, "ts", cat_drift_spec("fmt", ref_props),
+        window="5 minutes", watermark="1 minute",
     )
     _run_stream(out, "ccd_out")
     got = spark.sql("SELECT * FROM ccd_out").toPandas()
@@ -108,7 +109,7 @@ def test_closed_window_health_split_window_parity(spark, tmp_path_factory):
         completeness_drift,
         volume_anomaly,
     )
-    from al_drift_detection_spark.streaming.closed import closed_window_health
+    from al_drift_detection_spark.streaming.closed import closed, window_health_spec
 
     inp = str(tmp_path_factory.mktemp("cwh") / "in")
     rng = np.random.default_rng(31)
@@ -132,9 +133,10 @@ def test_closed_window_health_split_window_parity(spark, tmp_path_factory):
         .option("maxFilesPerTrigger", 1)
         .parquet(inp)
     )
-    out = closed_window_health(
-        stream, "ts", ref_volume=600.0, ref_null_ratios={"caption": 0.4},
-        window="5 minutes", watermark="1 minute", threshold=0.05,
+    out = closed(
+        stream, "ts",
+        window_health_spec(600.0, {"caption": 0.4}, threshold=0.05),
+        window="5 minutes", watermark="1 minute",
     )
     _run_stream(out, "cwh_out")
     got = spark.sql("SELECT * FROM cwh_out").toPandas()
@@ -168,7 +170,7 @@ def test_closed_drift_scores_split_window_parity(spark, tmp_path_factory):
     would verdict differently) emits one verdict set equal to
     drift.drift_scores over the window's full rows."""
     from al_drift_detection_spark.drift import drift_scores
-    from al_drift_detection_spark.streaming.closed import closed_drift_scores
+    from al_drift_detection_spark.streaming.closed import closed, drift_scores_spec
 
     inp = str(tmp_path_factory.mktemp("cds") / "in")
     rng = np.random.default_rng(41)
@@ -192,9 +194,9 @@ def test_closed_drift_scores_split_window_parity(spark, tmp_path_factory):
         .parquet(inp)
     )
     advisory = ("wasserstein", "js", "cvm", "ad")
-    out = closed_drift_scores(
-        stream, "ts", ["v"], ref, window="5 minutes", watermark="1 minute",
-        extra_kernels=advisory,
+    out = closed(
+        stream, "ts", drift_scores_spec(["v"], ref, extra_kernels=advisory),
+        window="5 minutes", watermark="1 minute",
     )
     _run_stream(out, "cds_out")
     got = spark.sql("SELECT * FROM cds_out").toPandas().set_index("kernel")
@@ -230,7 +232,7 @@ def test_closed_cat_drift_nonstring_category_parity(spark, tmp_path_factory):
     'True' — a Python-side stringification would dump every row into the
     eps catch-all and fail every window (review-caught divergence)."""
     from al_drift_detection_spark.drift import categorical_drift
-    from al_drift_detection_spark.streaming.closed import closed_cat_drift
+    from al_drift_detection_spark.streaming.closed import cat_drift_spec, closed
 
     inp = str(tmp_path_factory.mktemp("ccb") / "in")
     rng = np.random.default_rng(53)
@@ -252,8 +254,9 @@ def test_closed_cat_drift_nonstring_category_parity(spark, tmp_path_factory):
         .option("maxFilesPerTrigger", 1)
         .parquet(inp)
     )
-    out = closed_cat_drift(
-        stream, "ts", "flag", ref_props, window="5 minutes", watermark="1 minute"
+    out = closed(
+        stream, "ts", cat_drift_spec("flag", ref_props),
+        window="5 minutes", watermark="1 minute",
     )
     _run_stream(out, "ccb_out")
     got = spark.sql("SELECT * FROM ccb_out").toPandas()
@@ -277,7 +280,10 @@ def test_closed_window_uniqueness_split_window_parity(spark, tmp_path_factory):
     health.uniqueness_drift(approx=False) on the same rows."""
     from al_drift_detection_spark.functions._persist import release
     from al_drift_detection_spark.functions.health import uniqueness_drift
-    from al_drift_detection_spark.streaming.closed import closed_window_uniqueness
+    from al_drift_detection_spark.streaming.closed import (
+        closed,
+        window_uniqueness_spec,
+    )
 
     inp = str(tmp_path_factory.mktemp("cwu") / "in")
     rng = np.random.default_rng(59)
@@ -299,9 +305,10 @@ def test_closed_window_uniqueness_split_window_parity(spark, tmp_path_factory):
         .option("maxFilesPerTrigger", 1)
         .parquet(inp)
     )
-    out = closed_window_uniqueness(
-        stream, "ts", "image_id", ref_ratio=0.99, window="5 minutes",
-        watermark="1 minute", threshold=0.1,
+    out = closed(
+        stream, "ts",
+        window_uniqueness_spec("image_id", ref_ratio=0.99, threshold=0.1),
+        window="5 minutes", watermark="1 minute",
     )
     _run_stream(out, "cwu_out")
     got = spark.sql("SELECT * FROM cwu_out").toPandas()
@@ -331,11 +338,13 @@ def test_closed_window_uniqueness_over_k_estimator(spark, tmp_path_factory):
     threshold guard rejects too-tight thresholds."""
     import pytest as _pytest
 
-    from al_drift_detection_spark.streaming.closed import closed_window_uniqueness
+    from al_drift_detection_spark.streaming.closed import (
+        closed,
+        window_uniqueness_spec,
+    )
 
     with _pytest.raises(ValueError, match="noise band"):
-        closed_window_uniqueness(None, "ts", "k", ref_ratio=0.9, k=256,
-                                 threshold=0.01)
+        window_uniqueness_spec("k", ref_ratio=0.9, k=256, threshold=0.01)
 
     inp = str(tmp_path_factory.mktemp("cwk") / "in")
     rng = np.random.default_rng(61)
@@ -352,9 +361,10 @@ def test_closed_window_uniqueness_over_k_estimator(spark, tmp_path_factory):
         .option("maxFilesPerTrigger", 1)
         .parquet(inp)
     )
-    out = closed_window_uniqueness(
-        stream, "ts", "image_id", ref_ratio=0.9, window="5 minutes",
-        watermark="1 minute", threshold=0.35, k=256,
+    out = closed(
+        stream, "ts",
+        window_uniqueness_spec("image_id", ref_ratio=0.9, threshold=0.35, k=256),
+        window="5 minutes", watermark="1 minute",
     )
     _run_stream(out, "cwk_out")
     got = spark.sql("SELECT * FROM cwk_out").toPandas()
@@ -370,7 +380,10 @@ def test_closed_window_uniqueness_null_keys_match_batch(spark, tmp_path_factory)
     SEED, so without the explicit NULL guard every null-key row would fold
     into one phantom distinct key; review-caught parity break)."""
     from al_drift_detection_spark.functions.health import uniqueness_drift
-    from al_drift_detection_spark.streaming.closed import closed_window_uniqueness
+    from al_drift_detection_spark.streaming.closed import (
+        closed,
+        window_uniqueness_spec,
+    )
 
     inp = str(tmp_path_factory.mktemp("cwn") / "in")
     rng = np.random.default_rng(67)
@@ -387,9 +400,10 @@ def test_closed_window_uniqueness_null_keys_match_batch(spark, tmp_path_factory)
         .option("maxFilesPerTrigger", 1)
         .parquet(inp)
     )
-    out = closed_window_uniqueness(
-        stream, "ts", "image_id", ref_ratio=0.6, window="5 minutes",
-        watermark="1 minute", threshold=0.05,
+    out = closed(
+        stream, "ts",
+        window_uniqueness_spec("image_id", ref_ratio=0.6, threshold=0.05),
+        window="5 minutes", watermark="1 minute",
     )
     _run_stream(out, "cwn_out")
     got = spark.sql("SELECT * FROM cwn_out").toPandas()
@@ -417,7 +431,7 @@ def test_closed_drift_scores_over_cap_fragment_volume(spark, tmp_path_factory):
     we pin that the over-cap merge path still reports the TRUE n_rows and
     agrees with the batch twin's verdicts on an unambiguous shift."""
     from al_drift_detection_spark.drift import drift_scores
-    from al_drift_detection_spark.streaming.closed import closed_drift_scores
+    from al_drift_detection_spark.streaming.closed import closed, drift_scores_spec
 
     inp = str(tmp_path_factory.mktemp("cds_big") / "in")
     rng = np.random.default_rng(71)
@@ -441,8 +455,9 @@ def test_closed_drift_scores_over_cap_fragment_volume(spark, tmp_path_factory):
         .option("maxFilesPerTrigger", 1)
         .parquet(inp)
     )
-    out = closed_drift_scores(
-        stream, "ts", ["v"], ref, window="5 minutes", watermark="1 minute"
+    out = closed(
+        stream, "ts", drift_scores_spec(["v"], ref),
+        window="5 minutes", watermark="1 minute",
     )
     _run_stream(out, "cds_big_out")
     got = spark.sql("SELECT * FROM cds_big_out").toPandas().set_index("kernel")
@@ -476,7 +491,7 @@ def test_closed_sliding_windows_health(spark, tmp_path_factory):
     independently with exact counts over ITS full row set — rows planted in
     three 2-minute lanes must appear in both 4-minute windows covering each
     lane."""
-    from al_drift_detection_spark.streaming.closed import closed_window_health
+    from al_drift_detection_spark.streaming.closed import closed, window_health_spec
 
     inp = str(tmp_path_factory.mktemp("slide") / "in")
 
@@ -496,8 +511,8 @@ def test_closed_sliding_windows_health(spark, tmp_path_factory):
         .option("maxFilesPerTrigger", 1)
         .parquet(inp)
     )
-    out = closed_window_health(
-        stream, "ts", ref_volume=30.0, ref_null_ratios={"caption": 0.0},
+    out = closed(
+        stream, "ts", window_health_spec(30.0, {"caption": 0.0}),
         window="4 minutes", watermark="1 minute", slide="2 minutes",
     )
     _run_stream(out, "slide_out")
@@ -535,7 +550,10 @@ def test_closed_window_quantiles_split_window_parity(spark, tmp_path_factory):
         histogram_quantiles,
         window_histograms,
     )
-    from al_drift_detection_spark.streaming.closed import closed_window_quantiles
+    from al_drift_detection_spark.streaming.closed import (
+        closed,
+        window_quantiles_spec,
+    )
 
     inp = str(tmp_path_factory.mktemp("cwq") / "in")
     rng = np.random.default_rng(31)
@@ -562,8 +580,8 @@ def test_closed_window_quantiles_split_window_parity(spark, tmp_path_factory):
         .option("maxFilesPerTrigger", 1)
         .parquet(inp)
     )
-    out = closed_window_quantiles(
-        stream, "ts", "x", LO, HI, QS, n_bins=NB,
+    out = closed(
+        stream, "ts", window_quantiles_spec("x", LO, HI, QS, n_bins=NB),
         window="5 minutes", watermark="1 minute",
     )
     _run_stream(out, "cwq_out")
@@ -598,7 +616,10 @@ def test_closed_association_drift_split_window_parity(spark, tmp_path_factory):
     appear for W1 with (n, mi, cramers_v) equal to health.association_drift
     over W1's full row set and the same ref_mi."""
     from al_drift_detection_spark.functions.health import association_drift
-    from al_drift_detection_spark.streaming.closed import closed_association_drift
+    from al_drift_detection_spark.streaming.closed import (
+        association_drift_spec,
+        closed,
+    )
 
     inp = str(tmp_path_factory.mktemp("cad") / "in")
     rng = np.random.default_rng(31)
@@ -636,9 +657,11 @@ def test_closed_association_drift_split_window_parity(spark, tmp_path_factory):
         .option("maxFilesPerTrigger", 1)
         .parquet(inp)
     )
-    out = closed_association_drift(
-        stream, "ts", "x", "y", cats_a, cats_b, ref_mi,
-        window="5 minutes", watermark="1 minute", max_abs_diff=0.05,
+    out = closed(
+        stream, "ts",
+        association_drift_spec("x", "y", cats_a, cats_b, ref_mi,
+                               max_abs_diff=0.05),
+        window="5 minutes", watermark="1 minute",
     )
     _run_stream(out, "cad_out")
     got = spark.sql("SELECT * FROM cad_out").toPandas()
@@ -671,7 +694,10 @@ def test_closed_referential_drift_split_window_parity(spark, tmp_path_factory):
     on the full row set, and the verdict flips with the reference rate."""
     from al_drift_detection_spark.functions._persist import release
     from al_drift_detection_spark.functions.health import referential_drift
-    from al_drift_detection_spark.streaming.closed import closed_referential_drift
+    from al_drift_detection_spark.streaming.closed import (
+        closed,
+        referential_drift_spec,
+    )
 
     inp = str(tmp_path_factory.mktemp("crd") / "in")
     rng = np.random.default_rng(41)
@@ -707,9 +733,10 @@ def test_closed_referential_drift_split_window_parity(spark, tmp_path_factory):
         .option("maxFilesPerTrigger", 1)
         .parquet(inp)
     )
-    out = closed_referential_drift(
-        stream, "ts", "fk", dim, ref_rate=0.0,
-        window="5 minutes", watermark="1 minute", max_abs_jump=0.05,
+    out = closed(
+        stream, "ts",
+        referential_drift_spec("fk", dim, ref_rate=0.0, max_abs_jump=0.05),
+        window="5 minutes", watermark="1 minute",
     )
     _run_stream(out, "crd_out")
     got = spark.sql("SELECT * FROM crd_out").toPandas()
@@ -737,8 +764,9 @@ def test_late_data_contract_single_verdict_and_sink_dedupe(spark, tmp_path_facto
     import shutil
 
     from al_drift_detection_spark.streaming.closed import (
-        closed_window_health,
+        closed,
         dedupe_verdicts,
+        window_health_spec,
     )
 
     root = tmp_path_factory.mktemp("late")
@@ -766,8 +794,8 @@ def test_late_data_contract_single_verdict_and_sink_dedupe(spark, tmp_path_facto
         .option("maxFilesPerTrigger", 1)
         .parquet(inp)
     )
-    out = closed_window_health(
-        stream, "ts", ref_volume=160.0, ref_null_ratios={"caption": 0.0},
+    out = closed(
+        stream, "ts", window_health_spec(160.0, {"caption": 0.0}),
         window="5 minutes", watermark="1 minute",
     )
     q = (
@@ -818,7 +846,7 @@ def test_closed_frequent_items_invariants_across_batches(spark, tmp_path_factory
     est ≤ true, deficit ≤ n/(k+1), the hot item present and ranked first.
     (Estimates are chunking-dependent, so batch ≡ streaming is pinned at the
     invariant level — frequent_items_spec docstring.)"""
-    from al_drift_detection_spark.streaming.closed import closed_frequent_items
+    from al_drift_detection_spark.streaming.closed import closed, frequent_items_spec
 
     inp = str(tmp_path_factory.mktemp("cfi") / "in")
     rng = np.random.default_rng(47)
@@ -842,9 +870,9 @@ def test_closed_frequent_items_invariants_across_batches(spark, tmp_path_factory
         .parquet(inp)
     )
     K = 6
-    out = closed_frequent_items(
-        stream, "ts", "item", k=K, top=5, window="5 minutes",
-        watermark="1 minute",
+    out = closed(
+        stream, "ts", frequent_items_spec("item", k=K, top=5),
+        window="5 minutes", watermark="1 minute",
     )
     _run_stream(out, "cfi_out")
     got = spark.sql("SELECT * FROM cfi_out").toPandas()
@@ -873,7 +901,7 @@ def test_closed_sliced_drift_split_window_parity(spark, tmp_path_factory):
         build_sliced_reference,
         sliced_psi_drift,
     )
-    from al_drift_detection_spark.streaming.closed import closed_sliced_drift
+    from al_drift_detection_spark.streaming.closed import closed, sliced_drift_spec
 
     inp = str(tmp_path_factory.mktemp("csd") / "in")
     rng = np.random.default_rng(31)
@@ -922,8 +950,9 @@ def test_closed_sliced_drift_split_window_parity(spark, tmp_path_factory):
         .option("maxFilesPerTrigger", 1)
         .parquet(inp)
     )
-    out = closed_sliced_drift(
-        stream, "ts", "v", "s", cfg, window="5 minutes", watermark="1 minute"
+    out = closed(
+        stream, "ts", sliced_drift_spec("v", "s", cfg),
+        window="5 minutes", watermark="1 minute",
     )
     _run_stream(out, "csd_out")
     got = spark.sql(
@@ -960,7 +989,8 @@ def test_closed_conditional_completeness_split_window_parity(
         conditional_completeness_drift,
     )
     from al_drift_detection_spark.streaming.closed import (
-        closed_conditional_completeness,
+        closed,
+        conditional_completeness_spec,
     )
 
     inp = str(tmp_path_factory.mktemp("ccc") / "in")
@@ -1011,8 +1041,10 @@ def test_closed_conditional_completeness_split_window_parity(
         .option("maxFilesPerTrigger", 1)
         .parquet(inp)
     )
-    out = closed_conditional_completeness(
-        stream, "ts", "cat", "v", cfg, threshold=0.2, min_rows=50,
+    out = closed(
+        stream, "ts",
+        conditional_completeness_spec("cat", "v", cfg, threshold=0.2,
+                                      min_rows=50),
         window="5 minutes", watermark="1 minute",
     )
     _run_stream(out, "ccc_out")
@@ -1050,7 +1082,8 @@ def test_closed_embedding_outliers_split_window_parity(
         train_ivf_centroids,
     )
     from al_drift_detection_spark.streaming.closed import (
-        closed_embedding_outliers,
+        closed,
+        embedding_outliers_spec,
     )
 
     inp = str(tmp_path_factory.mktemp("ceo") / "in")
@@ -1103,9 +1136,11 @@ def test_closed_embedding_outliers_split_window_parity(
         .option("maxFilesPerTrigger", 1)
         .parquet(inp)
     )
-    out = closed_embedding_outliers(
-        stream, "ts", "embedding", cents, thr, tail=0.05, rate_factor=2.0,
-        min_rows=20, window="5 minutes", watermark="1 minute",
+    out = closed(
+        stream, "ts",
+        embedding_outliers_spec("embedding", cents, thr, tail=0.05,
+                                rate_factor=2.0, min_rows=20),
+        window="5 minutes", watermark="1 minute",
     )
     _run_stream(out, "ceo_out")
     got = spark.sql(

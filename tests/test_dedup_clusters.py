@@ -24,6 +24,25 @@ def test_clusters_collapse_planted_chains(spark):
     }
 
 
+def test_clusters_release_edge_cache(spark):
+    """dedup_clusters materializes the pair list once and must release it:
+    no persistent RDD is left behind on the driver union-find path (a
+    localCheckpoint here leaked one RDD per call)."""
+    nodes = spark.createDataFrame([(x,) for x in "abcde"], "doc_id string")
+    pairs = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("d", "e")], "a_id string, b_id string"
+    )
+    # compare RDD ids, not the map's size: the ContextCleaner may free RDDs
+    # that earlier tests left behind while this one runs
+    def persistent_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persistent_ids()
+    for _ in range(2):
+        assert dedup_clusters(nodes, pairs).count() == 5
+    assert persistent_ids() - before == set()
+
+
 def test_clusters_long_chain_converges(spark):
     # a 12-node path graph needs multiple propagation rounds — exercises the
     # DISTRIBUTED fixpoint loop (driver_edge_limit=0 forces it), not just the

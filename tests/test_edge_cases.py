@@ -270,6 +270,31 @@ def test_global_cumulative_fused_lead_matches_global_lead(spark):
         )
 
 
+def test_global_cumulative_lead_order_column_dtype(spark):
+    """lead_col over an INTEGER order column works (the boundary min is
+    carried as double), and a non-numeric order column is a contract error
+    up front, not an opaque createDataFrame type failure."""
+    from al_drift_detection_spark.operators.windows import global_cumulative
+
+    vals = [3, 5, 8, 13, 21, 34, 55]
+    df = spark.createDataFrame([(v,) for v in vals], "v long")
+    out = (
+        global_cumulative(
+            df, bucket=F.floor(F.col("v") / 10), order_cols=["v"], lead_col="nv"
+        )
+        .toPandas()
+        .sort_values("v")
+    )
+    assert out["nv"].tolist()[:-1] == [float(v) for v in vals[1:]]
+    assert np.isnan(out["nv"].tolist()[-1])
+
+    strs = spark.createDataFrame([("a",), ("b",)], "s string")
+    with pytest.raises(ValueError, match="numeric order column"):
+        global_cumulative(
+            strs, bucket=F.lit(0), order_cols=["s"], lead_col="ns"
+        )
+
+
 def test_q_salted_agg_equals_plain_groupby(spark):
     """The salted two-level rewrite is semantics-preserving: identical to the
     plain groupBy on the same fixture (registry q_salted_agg)."""

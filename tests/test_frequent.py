@@ -142,3 +142,17 @@ def test_frequent_store_ingests_merge_and_compact_losslessly(spark, tmp_path):
     pd.testing.assert_frame_equal(before, ans())
     snaps = [d for d in os.listdir(store) if d.startswith("_snapshot=")]
     assert len(snaps) == 1
+
+
+def test_mg_summary_drops_window_without_count_row(spark):
+    """A window whose partials lack the `(n)` row has no n_total: it is
+    dropped, never emitted with a NULL n_total."""
+    from al_drift_detection_spark.functions.frequent import mg_summary
+
+    partials = spark.createDataFrame(
+        [(0, "(n)", 3), (0, "a", 2), (0, "b", 1), (1, "a", 5)],
+        "window long, item string, cnt long",
+    )
+    got = mg_summary(partials, k=4).toPandas()
+    assert set(got["window"]) == {0}
+    assert got["n_total"].notna().all()

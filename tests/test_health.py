@@ -200,87 +200,6 @@ def test_runner_health_surfaces(spark, tmp_path_factory):
     assert (sc.drop(index="phash")["status"] == "ok").all()
 
 
-def test_stream_health_matches_batch(spark, tmp_path_factory):
-    """Windows fully contained in one micro-batch get exactly the batch
-    volume/completeness verdicts (fixed literal references — the
-    deterministic-reference rule), and replaying with a fresh checkpoint
-    does not duplicate rows (idempotent batch_id partitions)."""
-    from al_drift_detection_spark.functions.health import (
-        completeness_drift,
-        volume_anomaly,
-    )
-    from al_drift_detection_spark.streaming.validate import stream_health
-
-    base = tmp_path_factory.mktemp("stream_health")
-    inp, out, ckpt = str(base / "in"), str(base / "out"), str(base / "ckpt")
-
-    rows = []
-    for w, n in [(0, 100), (1, 100), (2, 100), (3, 40)]:  # window 3: volume drop
-        for i in range(n):
-            a = None if (w == 3 and i < 12) else float(i)  # +30% nulls there
-            rows.append((w, a))
-    df = spark.createDataFrame(rows, "window_id int, a double")
-    df.repartition("window_id").write.partitionBy("window_id").parquet(inp)
-
-    refs = {"a": 0.0}
-    q = stream_health(
-        spark, inp, "a double, window_id int", 100.0, refs, out, ckpt,
-        uniqueness_col="a", ref_uniqueness=1.0,
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(120)
-
-    got_v = (
-        spark.read.parquet(f"{out}/volume")
-        .select("window_id", "n_rows", "ratio", "verdict")
-        .toPandas().set_index("window_id").sort_index()
-    )
-    exp_v = (
-        volume_anomaly(df, ref_mean=100.0)
-        .toPandas().set_index("window_id").sort_index()
-    )
-    assert got_v["verdict"].tolist() == exp_v["verdict"].tolist()
-    assert (got_v["ratio"] == exp_v["ratio"]).all()
-    assert got_v.loc[3, "verdict"] == "fail" and got_v.loc[0, "verdict"] == "pass"
-
-    got_c = (
-        spark.read.parquet(f"{out}/completeness")
-        .select("window_id", "null_ratio", "delta", "verdict")
-        .toPandas().set_index("window_id").sort_index()
-    )
-    exp_c = (
-        completeness_drift(df, ["a"], ref_ratios=refs)
-        .toPandas().set_index("window_id").sort_index()
-    )
-    assert got_c["verdict"].tolist() == exp_c["verdict"].tolist()
-    assert np.allclose(got_c["null_ratio"], exp_c["null_ratio"])
-    assert got_c.loc[3, "verdict"] == "fail"
-
-    # uniqueness leg: same operator, fixed reference → parity with batch
-    from al_drift_detection_spark.functions.health import uniqueness_drift
-
-    got_u = (
-        spark.read.parquet(f"{out}/uniqueness")
-        .select("window_id", "ratio", "verdict")
-        .toPandas().set_index("window_id").sort_index()
-    )
-    exp_u = (
-        uniqueness_drift(df, "a", ref_ratio=1.0)
-        .toPandas().set_index("window_id").sort_index()
-    )
-    assert got_u["verdict"].tolist() == exp_u["verdict"].tolist()
-    assert got_u.loc[3, "verdict"] == "fail"  # 12 nulls of 40 → ratio ~0.7
-
-    # replay with a fresh checkpoint: same batch_ids overwrite, no dup rows
-    n_once = spark.read.parquet(f"{out}/volume").count()
-    q2 = stream_health(
-        spark, inp, "a double, window_id int", 100.0, refs, out,
-        str(base / "ckpt2"), max_files_per_trigger=1,
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(f"{out}/volume").count() == n_once
-
-
 def test_schema_check_golden(spark):
     """Missing / mismatched / unexpected columns come back as exactly the
     right status rows; a fully-matching contract is all-ok."""

@@ -303,69 +303,142 @@ def analyzed_of(df) -> str:
     return df._jdf.queryExecution().analyzed().toString()
 
 
+def _closed_families(spark) -> dict:
+    """One (stream frame, ClosedSpec) per closed-window family, over the
+    rate source (plans and schemas only — nothing is started)."""
+    import numpy as np
+
+    from al_drift_detection_spark.streaming import closed as C
+
+    s = _rate_stream(spark)
+    return {
+        "cat_drift": (s, C.cat_drift_spec("fmt", {"a": 0.5, "b": 0.5})),
+        "window_health": (s, C.window_health_spec(100.0, {"caption": 0.3})),
+        "drift_scores": (s, C.drift_scores_spec(["v"], {"v": np.arange(100.0)})),
+        "window_uniqueness": (s, C.window_uniqueness_spec("image_id", ref_ratio=0.9)),
+        "window_quantiles": (
+            s, C.window_quantiles_spec("v", 0.0, 100.0, [0.5], n_bins=16)
+        ),
+        "association_drift": (
+            s, C.association_drift_spec(
+                "fmt", "caption", ["a", "b"], ["c"], ref_mi=0.0
+            ),
+        ),
+        "referential_drift": (
+            s, C.referential_drift_spec(
+                "image_id", spark.createDataFrame([("0",)], "k string"),
+                ref_rate=0.0,
+            ),
+        ),
+        "frequent_items": (s, C.frequent_items_spec("fmt", k=4, top=2)),
+        "sliced_drift": (
+            s, C.sliced_drift_spec(
+                "v", "fmt",
+                {"lo": 0.0, "hi": 100.0, "bins": 4,
+                 "universe": ["a", "b", "(other)"],
+                 "pr": {"a": [0.25] * 4, "b": [0.25] * 4,
+                        "(other)": [0.25] * 4}},
+            ),
+        ),
+        "conditional_completeness": (
+            s, C.conditional_completeness_spec(
+                "fmt", "caption",
+                {"universe": ["a", "b", "(other)"],
+                 "ratios": {"a": 0.3, "b": 0.3, "(other)": 0.0}},
+            ),
+        ),
+        "embedding_outliers": (
+            s.selectExpr("ts", "array(v, v + 1.0) AS embedding"),
+            C.embedding_outliers_spec(
+                "embedding", [[1.0, 0.0], [0.0, 1.0]], threshold=0.9
+            ),
+        ),
+    }
+
+
 def test_streaming_closed_plans_are_pre_reduced(spark):
-    """Every closed-window builder's stateful node must sit above the
+    """Every closed-window family's stateful node must sit above the
     `_pre_ts` MapInPandas pre-reducer — and the check is non-vacuous (the
     marker is actually present, so a silent rename breaks the test, not the
     audit)."""
-    import numpy as np
+    from al_drift_detection_spark.streaming.closed import closed
 
-    from al_drift_detection_spark.streaming.closed import (
-        closed_association_drift,
-        closed_cat_drift,
-        closed_conditional_completeness,
-        closed_embedding_outliers,
-        closed_referential_drift,
-        closed_drift_scores,
-        closed_sliced_drift,
-        closed_window_health,
-        closed_window_quantiles,
-        closed_window_uniqueness,
-    )
-
-    s = _rate_stream(spark)
-    builds = {
-        "closed_cat_drift": closed_cat_drift(s, "ts", "fmt", {"a": 0.5, "b": 0.5}),
-        "closed_window_health": closed_window_health(
-            s, "ts", ref_volume=100.0, ref_null_ratios={"caption": 0.3}
-        ),
-        "closed_drift_scores": closed_drift_scores(
-            s, "ts", ["v"], {"v": np.arange(100.0)}
-        ),
-        "closed_window_uniqueness": closed_window_uniqueness(
-            s, "ts", "image_id", ref_ratio=0.9
-        ),
-        "closed_window_quantiles": closed_window_quantiles(
-            s, "ts", "v", 0.0, 100.0, [0.5], n_bins=16
-        ),
-        "closed_association_drift": closed_association_drift(
-            s, "ts", "fmt", "caption", ["a", "b"], ["c"], ref_mi=0.0
-        ),
-        "closed_referential_drift": closed_referential_drift(
-            s, "ts", "image_id",
-            spark.createDataFrame([("0",)], "k string"), ref_rate=0.0,
-        ),
-        "closed_sliced_drift": closed_sliced_drift(
-            s, "ts", "v", "fmt",
-            {"lo": 0.0, "hi": 100.0, "bins": 4,
-             "universe": ["a", "b", "(other)"],
-             "pr": {"a": [0.25] * 4, "b": [0.25] * 4,
-                    "(other)": [0.25] * 4}},
-        ),
-        "closed_conditional_completeness": closed_conditional_completeness(
-            s, "ts", "fmt", "caption",
-            {"universe": ["a", "b", "(other)"],
-             "ratios": {"a": 0.3, "b": 0.3, "(other)": 0.0}},
-        ),
-        "closed_embedding_outliers": closed_embedding_outliers(
-            s.selectExpr("ts", "array(v, v + 1.0) AS embedding"),
-            "ts", "embedding", [[1.0, 0.0], [0.0, 1.0]], threshold=0.9,
-        ),
-    }
-    for name, df in builds.items():
-        p = analyzed_of(df)
+    families = _closed_families(spark)
+    assert len(families) == 11
+    for name, (s, spec) in families.items():
+        p = analyzed_of(closed(s, "ts", spec))
         assert re.search(r"MapInPandas .*_pre_ts#\d+", p), f"{name}: no pre-reducer"
         assert not audit_streaming_stateful(p), f"{name}: {audit_streaming_stateful(p)}"
+
+
+# The schema each family's sink is written with. split_closed derives it from
+# the generic closed_multi row via the spec's split_fields, so these literals
+# are the only record of what a sink holds: combined and share-nothing sinks
+# are the same code path and cannot catch a split_fields edit by comparison.
+CLOSED_SINK_SCHEMAS = {
+    "cat_drift": (
+        "window_start timestamp, window_end timestamp, n long, chi2_stat double, "
+        "dof long, p_value double, verdict string"
+    ),
+    "window_health": (
+        "window_start timestamp, window_end timestamp, check string, column string, "
+        "n_rows long, metric double, ref double, verdict string"
+    ),
+    "drift_scores": (
+        "window_start timestamp, window_end timestamp, n_rows long, column string, "
+        "kernel string, statistic double, p_value double, threshold double, "
+        "verdict string"
+    ),
+    "window_uniqueness": (
+        "window_start timestamp, window_end timestamp, n_rows long, "
+        "n_distinct long, ratio double, ref_ratio double, verdict string"
+    ),
+    "window_quantiles": (
+        "window_start timestamp, window_end timestamp, q double, "
+        "quantile double, n_total long"
+    ),
+    "association_drift": (
+        "window_start timestamp, window_end timestamp, n long, mi double, "
+        "ref_mi double, abs_diff double, cramers_v double, verdict string"
+    ),
+    "referential_drift": (
+        "window_start timestamp, window_end timestamp, n long, orphans long, "
+        "rate double, ref_rate double, verdict string"
+    ),
+    "frequent_items": (
+        "window_start timestamp, window_end timestamp, item string, est long, "
+        "rank int, n_rows long"
+    ),
+    "sliced_drift": (
+        "window_start timestamp, window_end timestamp, slice string, "
+        "n_cur long, psi double, rank int, verdict string"
+    ),
+    "conditional_completeness": (
+        "window_start timestamp, window_end timestamp, category string, "
+        "n_cur long, null_ratio double, ref_ratio double, delta double, "
+        "verdict string"
+    ),
+    "embedding_outliers": (
+        "window_start timestamp, window_end timestamp, n long, "
+        "n_outliers long, rate double, threshold double, "
+        "expected_rate double, verdict string"
+    ),
+}
+
+
+@pytest.mark.parametrize("family", sorted(CLOSED_SINK_SCHEMAS))
+def test_closed_family_sink_schema(spark, family):
+    """closed() emits each family's pinned sink schema — names, types and
+    order (simpleString), and nullability (every column nullable)."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from al_drift_detection_spark.streaming.closed import closed
+
+    s, spec = _closed_families(spark)[family]
+    got = closed(s, "ts", spec).schema
+    want = _parse_datatype_string(CLOSED_SINK_SCHEMAS[family])
+    assert got.simpleString() == want.simpleString()
+    assert got == want
 
 
 def test_streaming_stateful_by_part_passes_audit(spark):

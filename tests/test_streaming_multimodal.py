@@ -202,58 +202,3 @@ def test_salted_agg_matches_plain(spark):
     for fmt in plain.index:
         for c in ("n", "sum_w", "min_h"):
             assert plain.loc[fmt, c] == salted.loc[fmt, c], (fmt, c)
-
-
-def test_stream_cat_drift_matches_batch(spark, tmp_path_factory):
-    """A window fully contained in one micro-batch must get exactly the batch
-    categorical_drift verdict (identical engine code both paths)."""
-    from al_drift_detection_spark.drift import categorical_drift
-    from al_drift_detection_spark.streaming.validate import stream_cat_drift
-
-    base = tmp_path_factory.mktemp("stream3")
-    inp, out, ckpt = str(base / "in"), str(base / "out"), str(base / "ckpt")
-
-    rows = []
-    # window 0 matches the 60/40 reference; window 1 is webp-shifted
-    rows += [(0, "png")] * 60 + [(0, "jpeg")] * 40
-    rows += [(1, "png")] * 30 + [(1, "jpeg")] * 20 + [(1, "webp")] * 50
-    df = spark.createDataFrame(rows, "window_id int, fmt string")
-    # one file per window → each micro-batch holds whole windows
-    df.repartition("window_id").write.partitionBy("window_id").parquet(inp)
-
-    props = {"png": 0.6, "jpeg": 0.4}
-    q = stream_cat_drift(
-        spark, inp, "fmt string, window_id int", "fmt", props, out, ckpt,
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(120)
-
-    got = (
-        spark.read.parquet(out)
-        .select("window_id", "n", "chi2_stat", "dof", "p_value", "verdict")
-        .toPandas().set_index("window_id").sort_index()
-    )
-    exp = (
-        categorical_drift(df, "fmt", props)
-        .toPandas().set_index("window_id").sort_index()
-    )
-    assert got["verdict"].tolist() == exp["verdict"].tolist()
-    assert got.loc[1]["verdict"] == "fail" and got.loc[0]["verdict"] == "pass"
-    import numpy as np
-    assert np.allclose(got["chi2_stat"], exp["chi2_stat"])
-    assert (got["dof"] == exp["dof"]).all()
-
-    # REPLAY idempotency (ADVICE r3): re-processing the same batches (fresh
-    # checkpoint, same batch_ids) must overwrite each batch's partition, not
-    # append duplicate verdict rows
-    n_once = spark.read.parquet(out).count()
-    q2 = stream_cat_drift(
-        spark, inp, "fmt string, window_id int", "fmt", props, out,
-        str(base / "ckpt2"), max_files_per_trigger=1,
-    )
-    q2.awaitTermination(120)
-    replayed = spark.read.parquet(out)
-    assert replayed.count() == n_once
-    assert (
-        replayed.groupBy("batch_id", "window_id").count().filter("count > 1").count() == 0
-    )

@@ -39,11 +39,16 @@ def main(out_dir: str, sf: float) -> None:
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.default_rng(42)
 
+    def _rows(per_sf1: int) -> int:
+        # at least one row per table: a tiny sf would otherwise produce empty
+        # tables and divide by zero (span / n_ev)
+        return max(1, int(sf * per_sf1))
+
     # ---- events: 1M rows/sf1 — ts linear in event_id over 30 days (the
     # sf0.1 corr(event_id, ts) is 0.99999), value ~ Exp(mean 50) (sf0.1
     # quantiles match -50*ln(1-q) to 3 digits), user_id uniform, 5 types.
-    n_ev = int(sf * 1_000_000)
-    n_users = int(sf * 15_000)
+    n_ev = _rows(1_000_000)
+    n_users = _rows(15_000)
     ev_id = np.arange(n_ev, dtype=np.int64)
     span = 30 * 86400.0
     ts = (
@@ -54,7 +59,7 @@ def main(out_dir: str, sf: float) -> None:
     _write(out_dir, "events", pa.table({
         "event_id": ev_id,
         "ts": ts,
-        "user_id": rng.integers(0, max(n_users, 1), n_ev),
+        "user_id": rng.integers(0, n_users, n_ev),
         "event_type": np.array(
             ["signup", "click", "purchase", "error", "view"], dtype=object
         )[rng.integers(0, 5, n_ev)],
@@ -67,7 +72,7 @@ def main(out_dir: str, sf: float) -> None:
     # ---- documents: 50k/sf1 — uniform token counts ~[8, 100] over the
     # 31-word vocab (sf0.1 n_chars 44..577, median 295), lang 41% en /
     # ~15% each of 4 others, source = srcN (20 values).
-    n_docs = int(sf * 50_000)
+    n_docs = _rows(50_000)
     tok_counts = rng.integers(8, 101, n_docs)
     vocab = np.array(VOCAB, dtype=object)
     texts = [
@@ -89,7 +94,7 @@ def main(out_dir: str, sf: float) -> None:
     # ---- embeddings: 20k/sf1 — random UNIT 64-d vectors (sf0.1 norms are
     # 1.0 and same/cross-label distances are equal: no cluster structure),
     # label uniform 0..9.
-    n_vec = int(sf * 20_000)
+    n_vec = _rows(20_000)
     m = rng.standard_normal((n_vec, 64)).astype(np.float32)
     m /= np.linalg.norm(m, axis=1, keepdims=True)
     _write(out_dir, "embeddings", pa.table({
@@ -100,9 +105,9 @@ def main(out_dir: str, sf: float) -> None:
 
     # ---- TPC-H-ish star schema, keys scaled linearly from the sf0.1 ranges
     n_ord, n_cust, n_part, n_supp = (
-        int(sf * 1_500_000), int(sf * 150_000), int(sf * 200_000), int(sf * 10_000)
+        _rows(1_500_000), _rows(150_000), _rows(200_000), _rows(10_000)
     )
-    n_li = int(sf * 6_000_000)
+    n_li = _rows(6_000_000)
     ok = np.arange(n_ord, dtype=np.int64)
     _write(out_dir, "orders", pa.table({
         "o_orderkey": ok,
