@@ -33,9 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from al_drift_detection_spark.functions._persist import attach_persisted
 from al_drift_detection_spark.functions.inference import batch_score
 from al_drift_detection_spark.operators.splits import split_assignment
+from al_drift_detection_spark.persist import scoped
 
 
 def crossing_report(
@@ -64,8 +64,9 @@ def crossing_report(
     --orbits output or a loaded drifts_setN.txt (ref util.py:101-117).
 
     Returns {"splits", "predictions", "confusion", "prf", "accuracy",
-    "sdi"}; the "predictions" frame carries the persisted per-row frame —
-    release(report["predictions"]) after the tables are written. `pred` in
+    "sdi"}; the persisted per-row predictions frame and the checkpointed
+    splits and confusion frames live in the caller's persist scope, so
+    write every table inside it. `pred` in
     every metric table is the SMOOTHED prediction when smoothing=True (the
     reference evaluates the smoothed LABEL_PRED column, cnn.py:568/576).
     Scopes: scope_type='split' covers all rows of each split
@@ -139,7 +140,10 @@ def crossing_report(
     else:
         rows = preds.withColumn("pred", F.col("label_pred"))
 
-    splits = split_assignment(
+    # O(orbits) tiny, consumed twice (broadcast onto predictions + the
+    # splits output table): lazy-checkpoint so the entropy aggregation over
+    # the corpus runs once
+    splits = scoped(split_assignment(
         df.select(F.col(orbit_col).cast("long").alias("orbit"),
                   F.col(label_col).alias("label")),
         drift_map.select(F.col(orbit_col).cast("long").alias("orbit"), "drift"),
@@ -147,15 +151,12 @@ def crossing_report(
         label_col="label",
         drift_col="drift",
         max_orbits=max_orbits,
-    # O(orbits) tiny, consumed twice (broadcast onto predictions + the
-    # splits output table): lazy-checkpoint so the entropy aggregation over
-    # the corpus runs once
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False))
 
     # persist the per-row prediction frame: it feeds the predictions output
     # AND the confusion aggregation (the shared-expensive-child rule —
     # inference + smoothing would otherwise run once per consumer)
-    predictions = (
+    predictions = scoped(
         rows.join(F.broadcast(splits.select("orbit", "drift", "split")), "orbit")
         .select("orbit", "order", "label", "label_pred", "pred", "split", "drift")
         .persist()
@@ -197,7 +198,7 @@ def crossing_report(
     )
     # the O(scopes × classes²) frame feeds four tables: lazy localCheckpoint
     # materializes the whole pipeline once on first use, then serves the rest
-    cm = cm.localCheckpoint(eager=False)
+    cm = scoped(cm.localCheckpoint(eager=False))
 
     key = ["scope_type", "scope"]
     rows_m = cm.groupBy(*key, F.col("label").alias("c")).agg(
@@ -257,10 +258,7 @@ def crossing_report(
     )
     accuracy = totals.select(*key, F.round("_acc", 6).alias("accuracy"))
 
-    # the persisted per-row frame is attached to EVERY table: whichever the
-    # caller releases last frees it (unpersist is idempotent), so gate/bench
-    # harnesses that see only one table still release correctly
-    out = {
+    return {
         "splits": splits,
         "predictions": predictions,
         "confusion": cm,
@@ -268,7 +266,6 @@ def crossing_report(
         "accuracy": accuracy,
         "sdi": sdi,
     }
-    return {k: attach_persisted(v, predictions) for k, v in out.items()}
 
 
 def load_drifts_txt(spark, path: str, orbit_col: str = "ORBIT") -> DataFrame:

@@ -40,6 +40,7 @@ from al_drift_detection_spark.kernels import (
     subsample,
     wasserstein_1d,
 )
+from al_drift_detection_spark.persist import scoped
 
 SCORE_SCHEMA = (
     "part int, window_id int, column string, kernel string, "
@@ -341,7 +342,7 @@ def sliding_window_scores(
     The sampled frame is PERSISTED (it is bounded — O(windows × sample_cap)
     rows — and the union's two branches would otherwise each re-execute the
     full scan + sampler: 100 TB read twice for a frame that fits in
-    executor storage); caller releases via functions._persist.release.
+    executor storage); it lives in the caller's persist scope.
 
     Scale shape (VERDICT r4 "What's wrong" #1 — the one-task-per-pair group
     is gone): per-window rows are bounded JVM-side BEFORE the union/group via
@@ -359,7 +360,7 @@ def sliding_window_scores(
         sample_cap = 4 * max_n_for_cap
     if sample_cap < 1:
         raise ValueError(f"sample_cap must be positive, got {sample_cap}")
-    pruned = (
+    pruned = scoped(
         _bounded_window_sample(
             df.select(part_col, window_col, *value_cols), window_col, sample_cap
         )
@@ -429,11 +430,7 @@ def sliding_window_scores(
             ],
         )
 
-    from al_drift_detection_spark.functions._persist import attach_persisted
-
-    return attach_persisted(
-        both.groupBy("_pair").applyInPandas(score, SCORE_SCHEMA), pruned
-    )
+    return both.groupBy("_pair").applyInPandas(score, SCORE_SCHEMA)
 
 
 EMB_SCORE_SCHEMA = (

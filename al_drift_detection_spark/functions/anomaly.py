@@ -32,6 +32,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from al_drift_detection_spark.persist import scoped
+
 SERIES_KEYS = ("part", "column", "metric")
 
 STORE_SCHEMA = (
@@ -85,7 +87,7 @@ def anomaly_verdicts(
     # upstreams (a full raw-table aggregate when the caller builds metrics
     # inline rather than reading the store) re-execute once per strategy
     # (the CLAUDE.md shared-child rule). The frame is O(series keys) rows.
-    j = cur.join(F.broadcast(hist), klist, "left").persist()
+    j = scoped(cur.join(F.broadcast(hist), klist, "left").persist())
 
     v, mu, sd, pv = F.col("value"), F.col("hist_mean"), F.col("hist_std"), F.col("prev_value")
     enough = F.coalesce(F.col("n_hist"), F.lit(0)) >= F.lit(min_history)
@@ -154,9 +156,7 @@ def anomaly_verdicts(
             )
         )
         out = out.unionByName(babs)
-    from al_drift_detection_spark.functions._persist import attach_persisted
-
-    return attach_persisted(out, j)
+    return out
 
 
 class MetricsStore:
@@ -360,7 +360,7 @@ def store_changepoint(
     O(windows)-series contract); the ordered windows are PARTITIONED by the
     series key, so no single-task global sort exists at any width. The
     shared history frame feeds the scale aggregate and the main path —
-    persisted, release obligation on the returned frame.
+    persisted in the caller's persist scope.
 
     Output: (part, column, metric, run_id, run_ts, x, ph_inc, ph_dec,
     alarm) — x is the standardized value; alarm per the PH test at
@@ -368,10 +368,8 @@ def store_changepoint(
     """
     from pyspark.sql.window import Window
 
-    from al_drift_detection_spark.functions._persist import attach_persisted
-
     keys = list(SERIES_KEYS)
-    hist = history.persist()
+    hist = scoped(history.persist())
     scale = hist.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("_n_runs"),
         F.coalesce(
@@ -408,7 +406,7 @@ def store_changepoint(
             | (F.col("ph_dec") > float(threshold))
         ).alias("alarm"),
     )
-    return attach_persisted(out, hist)
+    return out
 
 
 def seasonal_anomaly(
@@ -446,8 +444,8 @@ def seasonal_anomaly(
     already aggregated, never a raw re-scan; the slot frame is
     O(series × period) and broadcast to both the residual fold and the
     current join. The history projection is the shared child of the slot
-    and residual folds — persisted, release obligation on the returned
-    frame (the CLAUDE.md shared-child rule).
+    and residual folds — persisted in the caller's persist scope (the
+    shared-child rule).
 
     Output matches anomaly_verdicts' schema exactly (union-compatible for
     the metric_anomalies sink): (keys..., value, strategy='seasonal',
@@ -457,16 +455,15 @@ def seasonal_anomaly(
     of gan.py's drift scoring — a verdict relative to the matching cohort,
     never the global pool.
     """
-    from al_drift_detection_spark.functions._persist import attach_persisted
 
     if period < 2:
         raise ValueError(f"period must be >= 2, got {period}")
     klist = list(keys)
-    h = history.select(
+    h = scoped(history.select(
         *klist,
         F.col(value_col).alias("_v"),
         F.pmod(F.col(order_col), F.lit(int(period))).alias("_slot"),
-    ).persist()
+    ).persist())
     slot_means = h.groupBy(*klist, "_slot").agg(
         F.count(F.lit(1)).alias("_n_slot"),
         F.avg("_v").alias("_slot_mean"),
@@ -515,7 +512,7 @@ def seasonal_anomaly(
         .otherwise("pass")
         .alias("verdict"),
     )
-    return attach_persisted(out, h)
+    return out
 
 
 def trend_verdicts(
@@ -554,8 +551,8 @@ def trend_verdicts(
     prefix-fold bound: hundreds of runs per series, ~10⁴ pairs, trivial;
     the join keys partition it, no cross-series blow-up). The history
     projection is the shared child of the pair join's BOTH sides, the
-    run-count fold and the tie fold — persisted, release obligation on
-    the returned frame (the CLAUDE.md shared-child rule).
+    run-count fold and the tie fold — persisted in the caller's persist
+    scope (the shared-child rule).
 
     Output: (keys..., n_runs, s_stat, var_s, z, sen_slope, verdict) with
     verdict ∈ insufficient (n_runs < min_runs — MK's normal approximation
@@ -563,18 +560,17 @@ def trend_verdicts(
     (z < −z_crit) / no_trend. A constant series (Var(S) = 0 after the tie
     correction) is no_trend by construction.
     """
-    from al_drift_detection_spark.functions._persist import attach_persisted
 
     klist = list(keys)
     # NULL metric values carry no trend signal but would count as runs:
     # null comparisons fall through sgn's otherwise(0) and null values form
     # a tie group, inflating n_runs and Var(S) while contributing nothing
     # to S — biasing z toward no_trend (ADVICE r7). Excluded up front.
-    h = history.filter(F.col(value_col).isNotNull()).select(
+    h = scoped(history.filter(F.col(value_col).isNotNull()).select(
         *klist,
         F.col(value_col).cast("double").alias("_v"),
         F.col(order_col).alias("_o"),
-    ).persist()
+    ).persist())
     a = h.select(*klist, F.col("_v").alias("_va"), F.col("_o").alias("_oa"))
     b = h.select(*klist, F.col("_v").alias("_vb"), F.col("_o").alias("_ob"))
     pairs = a.join(b, klist).filter(F.col("_oa") < F.col("_ob"))
@@ -626,4 +622,4 @@ def trend_verdicts(
             .alias("verdict"),
         )
     )
-    return attach_persisted(out, h)
+    return out

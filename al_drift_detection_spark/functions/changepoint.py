@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from al_drift_detection_spark.persist import scoped
+
 
 def page_hinkley(
     series: DataFrame,
@@ -143,15 +145,13 @@ def cusum_levels(
 
     `series` is persisted — it is the shared child of the reference
     aggregate AND the main path (the CLAUDE.md rule: unpersisted, the
-    caller's raw-table aggregate would execute twice); the release
-    obligation rides on the returned frame (functions._persist.release).
+    caller's raw-table aggregate would execute twice); it lives in the
+    caller's persist scope.
 
     Output: (order_col, value_col, mu, k, s_inc, s_dec, alarm), floats
     un-rounded (round at the query edge).
     """
-    from al_drift_detection_spark.functions._persist import attach_persisted
-
-    series = series.persist()
+    series = scoped(series.persist())
     ref = series.filter(F.col(order_col) < ref_upto).agg(
         F.avg(value_col).alias("mu"),
         (float(k_mult) * F.coalesce(F.stddev(value_col), F.lit(0.0))).alias("k"),
@@ -180,7 +180,7 @@ def cusum_levels(
             | (F.col("s_dec") > float(threshold))
         ).alias("alarm"),
     )
-    return attach_persisted(out, series)
+    return out
 
 
 def ddm_levels(
@@ -209,13 +209,12 @@ def ddm_levels(
     Output: (order_col, n_col, err_col, p_cum, s_cum, p_min, s_min, level).
     The windowed frame is persisted — it feeds the argmin self-join's two
     sides AND the final join (the CLAUDE.md shared-child rule: without it
-    the caller's raw-table aggregate re-executes ~3x). Caller releases via
-    functions._persist.release.
+    the caller's raw-table aggregate re-executes ~3x). It lives in the
+    caller's persist scope.
     """
-    from al_drift_detection_spark.functions._persist import attach_persisted
 
     w = Window.orderBy(order_col).rowsBetween(Window.unboundedPreceding, 0)
-    d = (
+    d = scoped(
         series.withColumn("_cn", F.sum(n_col).over(w).cast("double"))
         .withColumn("_ce", F.sum(err_col).over(w).cast("double"))
         .withColumn("p_cum", F.col("_ce") / F.col("_cn"))
@@ -273,4 +272,4 @@ def ddm_levels(
         "s_min",
         lvl.cast("int").alias("level"),
     )
-    return attach_persisted(out, d)
+    return out

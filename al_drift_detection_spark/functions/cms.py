@@ -37,6 +37,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from al_drift_detection_spark.persist import scoped
+
 
 def _bucket_array(col: str, depth: int, width: int):
     """Array of the key's bucket under each of the `depth` hash rows —
@@ -107,14 +109,11 @@ def cms_point_estimates(
     and BOTH the probe grid's window list and the estimate join fold from
     it — a live cells pipeline (raw scan + posexplode + aggregate) would
     otherwise execute twice per call (VERDICT r7 "What's wrong" #1; single
-    execution pinned by tests/test_cms.py). The persisted child is attached
-    to the output (functions._persist contract) — callers release after
-    materializing."""
-    from al_drift_detection_spark.functions._persist import attach_persisted
-
-    merged = cells.groupBy(window_col, "r", "bucket").agg(
+    execution pinned by tests/test_cms.py). The persisted child lives in the
+    caller's persist scope."""
+    merged = scoped(cells.groupBy(window_col, "r", "bucket").agg(
         F.sum("cnt").alias("cnt")
-    ).persist()
+    ).persist())
     probes = keys_df.select(
         col, F.posexplode(_bucket_array(col, depth, width)).alias("r", "bucket")
     )
@@ -124,7 +123,7 @@ def cms_point_estimates(
         .groupBy(window_col, col)
         .agg(F.min(F.coalesce("cnt", F.lit(0))).cast("long").alias("est"))
     )
-    return attach_persisted(out, merged)
+    return out
 
 
 def update_cms_store(

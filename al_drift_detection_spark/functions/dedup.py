@@ -15,11 +15,13 @@ oracle-checkable variant.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from al_drift_detection_spark.functions._persist import attach_persisted, release  # noqa: F401
 from al_drift_detection_spark.functions.text import shingle_rows
+from al_drift_detection_spark.persist import persist_scope, release, scoped
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -57,11 +59,10 @@ def ngram_jaccard_pairs(
     are PERSISTED per the shared-expensive-child rule: unpersisted, the
     tokenize→explode→window→distinct pipeline executed once per consumer
     (the exact pathology minhash_lsh_pairs' persist fixed; measured r8:
-    ~2x end-to-end on q_dedup_clusters). Attached to the output for the
-    caller to release (functions._persist contract).
+    ~2x end-to-end on q_dedup_clusters). Both live in the caller's
+    persist scope (al_drift_detection_spark.persist).
     """
-    sh = shingle_rows(df, text_col, id_col, n).persist()
-    kids = [sh]
+    sh = scoped(shingle_rows(df, text_col, id_col, n).persist())
     if max_doc_freq is not None:
         rare = (
             sh.groupBy("g")
@@ -70,10 +71,8 @@ def ngram_jaccard_pairs(
             .select("g")
         )
         # sizes + intersections over the capped universe
-        sh = sh.join(rare, "g").persist()
-        kids.append(sh)
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh")).persist()
-    kids.append(sizes)
+        sh = scoped(sh.join(rare, "g").persist())
+    sizes = scoped(sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh")).persist())
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
@@ -93,7 +92,7 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    return attach_persisted(out, *kids)
+    return out
 
 
 def minhash_signatures(
@@ -180,7 +179,7 @@ def minhash_lsh_pairs(
     persist the whole shingle→signature pipeline (the dominant stage)
     executes twice.
     """
-    banded = banded_signatures(df, k, bands, n, text_col, id_col).persist()
+    banded = scoped(banded_signatures(df, k, bands, n, text_col, id_col).persist())
     a = banded.alias("a")
     b_ = banded.alias("b")
     # compute the estimate AT the join row, then dedup on 3 small columns —
@@ -197,10 +196,7 @@ def minhash_lsh_pairs(
         .select(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"), est.alias("est_jaccard"))
         .dropDuplicates(["a_id", "b_id"])
     )
-    # caller releases the persisted signature frame after materializing
-    # (functions._persist.release) — otherwise it holds executor storage for
-    # the session lifetime
-    return attach_persisted(cand.filter(F.col("est_jaccard") >= threshold), banded)
+    return cand.filter(F.col("est_jaccard") >= threshold)
 
 
 def winnow_overlap_pairs(
@@ -226,16 +222,15 @@ def winnow_overlap_pairs(
     fingerprints appearing in more than that many docs BEFORE the self-join
     (the hot-shingle df cap — no near-dup signal, d²/2 join rows). The
     per-doc fingerprint SET frame feeds sizes and both join sides — the
-    shared-child persist rule; caller releases via _persist.release."""
+    shared-child persist rule; it lives in the caller's persist scope."""
     from al_drift_detection_spark.functions.text import winnow_fingerprints
 
-    fps = (
+    fps = scoped(
         winnow_fingerprints(df, text_col, id_col, k=k, w=w)
         .select(F.col(id_col).alias("id"), "fp")
         .distinct()
         .persist()
     )
-    kids = [fps]
     use = fps
     if max_doc_freq is not None:
         rare = (
@@ -248,8 +243,7 @@ def winnow_overlap_pairs(
     # persisted: joined back twice (na / nb) — each reference would re-run
     # the groupBy over the cached fps otherwise (r8; the ngram_jaccard_pairs
     # sizes fix applied to the winnowing twin)
-    sizes = fps.groupBy("id").agg(F.count(F.lit(1)).alias("n_fp")).persist()
-    kids.append(sizes)
+    sizes = scoped(fps.groupBy("id").agg(F.count(F.lit(1)).alias("n_fp")).persist())
     a, b = use.alias("a"), use.alias("b")
     shared = (
         a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id") < F.col("b.id")))
@@ -269,7 +263,7 @@ def winnow_overlap_pairs(
         )
         .filter(F.col("overlap") >= threshold)
     )
-    return attach_persisted(out, *kids)
+    return out
 
 
 def _committed_gens(store_path: str) -> list[int]:
@@ -513,7 +507,7 @@ def incremental_minhash_pairs(
     )
     a, b_ = banded_new.alias("a"), all_banded.alias("b")
     a_is_least = F.col("a.id") < F.col("b.id")
-    pairs = (
+    pairs = scoped(
         a.join(
             b_,
             (F.col("a.band") == F.col("b.band"))
@@ -542,7 +536,7 @@ def incremental_minhash_pairs(
 
 def dedup_clusters(
     nodes: DataFrame,
-    pairs: DataFrame,
+    pairs: DataFrame | Callable[[], DataFrame],
     id_col: str = "doc_id",
     a_col: str = "a_id",
     b_col: str = "b_id",
@@ -573,25 +567,24 @@ def dedup_clusters(
     Output: (id_col, canonical_id, keep) for EVERY node (singletons keep
     themselves); keep ⇔ the node is its cluster's minimum id.
 
-    CONTRACT NOTE: `pairs` is consumed — its plan is materialized into a
-    persisted edge list here and any persisted self-join child it carried
-    (functions._persist) is RELEASED as part of that. A caller that wants to
-    reuse `pairs` for further queries afterwards will silently recompute its
-    pipeline (twice, for the self-join); materialize your own copy first if
-    you need it again.
+    `pairs` is the pair frame, or a zero-argument function that builds it:
+    a function is called inside a nested persist scope, so the persisted
+    self-join children of the pair operator are freed as soon as the edge
+    list is materialized here, before the caller acts on the result. A
+    pair frame given directly keeps its children in the caller's scope.
+    The fallback's final labels checkpoint lives in the caller's scope;
+    each earlier round's is freed once the next round is counted.
     """
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        # pairs may be an expensive plan (shingle join / LSH); materialize
-        # once. persist, not localCheckpoint: neither result references
-        # edges, and unpersist() cannot free a localCheckpoint RDD
-        .persist()
-    )
-    n_edges = edges.count()
-    # the pair plan is now materialized into the cache — release any
-    # persisted self-join child it carried (attach_persisted survives only on
-    # the original frame, so composition points like this one must release)
-    release(pairs)
+    with persist_scope():
+        edges = (
+            (pairs() if callable(pairs) else pairs)
+            .select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+            # pairs may be an expensive plan (shingle join / LSH);
+            # materialize once. persist, not localCheckpoint: neither result
+            # references edges, so it is unpersisted before return
+            .persist()
+        )
+        n_edges = edges.count()
     if n_edges <= driver_edge_limit:
         parent: dict = {}
 
@@ -633,14 +626,16 @@ def dedup_clusters(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     labels = nodes.select(F.col(id_col).alias("node"), F.col(id_col).alias("lbl"))
-    labels = labels.localCheckpoint(eager=True)
+    # lineage cut per round: each round reads `labels` twice (prop and
+    # new_labels), so a persisted plan would grow with every round
+    labels = scoped(labels.localCheckpoint(eager=True))
     for _ in range(max_iter):
         prop = (
             both.join(labels, both["src"] == labels["node"])
             .groupBy(F.col("dst").alias("pnode"))
             .agg(F.min("lbl").alias("plbl"))
         )
-        new_labels = (
+        new_labels = scoped(
             labels.join(prop, labels["node"] == prop["pnode"], "left")
             .select(
                 "node",
@@ -654,6 +649,7 @@ def dedup_clusters(
             .filter(F.col("n.lbl") != F.col("o.lbl"))
             .count()
         )
+        release(labels)
         labels = new_labels
         if changed == 0:
             break
@@ -673,7 +669,6 @@ def dedup_clusters(
         F.col("lbl").alias("canonical_id"),
         (F.col("node") == F.col("lbl")).alias("keep"),
     )
-
 
 
 def banded_fingerprints(
@@ -718,14 +713,14 @@ def hamming_pairs(
     (band, band value), then the exact Hamming filter `bit_count(xor) ≤ d`.
     Candidate generation is linear (bands× rows of small longs); the join is
     per-bucket. All JVM column expressions, no Python. Output:
-    (a_id, b_id, hamming); caller releases the persisted banded frame
-    (functions._persist.release).
+    (a_id, b_id, hamming); the persisted banded frame lives in the caller's
+    persist scope.
     """
     if max_distance >= bands:
         raise ValueError("need bands > max_distance for the pigeonhole guarantee")
     # persisted: both self-join sides share the fingerprint pipeline, which
     # would otherwise execute twice (broadcast + probe sides don't reuse)
-    banded = banded_fingerprints(fp, fp_col, id_col, bands).persist()
+    banded = scoped(banded_fingerprints(fp, fp_col, id_col, bands).persist())
     a, b = banded.alias("a"), banded.alias("b")
     ham = F.bit_count(F.col("a._fp").bitwiseXOR(F.col("b._fp")))
     out = (
@@ -743,7 +738,7 @@ def hamming_pairs(
         .filter(F.col("hamming") <= max_distance)
         .dropDuplicates(["a_id", "b_id"])
     )
-    return attach_persisted(out, banded)
+    return out
 
 
 def incremental_hamming_pairs(
@@ -813,7 +808,7 @@ def incremental_hamming_pairs(
     a, b_ = banded_new.alias("a"), all_banded.alias("b")
     ham = F.bit_count(F.col("a._fp").bitwiseXOR(F.col("b._fp")))
     a_is_least = F.col("a.id") < F.col("b.id")
-    pairs = (
+    pairs = scoped(
         a.join(
             b_,
             (F.col("a.band") == F.col("b.band"))
@@ -969,26 +964,27 @@ def near_dup_rate(
     engine's windowed-verdict pattern applied to the dedup signal).
 
     Composition: MinHash-LSH candidate pairs (est_jaccard ≥ threshold) →
-    distinct flagged doc ids (materialized once via localCheckpoint, so the
-    persisted signature frame can be released immediately) → left join back
+    distinct flagged doc ids (materialized once via localCheckpoint inside a
+    nested persist scope, so the signature frame is freed right there) →
+    left join back
     to the pruned (window, id) projection → one per-window count aggregate.
     Output: (window_id, n_docs, n_near_dup, dup_rate).
     """
-    pairs = minhash_lsh_pairs(
-        df, k=k, bands=bands, n=n, threshold=threshold,
-        text_col=text_col, id_col=id_col,
-    )
-    dup_ids = (
-        # ONE pass over the pair join: explode both endpoints from each pair
-        # row — a union of two selects would execute the candidate self-join
-        # once per branch (exchange reuse does not unify them; verified on
-        # the physical plan: 2 join nodes, 0 ReusedExchange)
-        pairs.select(F.explode(F.array("a_id", "b_id")).alias("_dup_id"))
-        .distinct()
-        .localCheckpoint(eager=True)  # tiny: only near-dup ids survive
-    )
-    release(pairs)
-    return _windowed_dup_counts(df, dup_ids, window_col, id_col)
+    with persist_scope():
+        pairs = minhash_lsh_pairs(
+            df, k=k, bands=bands, n=n, threshold=threshold,
+            text_col=text_col, id_col=id_col,
+        )
+        dup_ids = (
+            # ONE pass over the pair join: explode both endpoints from each
+            # pair row — a union of two selects would execute the candidate
+            # self-join once per branch (exchange reuse does not unify them;
+            # verified on the physical plan: 2 join nodes, 0 ReusedExchange)
+            pairs.select(F.explode(F.array("a_id", "b_id")).alias("_dup_id"))
+            .distinct()
+            .localCheckpoint(eager=True)  # tiny: only near-dup ids survive
+        )
+    return _windowed_dup_counts(df, scoped(dup_ids), window_col, id_col)
 
 
 def _windowed_dup_counts(
@@ -1031,19 +1027,20 @@ def near_dup_rate_exact(
     oracle (q_near_dup_rate_exact). The LSH variant stays the scale path —
     this one's shingle self-join is quadratic on hot shingles (cap with
     max_doc_freq when running it beyond oracle scale)."""
-    pairs = ngram_jaccard_pairs(
-        df, threshold=threshold, n=n, text_col=text_col, id_col=id_col,
-        max_doc_freq=max_doc_freq,
-    )
     # localCheckpoint mirrors the LSH path (ADVICE r4): without it the lazy
     # quadratic shingle self-join plan is what reaches _windowed_dup_counts,
     # its size unknown at planning time — materialize the tiny distinct id
     # set eagerly so the expensive pairs pipeline runs once and the join
-    # back is a planned-small broadcast
-    dup_ids = (
-        pairs.select(F.explode(F.array("a_id", "b_id")).alias("_dup_id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    release(pairs)  # the persisted shingle/sizes children (r8)
-    return _windowed_dup_counts(df, dup_ids, window_col, id_col)
+    # back is a planned-small broadcast; the nested scope frees the
+    # persisted shingle/sizes children (r8) once it is materialized
+    with persist_scope():
+        pairs = ngram_jaccard_pairs(
+            df, threshold=threshold, n=n, text_col=text_col, id_col=id_col,
+            max_doc_freq=max_doc_freq,
+        )
+        dup_ids = (
+            pairs.select(F.explode(F.array("a_id", "b_id")).alias("_dup_id"))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+    return _windowed_dup_counts(df, scoped(dup_ids), window_col, id_col)

@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from al_drift_detection_spark.persist import scoped
+
 STORE_SCHEMA = "window long, item string, cnt long, _snapshot int"
 _N_ITEM = "(n)"  # reserved per-chunk row carrying the raw row count
 
@@ -258,12 +260,10 @@ def frequent_items_drift(
     One count shuffle over (window, item); everything downstream is
     O(windows × top) relational work on the aggregated frame, which is
     persisted — it feeds the reference fold, the per-window totals, both
-    share joins, and the entrant ranking (the shared-child rule); caller
-    releases via _persist.release. Output: (window, l1, entrant_item,
+    share joins, and the entrant ranking (the shared-child rule); it lives
+    in the caller's persist scope. Output: (window, l1, entrant_item,
     entrant_share, verdict)."""
-    from al_drift_detection_spark.functions._persist import attach_persisted
-
-    c = (
+    c = scoped(
         df.filter(F.col(col).isNotNull())
         .groupBy(
             F.col(window_col).cast("long").alias("window"),
@@ -330,4 +330,4 @@ def frequent_items_drift(
             ).otherwise("pass").alias("verdict"),
         )
     )
-    return attach_persisted(out, c)
+    return out

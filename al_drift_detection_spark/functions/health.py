@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
-from al_drift_detection_spark.functions._persist import attach_persisted
+from al_drift_detection_spark.persist import scoped
 
 
 def _eager_reference(per_w: DataFrame, ref_filter, aggs: list, op_name: str):
@@ -86,16 +86,14 @@ def volume_anomaly(
         # sign-flipped) and every verdict silently 'pass' — the same
         # NULL→'pass' trap _eager_reference guards on the data-derived path
         raise ValueError(f"ref_mean must be positive, got {ref_mean}")
-    persisted = []
     counts = df.groupBy(F.col(window_col).alias("window_id")).agg(
         F.count(F.lit(1)).alias("n_rows")
     )
     if ref_mean is None:
         # persist the O(windows) aggregate: the eager reference mean below
         # materializes it once and the returned plan reuses the cache — the
-        # full table scans ONCE (caller releases via functions._persist)
-        counts = counts.persist()
-        persisted = [counts]
+        # full table scans ONCE (freed by the caller's persist scope)
+        counts = scoped(counts.persist())
         if ref_first_n is not None:
             wins = [
                 r[0]
@@ -109,20 +107,17 @@ def volume_anomaly(
             counts, ref_filter, [F.avg("n_rows")], "volume_anomaly"
         )[0]
     m = F.lit(float(ref_mean))
-    return attach_persisted(
-        counts.select(
-            "window_id",
-            "n_rows",
-            F.round(m, 6).alias("ref_mean"),
-            F.round(F.col("n_rows") / m, 6).alias("ratio"),
-            F.when(
-                (F.col("n_rows") / m < low) | (F.col("n_rows") / m > high),
-                F.lit("fail"),
-            )
-            .otherwise(F.lit("pass"))
-            .alias("verdict"),
-        ),
-        *persisted,
+    return counts.select(
+        "window_id",
+        "n_rows",
+        F.round(m, 6).alias("ref_mean"),
+        F.round(F.col("n_rows") / m, 6).alias("ratio"),
+        F.when(
+            (F.col("n_rows") / m < low) | (F.col("n_rows") / m > high),
+            F.lit("fail"),
+        )
+        .otherwise(F.lit("pass"))
+        .alias("verdict"),
     )
 
 
@@ -166,12 +161,10 @@ def completeness_drift(
         for i, c in enumerate(cols)
     ]
     per_w = df.groupBy(F.col(window_col).alias("window_id")).agg(*aggs)
-    persisted = []
     if ref_ratios is None:
         # persist: the eager reference aggregate below materializes the tiny
         # frame once and the returned plan reuses the cache — one table scan
-        per_w = per_w.persist()
-        persisted = [per_w]
+        per_w = scoped(per_w.persist())
         row = _eager_reference(
             per_w,
             ref_filter,
@@ -199,16 +192,13 @@ def completeness_drift(
         ),
     )
     delta = F.col("null_ratio") - F.col("ref_ratio")
-    return attach_persisted(
-        stacked.select(
-            "window_id",
-            "column",
-            F.round("null_ratio", 6).alias("null_ratio"),
-            F.round("ref_ratio", 6).alias("ref_ratio"),
-            F.round(delta, 6).alias("delta"),
-            F.when(delta > threshold, F.lit("fail")).otherwise(F.lit("pass")).alias("verdict"),
-        ),
-        *persisted,
+    return stacked.select(
+        "window_id",
+        "column",
+        F.round("null_ratio", 6).alias("null_ratio"),
+        F.round("ref_ratio", 6).alias("ref_ratio"),
+        F.round(delta, 6).alias("delta"),
+        F.when(delta > threshold, F.lit("fail")).otherwise(F.lit("pass")).alias("verdict"),
     )
 
 
@@ -316,7 +306,7 @@ def conditional_completeness_drift(
         F.isnull(F.col(target_col)).cast("double").alias("_in"),
         ref_filter.alias("_is_ref"),
     )
-    stats = (
+    stats = scoped(
         base.filter("_is_ref")
         .groupBy("_s")
         .agg(F.count(F.lit(1)).alias("_n"), F.sum("_in").alias("_nn"))
@@ -343,7 +333,7 @@ def conditional_completeness_drift(
         .select(F.lit(OTHER).alias("_s"), "_rr")
     )
     refs = ref_known.unionByName(ref_other)
-    curc = (
+    curc = scoped(
         base.filter(~F.col("_is_ref"))
         .join(F.broadcast(top.withColumn("_known", F.lit(True))), "_s", "left")
         .select(
@@ -378,7 +368,7 @@ def conditional_completeness_drift(
             .alias("verdict"),
         )
     )
-    return attach_persisted(out, stats, curc)
+    return out
 
 
 def uniqueness_drift(
@@ -430,10 +420,8 @@ def uniqueness_drift(
     per_w = df.groupBy(F.col(window_col).alias("window_id")).agg(
         F.count(F.lit(1)).alias("n_rows"), nd.alias("n_distinct")
     )
-    persisted = []
     if ref_ratio is None:
-        per_w = per_w.persist()
-        persisted = [per_w]
+        per_w = scoped(per_w.persist())
         ref_ratio = float(
             _eager_reference(
                 per_w,
@@ -444,18 +432,15 @@ def uniqueness_drift(
         )
     r = F.lit(float(ref_ratio))
     ratio = F.col("n_distinct") / F.col("n_rows")
-    return attach_persisted(
-        per_w.select(
-            "window_id",
-            "n_rows",
-            "n_distinct",
-            F.round(ratio, 6).alias("ratio"),
-            F.round(r, 6).alias("ref_ratio"),
-            F.when(r - ratio > threshold, F.lit("fail"))
-            .otherwise(F.lit("pass"))
-            .alias("verdict"),
-        ),
-        *persisted,
+    return per_w.select(
+        "window_id",
+        "n_rows",
+        "n_distinct",
+        F.round(ratio, 6).alias("ratio"),
+        F.round(r, 6).alias("ref_ratio"),
+        F.when(r - ratio > threshold, F.lit("fail"))
+        .otherwise(F.lit("pass"))
+        .alias("verdict"),
     )
 
 
@@ -592,7 +577,7 @@ def correlation_drift(
     a = F.col(col_a).cast("double")
     b = F.col(col_b).cast("double")
     both = df.filter(a.isNotNull() & b.isNotNull())
-    m = (
+    m = scoped(
         both.groupBy(F.col(window_col).alias("window_id"))
         .agg(
             F.count(F.lit(1)).cast("double").alias("n"),
@@ -632,18 +617,15 @@ def correlation_drift(
     sab, saa, sbb = F.col("sab"), F.col("saa"), F.col("sbb")
     corr = _corr(n, sa, sb, sab, saa, sbb)
     diff = F.abs(corr - F.lit(ref_corr))
-    return attach_persisted(
-        m.select(
-            "window_id",
-            n.cast("long").alias("n"),
-            corr.alias("corr"),
-            F.lit(ref_corr).alias("ref_corr"),
-            diff.alias("abs_diff"),
-            F.when(corr.isNull() | (diff > max_abs_diff), "fail")
-            .otherwise("pass")
-            .alias("verdict"),
-        ),
-        m,
+    return m.select(
+        "window_id",
+        n.cast("long").alias("n"),
+        corr.alias("corr"),
+        F.lit(ref_corr).alias("ref_corr"),
+        diff.alias("abs_diff"),
+        F.when(corr.isNull() | (diff > max_abs_diff), "fail")
+        .otherwise("pass")
+        .alias("verdict"),
     )
 
 
@@ -672,7 +654,7 @@ def categorical_association(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     Oracle twin: q_mutual_information."""
     a = F.col(col_a).cast("string")
     b = F.col(col_b).cast("string")
-    joint = (
+    joint = scoped(
         df.filter(a.isNotNull() & b.isNotNull())
         .groupBy(a.alias("a"), b.alias("b"))
         .agg(F.count(F.lit(1)).cast("double").alias("nab"))
@@ -708,7 +690,7 @@ def categorical_association(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
             kmin > 1, F.sqrt(chi2 / (F.max(t) * (kmin - 1).cast("double")))
         ).alias("cramers_v"),
     )
-    return attach_persisted(out, joint)
+    return out
 
 
 def association_drift(
@@ -757,7 +739,7 @@ def association_drift(
         c = F.coalesce(F.col(col).cast("string"), F.lit("(null)"))
         return F.when(c.isin([str(x) for x in cats]), c).otherwise(F.lit("(other)"))
 
-    jw = (
+    jw = scoped(
         df.select(
             F.col(window_col).alias("window_id"),
             _mapped(col_a, cats_a).alias("a"),
@@ -841,7 +823,7 @@ def association_drift(
         "cramers_v",
         F.when(diff > max_abs_diff, "fail").otherwise("pass").alias("verdict"),
     )
-    return attach_persisted(out, jw)
+    return out
 
 
 def benford_digit_counts(df: DataFrame, col: str) -> DataFrame:
@@ -875,9 +857,9 @@ def benford_digit_counts(df: DataFrame, col: str) -> DataFrame:
     for k in range(1, 9):
         mag = F.when(x >= float(10 ** k), float(10 ** k)).otherwise(mag)
     # the digit-count frame is the shared child of the totals aggregate and
-    # the grid join (unpersisted, the raw scan would execute twice); the
-    # release obligation rides on the returned frame
-    d = (
+    # the grid join (unpersisted, the raw scan would execute twice); it
+    # lives in the caller's persist scope
+    d = scoped(
         df.filter(x.isNotNull() & (x >= 1.0) & (x < 1e9))
         .select(F.floor(x / mag).cast("long").alias("digit"))
         .groupBy("digit")
@@ -898,15 +880,12 @@ def benford_digit_counts(df: DataFrame, col: str) -> DataFrame:
         )
     )
     o, n, p = F.col("o"), F.col("n"), F.col("p")
-    return attach_persisted(
-        g.select(
-            "digit",
-            o.cast("long").alias("observed"),
-            (o / n).alias("observed_p"),
-            p.alias("benford_p"),
-            ((o - n * p) * (o - n * p) / (n * p)).alias("chi2_term"),
-        ),
-        d,
+    return g.select(
+        "digit",
+        o.cast("long").alias("observed"),
+        (o / n).alias("observed_p"),
+        p.alias("benford_p"),
+        ((o - n * p) * (o - n * p) / (n * p)).alias("chi2_term"),
     )
 
 
@@ -948,7 +927,7 @@ def referential_drift(
     flagged = fact.join(
         F.broadcast(keys), fact[key_col] == F.col("_dk"), "left"
     )
-    per_w = (
+    per_w = scoped(
         flagged.groupBy(F.col(window_col).alias("window_id"))
         .agg(
             F.count(F.lit(1)).cast("double").alias("n"),
@@ -964,16 +943,13 @@ def referential_drift(
     )
     ref_rate = float(ref_row["orphans"]) / max(float(ref_row["n"]), 1.0)
     rate = F.col("orphans") / F.col("n")
-    return attach_persisted(
-        per_w.select(
-            "window_id",
-            F.col("n").cast("long").alias("n"),
-            F.col("orphans").cast("long").alias("orphans"),
-            rate.alias("rate"),
-            F.lit(ref_rate).alias("ref_rate"),
-            F.when(rate - F.lit(ref_rate) > max_abs_jump, "fail")
-            .otherwise("pass")
-            .alias("verdict"),
-        ),
-        per_w,
+    return per_w.select(
+        "window_id",
+        F.col("n").cast("long").alias("n"),
+        F.col("orphans").cast("long").alias("orphans"),
+        rate.alias("rate"),
+        F.lit(ref_rate).alias("ref_rate"),
+        F.when(rate - F.lit(ref_rate) > max_abs_jump, "fail")
+        .otherwise("pass")
+        .alias("verdict"),
     )

@@ -37,6 +37,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from al_drift_detection_spark.persist import scoped
+
 STORE_SCHEMA = "window long, bin int, n long, _snapshot int"
 
 
@@ -225,7 +227,7 @@ def histogram_drift(
     # window census) — when the caller builds it inline from raw rows the
     # unpersisted child would re-scan the table per branch (CLAUDE.md
     # shared-child rule). The frame is O(windows × bins) — always safe to pin.
-    hist = hist.persist()
+    hist = scoped(hist.persist())
     ref = (
         hist.filter(F.col("window") < ref_windows)
         .groupBy("bin")
@@ -283,6 +285,5 @@ def histogram_drift(
             F.when(F.col("statistic") > F.col("threshold"), "fail").otherwise("pass"),
         )
     )
-    from al_drift_detection_spark.functions._persist import attach_persisted
 
-    return attach_persisted(out, hist)
+    return out

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from al_drift_detection_spark.persist import scoped
+
 
 def kmv_sketches(
     df: DataFrame, key_col: str, window_col: str, k: int = 1024
@@ -94,12 +96,10 @@ def kmv_pair_overlap(
 
     The sketch frame is consumed THREE times (A side, B side, window list)
     and its child is the expensive distinct + two-stage rank over raw data
-    — persisted here with the release obligation on the returned frame
-    (the CLAUDE.md shared-child rule; without it the whole sketch pipeline
-    executes three times)."""
-    from al_drift_detection_spark.functions._persist import attach_persisted
+    — persisted here into the caller's persist scope (the shared-child
+    rule; without it the whole sketch pipeline executes three times)."""
 
-    sketches = sketches.persist()
+    sketches = scoped(sketches.persist())
     a = sketches.select(F.col(window_col).alias("_p"), "h", F.lit(1).alias("_a"))
     b = sketches.select(
         (F.col(window_col) - 1).alias("_p"), "h", F.lit(1).alias("_b")
@@ -133,7 +133,7 @@ def kmv_pair_overlap(
             (F.col("n_both") / F.col("k_used")).alias("jaccard_est"),
         )
     )
-    return attach_persisted(out, sketches)
+    return out
 
 
 def exact_pair_overlap(

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
-from al_drift_detection_spark.functions._persist import attach_persisted, release  # noqa: F401
+from al_drift_detection_spark.persist import scoped
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -210,7 +210,7 @@ def cosine_near_dup_pairs(
     """Embedding-cosine near-duplicate pairs via LSH buckets: bucket-local
     self-join (candidates), exact cosine filter ≥ threshold. Signatures are
     persisted so the Arrow-batch matmul runs once, not once per join side."""
-    sigs = hyperplane_signatures(df, dim, n_planes, seed, vec_col, id_col).persist()
+    sigs = scoped(hyperplane_signatures(df, dim, n_planes, seed, vec_col, id_col).persist())
     a, b = sigs.alias("a"), sigs.alias("b")
     cand = a.join(
         b,
@@ -222,8 +222,7 @@ def cosine_near_dup_pairs(
         F.col(f"b.{id_col}").alias("b_id"),
         F.round(cos, 4).alias("cos"),
     ).filter(F.col("cos") >= threshold)
-    # caller releases the persisted signature frame (functions._persist)
-    return attach_persisted(out, sigs)
+    return out
 
 
 def ivf_assign(

@@ -39,6 +39,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from al_drift_detection_spark.persist import scoped
+
 OTHER = "(other)"
 
 
@@ -145,7 +147,6 @@ def sliced_psi_drift(
         ref_filter.alias("_is_ref"),
     ).filter(F.col("_v").isNotNull())
 
-    from al_drift_detection_spark.functions._persist import attach_persisted
 
     # reference-derived constants: bin range + slice universe. ONE ref scan
     # builds both — per-slice (count, min, max) is a tiny persisted frame
@@ -153,7 +154,7 @@ def sliced_psi_drift(
     # naive shape (ref.agg(min,max) + ref.groupBy.limit) scans the raw
     # reference twice (the CLAUDE.md shared-child rule — at this
     # operator's deployment scale the ref windows are billions of rows).
-    stats = (
+    stats = scoped(
         base.filter("_is_ref")
         .groupBy("_s")
         .agg(
@@ -196,7 +197,7 @@ def sliced_psi_drift(
     # bins) counts frame; ref counts, current counts, AND the window list
     # all fold from it (unpersisted, each consumer would re-scan the raw
     # table through the binning joins — three scans instead of one)
-    counts = (
+    counts = scoped(
         binned.groupBy("_is_ref", "_w", "_s", "_b")
         .agg(F.count(F.lit(1)).cast("double").alias("_n"))
         .persist()
@@ -255,4 +256,4 @@ def sliced_psi_drift(
         .otherwise("pass")
         .alias("verdict"),
     )
-    return attach_persisted(out, stats, counts)
+    return out

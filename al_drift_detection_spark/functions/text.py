@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from al_drift_detection_spark.persist import scoped
+
 # tiny per-language stopword sets for the n-gram/stopword language heuristic
 LANG_STOPWORDS = {
     "en": ["the", "and", "of", "to", "a", "in", "is", "it", "that", "was"],
@@ -386,15 +388,13 @@ def tfidf_top_terms(
     """
     from pyspark.sql.window import Window
 
-    from al_drift_detection_spark.functions._persist import attach_persisted
-
     tok = df.select(F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("term"))
     # tf feeds BOTH the per-term document-frequency aggregate (broadcast
     # build side) and the scoring join probe side — a broadcast build cannot
     # reuse the probe's exchange, so without the persist the tokenize +
     # explode + tf aggregation (the dominant stage) executes twice (verified:
-    # 2 Generate-explode nodes, 0 ReusedExchange). Caller releases via
-    # functions._persist.release after materializing.
+    # 2 Generate-explode nodes, 0 ReusedExchange). It lives in the caller's
+    # persist scope.
     #
     # Keyed by id BEFORE the aggregate (r8): hash(id) satisfies the
     # (id, term) clustering the aggregate requires, so the agg's own
@@ -410,7 +410,7 @@ def tfidf_top_terms(
     # bytes are ~unchanged (real corpora have tf ≈ 1 for most (doc, term)
     # pairs, so the pre-shuffle partial agg the old shape got was not
     # reducing anything).
-    tf = (
+    tf = scoped(
         tok.repartition(F.col("id"))
         .groupBy("id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -437,7 +437,7 @@ def tfidf_top_terms(
         .filter(F.col("rk") <= k)
         .select(id_col, "term", "tfidf", "rk")
     )
-    return attach_persisted(out, tf)
+    return out
 
 
 def bigram_nll(
@@ -472,8 +472,8 @@ def bigram_nll(
     ≤ (V+1)² rows however large the reference. The vocab frame is
     consumed FOUR times (left+right mapping joins in both the model and
     scoring passes) and the ref bigram counts twice (model + left
-    totals) — both persisted with the release obligation on the returned
-    frame (the CLAUDE.md shared-child rule: unpersisted, the raw
+    totals) — both persisted in the caller's persist scope (the
+    shared-child rule: unpersisted, the raw
     explode+rank vocab pipeline would execute four times). Documents with fewer than
     2 tokens have no bigrams and are absent from the output (score only
     what the model defines). Output: (id_col, n_bigrams, nll, ppl) with
@@ -484,9 +484,8 @@ def bigram_nll(
     base = df.select(
         F.col(id_col).alias("_id"), toks.alias("_t"), ref_filter.alias("_is_ref")
     )
-    from al_drift_detection_spark.functions._persist import attach_persisted
 
-    vocab = (
+    vocab = scoped(
         base.filter("_is_ref")
         .select(F.explode("_t").alias("tok"))
         .groupBy("tok")
@@ -526,7 +525,7 @@ def bigram_nll(
         )
 
     ref_pairs = _pairs(base.filter("_is_ref"))
-    cab = (
+    cab = scoped(
         ref_pairs.groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("_cab"))
         .persist()
@@ -559,13 +558,9 @@ def bigram_nll(
             F.avg(-F.log(prob)).alias("_nll"),
         )
     )
-    return attach_persisted(
-        scored.select(
-            F.col("_id").alias(id_col),
-            "n_bigrams",
-            F.round("_nll", 6).alias("nll"),
-            F.round(F.exp("_nll"), 4).alias("ppl"),
-        ),
-        vocab,
-        cab,
+    return scored.select(
+        F.col("_id").alias(id_col),
+        "n_bigrams",
+        F.round("_nll", 6).alias("nll"),
+        F.round(F.exp("_nll"), 4).alias("ppl"),
     )

@@ -12,6 +12,7 @@ from al_drift_detection_spark import metrics as M
 from al_drift_detection_spark.functions import dedup as D
 from al_drift_detection_spark.functions import text as T
 from al_drift_detection_spark.operators.registry import _t, register
+from al_drift_detection_spark.persist import persist_scope, scoped
 
 # deterministic pseudo-prediction used by all metric queries: pred = vec_id % 10
 _PRED_SQL = "CAST(vec_id % 10 AS BIGINT)"
@@ -499,7 +500,6 @@ def q_js_fixed_bins(spark: SparkSession, sf: str) -> DataFrame:
     "mean|sorted−sorted| identity)",
 )
 def q_wasserstein(spark: SparkSession, sf: str) -> DataFrame:
-    from al_drift_detection_spark.functions._persist import attach_persisted
     from al_drift_detection_spark.operators.windows import global_cumulative
 
     s = _t(spark, sf, "events").select(
@@ -516,9 +516,9 @@ def q_wasserstein(spark: SparkSession, sf: str) -> DataFrame:
     # vs ~3.5-4.3 s without — a small toy-scale pessimization (the 100k-row
     # scan is cheaper than the cache write) accepted for the target-scale
     # shape, where re-scanning the full events table 3x is the absurdity
-    # and g stays bounded (the q_tumbling_vote precedent). Released via
-    # functions._persist.
-    g = (
+    # and g stays bounded (the q_tumbling_vote precedent). Freed by the
+    # caller's persist scope.
+    g = scoped(
         s.groupBy("v")
         .agg(F.sum("r").alias("dr"), F.sum("c").alias("dc"))
         .persist()
@@ -555,7 +555,7 @@ def q_wasserstein(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("w1")
         )
     )
-    return attach_persisted(out, g)
+    return out
 
 
 @register(
@@ -960,30 +960,33 @@ def q_incremental_dedup_pairs(spark: SparkSession, sf: str) -> DataFrame:
             docs.filter(F.col("doc_id") % 2 == 1), store, k=32, bands=8
         )
         inc = b1.unionByName(b2).select("a_id", "b_id", "est_jaccard")
-        full = D.minhash_lsh_pairs(docs, k=32, bands=8)
-        return _parity_with_full(inc, full, ["a_id", "b_id", "est_jaccard"])
+        return _parity_with_full(
+            inc, lambda: D.minhash_lsh_pairs(docs, k=32, bands=8),
+            ["a_id", "b_id", "est_jaccard"],
+        )
     finally:
         shutil.rmtree(store.rsplit("/", 1)[0], ignore_errors=True)
 
 
-def _parity_with_full(inc, full, keys):
+def _parity_with_full(inc, full_fn, keys):
     """Self-verification shared by the incremental dedup entries: the union
-    of per-batch pair outputs must equal the one-shot recompute exactly
-    (full-outer presence check; exceptAll trips a Catalyst
-    attribute-binding bug on this plan shape in Spark 4.1). Returns `inc`
-    with the boolean parity_with_full column the gate hashes."""
+    of per-batch pair outputs must equal the one-shot recompute `full_fn()`
+    exactly (full-outer presence check; exceptAll trips a Catalyst
+    attribute-binding bug on this plan shape in Spark 4.1). The recompute
+    runs in a nested persist scope, freed once the check is counted.
+    Returns `inc` with the boolean parity_with_full column the gate hashes."""
     ic = inc.groupBy(keys).agg(F.count(F.lit(1)).alias("n_inc"))
-    fc = full.groupBy(keys).agg(F.count(F.lit(1)).alias("n_full"))
-    mismatch = (
-        ic.join(fc, keys, "full_outer")
-        .filter(
-            F.col("n_inc").isNull()
-            | F.col("n_full").isNull()
-            | (F.col("n_inc") != F.col("n_full"))
+    with persist_scope():
+        fc = full_fn().groupBy(keys).agg(F.count(F.lit(1)).alias("n_full"))
+        mismatch = (
+            ic.join(fc, keys, "full_outer")
+            .filter(
+                F.col("n_inc").isNull()
+                | F.col("n_full").isNull()
+                | (F.col("n_inc") != F.col("n_full"))
+            )
+            .count()
         )
-        .count()
-    )
-    D.release(full)
     return inc.withColumn("parity_with_full", F.lit(mismatch == 0))
 
 
@@ -1015,8 +1018,10 @@ def q_incremental_simhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
             docs.filter(F.col("doc_id") % 2 == 1), store, max_distance=3, bands=4
         )
         inc = b1.unionByName(b2).select("a_id", "b_id", "hamming")
-        full = D.simhash_pairs(docs, max_distance=3, bands=4)
-        return _parity_with_full(inc, full, ["a_id", "b_id", "hamming"])
+        return _parity_with_full(
+            inc, lambda: D.simhash_pairs(docs, max_distance=3, bands=4),
+            ["a_id", "b_id", "hamming"],
+        )
     finally:
         shutil.rmtree(store.rsplit("/", 1)[0], ignore_errors=True)
 
@@ -1081,8 +1086,9 @@ def q_simhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     docs = _t(spark, sf, "documents")
-    pairs = D.ngram_jaccard_pairs(docs, threshold=0.04)
-    return D.dedup_clusters(docs.select("doc_id"), pairs)
+    return D.dedup_clusters(
+        docs.select("doc_id"), lambda: D.ngram_jaccard_pairs(docs, threshold=0.04)
+    )
 
 
 @register(
@@ -1096,8 +1102,9 @@ def q_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q_minhash_lsh_clusters(spark: SparkSession, sf: str) -> DataFrame:
     docs = _t(spark, sf, "documents")
-    pairs = D.minhash_lsh_pairs(docs, threshold=0.35)
-    return D.dedup_clusters(docs.select("doc_id"), pairs)
+    return D.dedup_clusters(
+        docs.select("doc_id"), lambda: D.minhash_lsh_pairs(docs, threshold=0.35)
+    )
 
 
 def _inference_oracle() -> str:
@@ -1568,7 +1575,6 @@ def q_crossing_report(spark: SparkSession, sf: str) -> DataFrame:
     "(pytest vs the classic rank-based U-formula on tie-free data)",
 )
 def q_cvm_drift(spark: SparkSession, sf: str) -> DataFrame:
-    from al_drift_detection_spark.functions._persist import attach_persisted
     from al_drift_detection_spark.operators.windows import global_cumulative
 
     s = _t(spark, sf, "events").select(
@@ -1576,7 +1582,7 @@ def q_cvm_drift(spark: SparkSession, sf: str) -> DataFrame:
         F.when(F.col("event_id") % 2 == 0, 1.0).otherwise(0.0).alias("r"),
         F.when(F.col("event_id") % 2 == 1, 1.0).otherwise(0.0).alias("c"),
     )
-    g = (
+    g = scoped(
         s.groupBy("v")
         .agg(F.sum("r").alias("dr"), F.sum("c").alias("dc"))
         .persist()  # same rationale as q_wasserstein: events read ONCE
@@ -1600,7 +1606,7 @@ def q_cvm_drift(spark: SparkSession, sf: str) -> DataFrame:
             6,
         ).alias("cvm_stat")
     )
-    return attach_persisted(out, g)
+    return out
 
 
 @register(
@@ -1793,21 +1799,17 @@ def q_ddm_error_rate(spark: SparkSession, sf: str) -> DataFrame:
             F.sum((F.col("value") > 150).cast("long")).alias("err"),
         )
     )
-    from al_drift_detection_spark.functions._persist import propagate_persisted
 
     out = ddm_levels(series, "window_id", "n", "err")
-    return propagate_persisted(
-        out.select(
-            "window_id",
-            "n",
-            "err",
-            F.round("p_cum", 6).alias("p_cum"),
-            F.round("s_cum", 6).alias("s_cum"),
-            F.round("p_min", 6).alias("p_min"),
-            F.round("s_min", 6).alias("s_min"),
-            "level",
-        ),
-        out,
+    return out.select(
+        "window_id",
+        "n",
+        "err",
+        F.round("p_cum", 6).alias("p_cum"),
+        F.round("s_cum", 6).alias("s_cum"),
+        F.round("p_min", 6).alias("p_min"),
+        F.round("s_min", 6).alias("s_min"),
+        "level",
     )
 
 
@@ -2047,7 +2049,6 @@ def q_frequent_items_drift(spark: SparkSession, sf: str) -> DataFrame:
     "behavior)",
 )
 def q_ad_drift(spark: SparkSession, sf: str) -> DataFrame:
-    from al_drift_detection_spark.functions._persist import attach_persisted
     from al_drift_detection_spark.operators.windows import global_cumulative
 
     s = _t(spark, sf, "events").select(
@@ -2055,7 +2056,7 @@ def q_ad_drift(spark: SparkSession, sf: str) -> DataFrame:
         F.when(F.col("event_id") % 2 == 0, 1.0).otherwise(0.0).alias("r"),
         F.when(F.col("event_id") % 2 == 1, 1.0).otherwise(0.0).alias("c"),
     )
-    g = (
+    g = scoped(
         s.groupBy("v")
         .agg(F.sum("r").alias("dr"), F.sum("c").alias("dc"))
         .persist()  # events read ONCE (q_wasserstein rationale)
@@ -2091,7 +2092,7 @@ def q_ad_drift(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("ad_stat")
         )
     )
-    return attach_persisted(out, g)
+    return out
 
 
 @register(
@@ -2134,7 +2135,7 @@ def q_ad_drift(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q_ewma_control(spark: SparkSession, sf: str) -> DataFrame:
     lam, big_l, ref_w = 0.2, 3.0, 4
-    s = (
+    s = scoped(
         _t(spark, sf, "events")
         .groupBy(F.floor(F.col("event_id") / 500).cast("long").alias("window_id"))
         .agg(F.avg("value").alias("x"))
@@ -2177,12 +2178,11 @@ def q_ewma_control(spark: SparkSession, sf: str) -> DataFrame:
         F.round(F.col("mu0") + band, 6).alias("ucl"),
         F.round(F.col("mu0") - band, 6).alias("lcl"),
     )
-    from al_drift_detection_spark.functions._persist import attach_persisted
 
     out = lim.withColumn(
         "signal", (F.col("z") > F.col("ucl")) | (F.col("z") < F.col("lcl"))
     )
-    return attach_persisted(out, s)
+    return out
 
 
 @register(
@@ -2378,22 +2378,18 @@ def q_metric_anomaly(spark: SparkSession, sf: str) -> DataFrame:
             F.when(v6.between(b6, F.col("threshold")), "pass").otherwise("fail")
         )
     )
-    from al_drift_detection_spark.functions._persist import propagate_persisted
 
-    return propagate_persisted(
-        out.select(
-            "part",
-            "column",
-            "metric",
-            v6.alias("value"),
-            "strategy",
-            b6.alias("baseline"),
-            stat6.alias("stat"),
-            "threshold",
-            "n_hist",
-            verdict6.alias("verdict"),
-        ),
-        out,
+    return out.select(
+        "part",
+        "column",
+        "metric",
+        v6.alias("value"),
+        "strategy",
+        b6.alias("baseline"),
+        stat6.alias("stat"),
+        "threshold",
+        "n_hist",
+        verdict6.alias("verdict"),
     )
 
 
@@ -2524,15 +2520,11 @@ def q_seasonal_anomaly(spark: SparkSession, sf: str) -> DataFrame:
         )
         .otherwise(F.when(v6 == b6, "pass").otherwise("fail"))
     )
-    from al_drift_detection_spark.functions._persist import propagate_persisted
 
-    return propagate_persisted(
-        out.select(
-            "part", "column", "metric", v6.alias("value"), "strategy",
-            b6.alias("baseline"), stat6.alias("stat"), "threshold",
-            "n_hist", verdict6.alias("verdict"),
-        ),
-        out,
+    return out.select(
+        "part", "column", "metric", v6.alias("value"), "strategy",
+        b6.alias("baseline"), stat6.alias("stat"), "threshold",
+        "n_hist", verdict6.alias("verdict"),
     )
 
 
@@ -2782,7 +2774,6 @@ def q_histogram_quantiles(spark: SparkSession, sf: str) -> DataFrame:
     "tests/test_histograms.py",
 )
 def q_histogram_drift(spark: SparkSession, sf: str) -> DataFrame:
-    from al_drift_detection_spark.functions._persist import propagate_persisted
     from al_drift_detection_spark.functions.histograms import (
         histogram_drift,
         window_histograms,
@@ -2794,15 +2785,12 @@ def q_histogram_drift(spark: SparkSession, sf: str) -> DataFrame:
     h = window_histograms(ev, "value", "w", 0.0, 200.0, n_bins=100)
     out = histogram_drift(h, ref_windows=5, n_bins=100)
     s6 = F.round("statistic", 6)
-    return propagate_persisted(
-        out.select(
-            "window",
-            "kernel",
-            s6.alias("statistic"),
-            "threshold",
-            F.when(s6 > F.col("threshold"), "fail").otherwise("pass").alias("verdict"),
-        ),
-        out,
+    return out.select(
+        "window",
+        "kernel",
+        s6.alias("statistic"),
+        "threshold",
+        F.when(s6 > F.col("threshold"), "fail").otherwise("pass").alias("verdict"),
     )
 
 
@@ -2864,7 +2852,6 @@ def q_histogram_drift(spark: SparkSession, sf: str) -> DataFrame:
     "pinned in tests/test_health.py",
 )
 def q_corr_drift(spark: SparkSession, sf: str) -> DataFrame:
-    from al_drift_detection_spark.functions._persist import propagate_persisted
     from al_drift_detection_spark.functions.health import correlation_drift
 
     li = _t(spark, sf, "lineitem").select(
@@ -2877,19 +2864,16 @@ def q_corr_drift(spark: SparkSession, sf: str) -> DataFrame:
         ref_filter=F.col("window_id") < 4, max_abs_diff=0.05,
     )
     c6, r6, d6 = F.round("corr", 6), F.round("ref_corr", 6), F.round("abs_diff", 6)
-    return propagate_persisted(
-        out.select(
-            "window_id",
-            "n",
-            c6.alias("corr"),
-            r6.alias("ref_corr"),
-            d6.alias("abs_diff"),
-            F.when(c6.isNull(), "fail")
-            .when(d6 > 0.05, "fail")
-            .otherwise("pass")
-            .alias("verdict"),
-        ),
-        out,
+    return out.select(
+        "window_id",
+        "n",
+        c6.alias("corr"),
+        r6.alias("ref_corr"),
+        d6.alias("abs_diff"),
+        F.when(c6.isNull(), "fail")
+        .when(d6 > 0.05, "fail")
+        .otherwise("pass")
+        .alias("verdict"),
     )
 
 
@@ -2927,7 +2911,6 @@ def q_corr_drift(spark: SparkSession, sf: str) -> DataFrame:
     "histograms in tests/test_kernels.py)",
 )
 def q_hist_distances(spark: SparkSession, sf: str) -> DataFrame:
-    from al_drift_detection_spark.functions._persist import attach_persisted
 
     b = _t(spark, sf, "events").select(
         F.when(F.col("event_id") % 2 == 0, "ref").otherwise("cur").alias("side"),
@@ -2937,7 +2920,9 @@ def q_hist_distances(spark: SparkSession, sf: str) -> DataFrame:
     )
     # the bin-count frame feeds both the side totals and the proportion join
     # (the shared-child rule — unpersisted, the raw scan executes twice)
-    c = b.groupBy("side", "bin").agg(F.count(F.lit(1)).cast("double").alias("n")).persist()
+    c = scoped(
+        b.groupBy("side", "bin").agg(F.count(F.lit(1)).cast("double").alias("n")).persist()
+    )
     t = c.groupBy("side").agg(F.sum("n").alias("tot"))
     p = (
         c.join(t, "side")
@@ -2954,15 +2939,12 @@ def q_hist_distances(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     sp, sc = F.sqrt(F.col("pr")), F.sqrt(F.col("pc"))
-    return attach_persisted(
-        p.agg(
-            F.round(F.sqrt(0.5 * F.sum((sp - sc) * (sp - sc))), 6).alias("hellinger"),
-            F.round(0.5 * F.sum(F.abs(F.col("pr") - F.col("pc"))), 6).alias(
-                "total_variation"
-            ),
-            F.round(F.sum(F.sqrt(F.col("pr") * F.col("pc"))), 6).alias("bhattacharyya"),
+    return p.agg(
+        F.round(F.sqrt(0.5 * F.sum((sp - sc) * (sp - sc))), 6).alias("hellinger"),
+        F.round(0.5 * F.sum(F.abs(F.col("pr") - F.col("pc"))), 6).alias(
+            "total_variation"
         ),
-        c,
+        F.round(F.sum(F.sqrt(F.col("pr") * F.col("pc"))), 6).alias("bhattacharyya"),
     )
 
 
@@ -3009,7 +2991,6 @@ def q_hist_distances(spark: SparkSession, sf: str) -> DataFrame:
     "pinned in tests/test_changepoint.py)",
 )
 def q_cusum(spark: SparkSession, sf: str) -> DataFrame:
-    from al_drift_detection_spark.functions._persist import propagate_persisted
     from al_drift_detection_spark.functions.changepoint import cusum_levels
 
     series = (
@@ -3019,17 +3000,14 @@ def q_cusum(spark: SparkSession, sf: str) -> DataFrame:
     )
     out = cusum_levels(series, "window_id", "x", ref_upto=10, threshold=25.0)
     si, sd = F.round("s_inc", 6), F.round("s_dec", 6)
-    return propagate_persisted(
-        out.select(
-            "window_id",
-            F.round("x", 6).alias("x"),
-            F.round("mu", 6).alias("mu"),
-            F.round("k", 6).alias("k"),
-            si.alias("s_inc"),
-            sd.alias("s_dec"),
-            ((si > 25.0) | (sd > 25.0)).alias("alarm"),
-        ),
-        out,
+    return out.select(
+        "window_id",
+        F.round("x", 6).alias("x"),
+        F.round("mu", 6).alias("mu"),
+        F.round("k", 6).alias("k"),
+        si.alias("s_inc"),
+        sd.alias("s_dec"),
+        ((si > 25.0) | (sd > 25.0)).alias("alarm"),
     )
 
 
@@ -3079,17 +3057,13 @@ def q_cusum(spark: SparkSession, sf: str) -> DataFrame:
     "pinned in tests/test_health.py)",
 )
 def q_mutual_information(spark: SparkSession, sf: str) -> DataFrame:
-    from al_drift_detection_spark.functions._persist import propagate_persisted
     from al_drift_detection_spark.functions.health import categorical_association
 
     out = categorical_association(_t(spark, sf, "documents"), "lang", "source")
-    return propagate_persisted(
-        out.select(
-            "n", "ka", "kb",
-            F.round("mi", 6).alias("mi"),
-            F.round("cramers_v", 6).alias("cramers_v"),
-        ),
-        out,
+    return out.select(
+        "n", "ka", "kb",
+        F.round("mi", 6).alias("mi"),
+        F.round("cramers_v", 6).alias("cramers_v"),
     )
 
 
@@ -3156,7 +3130,6 @@ def q_mutual_information(spark: SparkSession, sf: str) -> DataFrame:
     "in tests/test_health.py",
 )
 def q_association_drift(spark: SparkSession, sf: str) -> DataFrame:
-    from al_drift_detection_spark.functions._persist import propagate_persisted
     from al_drift_detection_spark.functions.health import association_drift
 
     ev = _t(spark, sf, "events").select(
@@ -3178,17 +3151,14 @@ def q_association_drift(spark: SparkSession, sf: str) -> DataFrame:
         F.round("mi", 6), F.round("ref_mi", 6),
         F.round("abs_diff", 6), F.round("cramers_v", 6),
     )
-    return propagate_persisted(
-        out.select(
-            "window_id",
-            "n",
-            m6.alias("mi"),
-            r6.alias("ref_mi"),
-            d6.alias("abs_diff"),
-            v6.alias("cramers_v"),
-            F.when(d6 > 0.05, "fail").otherwise("pass").alias("verdict"),
-        ),
-        out,
+    return out.select(
+        "window_id",
+        "n",
+        m6.alias("mi"),
+        r6.alias("ref_mi"),
+        d6.alias("abs_diff"),
+        v6.alias("cramers_v"),
+        F.when(d6 > 0.05, "fail").otherwise("pass").alias("verdict"),
     )
 
 
@@ -3234,19 +3204,15 @@ def q_association_drift(spark: SparkSession, sf: str) -> DataFrame:
     "tests/test_health.py)",
 )
 def q_benford(spark: SparkSession, sf: str) -> DataFrame:
-    from al_drift_detection_spark.functions._persist import propagate_persisted
     from al_drift_detection_spark.functions.health import benford_digit_counts
 
     out = benford_digit_counts(_t(spark, sf, "lineitem"), "l_extendedprice")
-    return propagate_persisted(
-        out.select(
-            "digit",
-            "observed",
-            F.round("observed_p", 6).alias("observed_p"),
-            F.round("benford_p", 6).alias("benford_p"),
-            F.round("chi2_term", 6).alias("chi2_term"),
-        ),
-        out,
+    return out.select(
+        "digit",
+        "observed",
+        F.round("observed_p", 6).alias("observed_p"),
+        F.round("benford_p", 6).alias("benford_p"),
+        F.round("chi2_term", 6).alias("chi2_term"),
     )
 
 
@@ -3287,7 +3253,6 @@ def q_benford(spark: SparkSession, sf: str) -> DataFrame:
     "tests/test_health.py",
 )
 def q_referential_drift(spark: SparkSession, sf: str) -> DataFrame:
-    from al_drift_detection_spark.functions._persist import propagate_persisted
     from al_drift_detection_spark.functions.health import referential_drift
 
     ev = _t(spark, sf, "events").select(
@@ -3299,16 +3264,13 @@ def q_referential_drift(spark: SparkSession, sf: str) -> DataFrame:
         ref_filter=F.col("window_id") < 2, max_abs_jump=0.05,
     )
     r6, rr6 = F.round("rate", 6), F.round("ref_rate", 6)
-    return propagate_persisted(
-        out.select(
-            "window_id",
-            "n",
-            "orphans",
-            r6.alias("rate"),
-            rr6.alias("ref_rate"),
-            F.when(r6 - rr6 > 0.05, "fail").otherwise("pass").alias("verdict"),
-        ),
-        out,
+    return out.select(
+        "window_id",
+        "n",
+        "orphans",
+        r6.alias("rate"),
+        rr6.alias("ref_rate"),
+        F.when(r6 - rr6 > 0.05, "fail").otherwise("pass").alias("verdict"),
     )
 
 
@@ -3368,7 +3330,6 @@ def q_referential_drift(spark: SparkSession, sf: str) -> DataFrame:
     "tests/test_anomaly.py",
 )
 def q_store_changepoint(spark: SparkSession, sf: str) -> DataFrame:
-    from al_drift_detection_spark.functions._persist import propagate_persisted
     from al_drift_detection_spark.functions.anomaly import store_changepoint
 
     w = F.floor(F.col("event_id") / 500).cast("long")
@@ -3387,19 +3348,16 @@ def q_store_changepoint(spark: SparkSession, sf: str) -> DataFrame:
     )
     out = store_changepoint(hist, delta=0.05, threshold=4.0, min_runs=5)
     pi, pdn = F.round("ph_inc", 6), F.round("ph_dec", 6)
-    return propagate_persisted(
-        out.select(
-            "part",
-            "column",
-            "metric",
-            "run_id",
-            "run_ts",
-            F.round("x", 6).alias("x"),
-            pi.alias("ph_inc"),
-            pdn.alias("ph_dec"),
-            ((pi > 4.0) | (pdn > 4.0)).alias("alarm"),
-        ),
-        out,
+    return out.select(
+        "part",
+        "column",
+        "metric",
+        "run_id",
+        "run_ts",
+        F.round("x", 6).alias("x"),
+        pi.alias("ph_inc"),
+        pdn.alias("ph_dec"),
+        ((pi > 4.0) | (pdn > 4.0)).alias("alarm"),
     )
 
 
@@ -3514,7 +3472,6 @@ def q_cms_point_estimates(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("w", "user_id")
         .agg(F.count(F.lit(1)).alias("_nx"))
     )
-    from al_drift_detection_spark.functions._persist import propagate_persisted
 
     out = est.join(exact, ["w", "user_id"], "left").select(
         "w",
@@ -3523,7 +3480,7 @@ def q_cms_point_estimates(spark: SparkSession, sf: str) -> DataFrame:
         F.coalesce("_nx", F.lit(0)).cast("long").alias("n_exact"),
         (F.col("est") - F.coalesce("_nx", F.lit(0))).cast("long").alias("overcount"),
     )
-    return propagate_persisted(out, est)
+    return out
 
 
 _BLOOM_PARAMS = {"n_bits": 16384, "n_hashes": 5, "win": 4000}
@@ -3846,7 +3803,6 @@ def q_kmv_retention(spark: SparkSession, sf: str) -> DataFrame:
             .alias("key"),
         )
     )
-    from al_drift_detection_spark.functions._persist import propagate_persisted
 
     est = kmv_pair_overlap(kmv_sketches(ev, "key", "w", k=P["k"]), "w", k=P["k"])
     ex = exact_pair_overlap(ev, "key", "w")
@@ -3856,7 +3812,7 @@ def q_kmv_retention(spark: SparkSession, sf: str) -> DataFrame:
         "n_a", "n_b", "n_overlap",
         F.round("jaccard_exact", 6).alias("jaccard_exact"),
     )
-    return propagate_persisted(out, est)
+    return out
 
 
 @register(

@@ -26,6 +26,7 @@ import time
 from pyspark.sql import functions as F
 
 from al_drift_detection_spark import suite as S
+from al_drift_detection_spark.persist import persist_scope, scoped
 from al_drift_detection_spark.session import get_spark
 
 
@@ -329,7 +330,6 @@ def main(argv: list[str] | None = None) -> int:
         import os as _os
 
         from al_drift_detection_spark.crossings import crossing_report, load_drifts_txt
-        from al_drift_detection_spark.functions._persist import release
         from al_drift_detection_spark.orbits import NON_FEATURE_COLS
         from al_drift_detection_spark.sources import read_orbit_csvs
 
@@ -357,26 +357,26 @@ def main(argv: list[str] | None = None) -> int:
             # 470-485 builds each set's file list from drifts_set{i}.txt);
             # crossing_report's drift-map join applies that restriction
             dm = load_drifts_txt(spark, drifts_path, orbit_col="ORBIT")
-            report = crossing_report(
-                corpus, dm,
-                feature_cols=feats,
-                orbit_col="ORBIT",
-                order_col=args.orbit_order_col,
-                label_col=args.label_col,
-                run=args.smooth_run,
-                gap=args.smooth_gap,
-            )
-            for name in ("splits", "predictions", "confusion", "prf", "accuracy", "sdi"):
-                report[name].write.mode("overwrite").parquet(
-                    f"{args.out}/crossing_{name}{sfx}"
+            with persist_scope():
+                report = crossing_report(
+                    corpus, dm,
+                    feature_cols=feats,
+                    orbit_col="ORBIT",
+                    order_col=args.orbit_order_col,
+                    label_col=args.label_col,
+                    run=args.smooth_run,
+                    gap=args.smooth_gap,
                 )
-            n_rows = report["predictions"].count()
-            test_acc = (
-                report["accuracy"]
-                .filter((F.col("scope_type") == "split") & (F.col("scope") == "test"))
-                .collect()
-            )
-            release(report["predictions"])
+                for name in ("splits", "predictions", "confusion", "prf", "accuracy", "sdi"):
+                    report[name].write.mode("overwrite").parquet(
+                        f"{args.out}/crossing_{name}{sfx}"
+                    )
+                n_rows = report["predictions"].count()
+                test_acc = (
+                    report["accuracy"]
+                    .filter((F.col("scope_type") == "split") & (F.col("scope") == "test"))
+                    .collect()
+                )
             set_summaries.append({
                 "set": i,
                 "rows": n_rows,
@@ -612,13 +612,11 @@ def main(argv: list[str] | None = None) -> int:
             ser = frames[0]
             for f in frames[1:]:
                 ser = ser.unionByName(f)
-            tr = trend_verdicts(ser, min_runs=5)
-            tr.orderBy("column", "metric").write.mode("overwrite").parquet(
-                f"{args.out}/stream_trend"
-            )
-            from al_drift_detection_spark.functions._persist import release
-
-            release(tr)
+            with persist_scope():
+                tr = trend_verdicts(ser, min_runs=5)
+                tr.orderBy("column", "metric").write.mode("overwrite").parquet(
+                    f"{args.out}/stream_trend"
+                )
         print(json.dumps({
             "mode": "stream", "windows": n_windows, "tables": counts,
             "wall_sec": round(time.perf_counter() - t0, 2), "out": args.out,
@@ -705,21 +703,15 @@ def main(argv: list[str] | None = None) -> int:
             # against exactly the retained window (this run's rows are
             # excluded from its own history either way)
             mstore.expire(spark, keep_last_runs=args.store_compact_keep)
-        verd = mstore.verdicts(cur, args.run_id)
-        from al_drift_detection_spark.functions._persist import (
-            propagate_persisted,
-            release,
-        )
-
-        if args.seasonal_period:
-            seas = mstore.seasonal_verdicts(
-                cur, args.run_id, run_ts, args.seasonal_period
-            )
-            verd = propagate_persisted(verd.unionByName(seas), verd, seas)
-        verd.orderBy("strategy", "part", "column", "metric").write.mode(
-            "overwrite"
-        ).parquet(f"{args.out}/metric_anomalies")
-        release(verd)
+        with persist_scope():
+            verd = mstore.verdicts(cur, args.run_id)
+            if args.seasonal_period:
+                verd = verd.unionByName(mstore.seasonal_verdicts(
+                    cur, args.run_id, run_ts, args.seasonal_period
+                ))
+            verd.orderBy("strategy", "part", "column", "metric").write.mode(
+                "overwrite"
+            ).parquet(f"{args.out}/metric_anomalies")
         if args.changepoint:
             # cross-run sequential view of the repository: Page-Hinkley per
             # metric series over ALL runs (this one included — it was just
@@ -728,14 +720,14 @@ def main(argv: list[str] | None = None) -> int:
                 store_changepoint,
             )
 
-            cp = store_changepoint(
-                mstore.history(spark),
-                delta=args.ph_delta, threshold=args.ph_threshold,
-            )
-            cp.orderBy("part", "column", "metric", "run_ts").write.mode(
-                "overwrite"
-            ).parquet(f"{args.out}/metric_changepoint")
-            release(cp)
+            with persist_scope():
+                cp = store_changepoint(
+                    mstore.history(spark),
+                    delta=args.ph_delta, threshold=args.ph_threshold,
+                )
+                cp.orderBy("part", "column", "metric", "run_ts").write.mode(
+                    "overwrite"
+                ).parquet(f"{args.out}/metric_changepoint")
         if args.trend:
             # retrospective trend view of the repository: Mann-Kendall +
             # Sen's slope per metric series over ALL runs (this one
@@ -745,11 +737,11 @@ def main(argv: list[str] | None = None) -> int:
                 trend_verdicts,
             )
 
-            tr = trend_verdicts(mstore.history(spark))
-            tr.orderBy("part", "column", "metric").write.mode(
-                "overwrite"
-            ).parquet(f"{args.out}/metric_trend")
-            release(tr)
+            with persist_scope():
+                tr = trend_verdicts(mstore.history(spark))
+                tr.orderBy("part", "column", "metric").write.mode(
+                    "overwrite"
+                ).parquet(f"{args.out}/metric_trend")
 
     if args.image_dedup:
         from al_drift_detection_spark.functions.dedup import (
@@ -761,82 +753,86 @@ def main(argv: list[str] | None = None) -> int:
         # perceptual near-dup retrieval on the input_hint phash column: the
         # image analog of the text SimHash path — same band-rotation core
         fp = meta_full.select("image_id", "phash")
-        if args.image_dedup_store:
-            # INCREMENTAL: sign only images absent from the persisted banded
-            # store, probe new×(store∪new). The durable pair record is a
-            # LEDGER beside the store, partitioned by a store-generation
-            # batch key (deterministic under crash-retry: the store is
-            # unchanged until the append, so a replay that re-signs hits
-            # the SAME partition with the SAME pairs; a replay after the
-            # append emits an empty frame whose dynamic-partition overwrite
-            # touches nothing — earlier emissions survive). The write rides
-            # the `sink` seam so the durable emission happens BEFORE the
-            # store append — writing after the call returns would leave a
-            # crash window (append done, pairs not) that a retry cannot
-            # repair (replay signs 0, emits 0).
-            from al_drift_detection_spark.functions.dedup import (
-                incremental_keep,
-                read_signature_store,
-            )
-
-            store = args.image_dedup_store
-            ledger_path = store.rstrip("/") + "_pairs"
-            # COMMITTED store generations only (read_signature_store): a
-            # crashed, marker-less append is invisible, so the replay's
-            # batch key matches the original attempt's
-            store_df = read_signature_store(spark, store)
-            batch_key = (
-                store_df.select("id").distinct().count()
-                if store_df is not None
-                else 0
-            )
-
-            def _sink(p):
-                (
-                    p.withColumn("_batch_id", F.lit(int(batch_key)))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("_batch_id")
-                    .parquet(ledger_path)
-                )
-
-            pairs = incremental_hamming_pairs(
-                fp, store, "phash", "image_id",
-                max_distance=3, bands=4, sink=_sink,
-            )
-            # per-run convenience copy (THIS run's emissions; the ledger is
-            # the durable cumulative record — a replay run's copy is empty)
-            pairs.write.mode("overwrite").parquet(f"{args.out}/image_dedup_pairs")
-            # keep/drop is FIRST-SIGNED-WINS, derived from the cumulative
-            # ledger, never from the in-flight batch frame — so a replayed
-            # run (0 signed, 0 pairs) reproduces the first run's verdicts
-            # (incremental_keep docstring). Explicit-schema read: a pair-less
-            # first run leaves a ledger directory without inferable schema.
-            ledger = spark.read.schema(
-                "a_id string, b_id string, hamming int, a_new boolean, "
-                "b_new boolean, n_new_signed long, _batch_id long"
-            ).parquet(ledger_path)
-            # distinct ids on the verdict side: planted duplicate image_ids
-            # would otherwise fan the row-level left join out
-            keep = incremental_keep(
-                fp.select("image_id").distinct(), ledger, "image_id"
-            )
-            clusters = fp.select("image_id").join(keep, "image_id", "left")
-            if args.store_compact_keep is not None:
+        with persist_scope():
+            if args.image_dedup_store:
+                # INCREMENTAL: sign only images absent from the persisted banded
+                # store, probe new×(store∪new). The durable pair record is a
+                # LEDGER beside the store, partitioned by a store-generation
+                # batch key (deterministic under crash-retry: the store is
+                # unchanged until the append, so a replay that re-signs hits
+                # the SAME partition with the SAME pairs; a replay after the
+                # append emits an empty frame whose dynamic-partition overwrite
+                # touches nothing — earlier emissions survive). The write rides
+                # the `sink` seam so the durable emission happens BEFORE the
+                # store append — writing after the call returns would leave a
+                # crash window (append done, pairs not) that a retry cannot
+                # repair (replay signs 0, emits 0).
                 from al_drift_detection_spark.functions.dedup import (
-                    compact_signature_store,
+                    incremental_keep,
+                    read_signature_store,
                 )
 
-                # materialize the verdicts (they probe the store) BEFORE the
-                # fold rewrites its directories
-                clusters = clusters.localCheckpoint(eager=True)
-                compact_signature_store(
-                    spark, store, keep_last=args.store_compact_keep
+                store = args.image_dedup_store
+                ledger_path = store.rstrip("/") + "_pairs"
+                # COMMITTED store generations only (read_signature_store): a
+                # crashed, marker-less append is invisible, so the replay's
+                # batch key matches the original attempt's
+                store_df = read_signature_store(spark, store)
+                batch_key = (
+                    store_df.select("id").distinct().count()
+                    if store_df is not None
+                    else 0
                 )
-        else:
-            pairs = hamming_pairs(fp, "phash", "image_id", max_distance=3, bands=4)
-            clusters = dedup_clusters(fp.select("image_id"), pairs, id_col="image_id")
-        clusters.write.mode("overwrite").parquet(f"{args.out}/image_dedup")
+
+                def _sink(p):
+                    (
+                        p.withColumn("_batch_id", F.lit(int(batch_key)))
+                        .write.mode("overwrite")
+                        .option("partitionOverwriteMode", "dynamic")
+                        .partitionBy("_batch_id")
+                        .parquet(ledger_path)
+                    )
+
+                pairs = incremental_hamming_pairs(
+                    fp, store, "phash", "image_id",
+                    max_distance=3, bands=4, sink=_sink,
+                )
+                # per-run convenience copy (THIS run's emissions; the ledger is
+                # the durable cumulative record — a replay run's copy is empty)
+                pairs.write.mode("overwrite").parquet(f"{args.out}/image_dedup_pairs")
+                # keep/drop is FIRST-SIGNED-WINS, derived from the cumulative
+                # ledger, never from the in-flight batch frame — so a replayed
+                # run (0 signed, 0 pairs) reproduces the first run's verdicts
+                # (incremental_keep docstring). Explicit-schema read: a pair-less
+                # first run leaves a ledger directory without inferable schema.
+                ledger = spark.read.schema(
+                    "a_id string, b_id string, hamming int, a_new boolean, "
+                    "b_new boolean, n_new_signed long, _batch_id long"
+                ).parquet(ledger_path)
+                # distinct ids on the verdict side: planted duplicate image_ids
+                # would otherwise fan the row-level left join out
+                keep = incremental_keep(
+                    fp.select("image_id").distinct(), ledger, "image_id"
+                )
+                clusters = fp.select("image_id").join(keep, "image_id", "left")
+                if args.store_compact_keep is not None:
+                    from al_drift_detection_spark.functions.dedup import (
+                        compact_signature_store,
+                    )
+
+                    # materialize the verdicts (they probe the store) BEFORE the
+                    # fold rewrites its directories
+                    clusters = scoped(clusters.localCheckpoint(eager=True))
+                    compact_signature_store(
+                        spark, store, keep_last=args.store_compact_keep
+                    )
+            else:
+                clusters = dedup_clusters(
+                    fp.select("image_id"),
+                    lambda: hamming_pairs(fp, "phash", "image_id", max_distance=3, bands=4),
+                    id_col="image_id",
+                )
+            clusters.write.mode("overwrite").parquet(f"{args.out}/image_dedup")
 
     if args.cat_drift:
         from al_drift_detection_spark.drift import categorical_drift
@@ -893,7 +889,6 @@ def main(argv: list[str] | None = None) -> int:
             )
 
     if args.assoc_drift:
-        from al_drift_detection_spark.functions._persist import release
         from al_drift_detection_spark.functions.health import association_drift
         from al_drift_detection_spark.streaming.driver import _w_bucket_col
 
@@ -918,185 +913,157 @@ def main(argv: list[str] | None = None) -> int:
             .collect()
             if r["c"] != "(other)"  # reserved catch-all absorbs a literal
         )
-        ad = association_drift(
-            meta.withColumn("w_bucket", _w_bucket_col(w_lo, w_hi)),
-            "fmt", "w_bucket",
-            cats_a=fmt_cats, cats_b=[str(i) for i in range(5)],
-            ref_filter=F.col("window_id") < args.ref_windows,
-            max_abs_diff=0.1,
-        )
-        ad.orderBy("window_id").write.mode("overwrite").parquet(
-            f"{args.out}/assoc_drift"
-        )
-        release(ad)
+        with persist_scope():
+            ad = association_drift(
+                meta.withColumn("w_bucket", _w_bucket_col(w_lo, w_hi)),
+                "fmt", "w_bucket",
+                cats_a=fmt_cats, cats_b=[str(i) for i in range(5)],
+                ref_filter=F.col("window_id") < args.ref_windows,
+                max_abs_diff=0.1,
+            )
+            ad.orderBy("window_id").write.mode("overwrite").parquet(
+                f"{args.out}/assoc_drift"
+            )
 
     if args.slice_drift:
-        from al_drift_detection_spark.functions._persist import (
-            propagate_persisted,
-            release,
-        )
         from al_drift_detection_spark.functions.slices import sliced_psi_drift
 
-        frames = []
-        for spec in args.slice_drift:
-            try:
-                slice_col, value_col = spec.split(":", 1)
-            except ValueError:
-                print(f"--slice-drift expects SLICE:VALUE, got {spec!r}",
-                      file=sys.stderr)
-                return 2
-            sd = sliced_psi_drift(
-                meta, value_col, slice_col, "window_id",
-                ref_filter=F.col("window_id") < args.ref_windows,
-            )
-            frames.append(
-                propagate_persisted(
+        with persist_scope():
+            frames = []
+            for spec in args.slice_drift:
+                try:
+                    slice_col, value_col = spec.split(":", 1)
+                except ValueError:
+                    print(f"--slice-drift expects SLICE:VALUE, got {spec!r}",
+                          file=sys.stderr)
+                    return 2
+                sd = sliced_psi_drift(
+                    meta, value_col, slice_col, "window_id",
+                    ref_filter=F.col("window_id") < args.ref_windows,
+                )
+                frames.append(
                     sd.select(
                         F.lit(slice_col).alias("slice_col"),
                         F.lit(value_col).alias("value_col"),
                         "window_id", "slice", "n_cur", "psi", "rank", "verdict",
-                    ),
-                    sd,
+                    )
                 )
-            )
-        out_sd = frames[0]
-        for fr in frames[1:]:
-            out_sd = out_sd.unionByName(fr)
-        out_sd = propagate_persisted(out_sd, *frames)
-        out_sd.orderBy(
-            "slice_col", "value_col", "window_id", "rank"
-        ).write.mode("overwrite").parquet(f"{args.out}/slice_drift")
-        # release the persisted children sliced_psi_drift attached — the
-        # .select() wrapper used to drop them, leaking executor storage for
-        # the session lifetime (ADVICE r7; the caption_lm block's contract)
-        release(out_sd)
+            out_sd = frames[0]
+            for fr in frames[1:]:
+                out_sd = out_sd.unionByName(fr)
+            out_sd.orderBy(
+                "slice_col", "value_col", "window_id", "rank"
+            ).write.mode("overwrite").parquet(f"{args.out}/slice_drift")
 
     if args.caption_lm:
-        from al_drift_detection_spark.functions._persist import (
-            propagate_persisted,
-            release,
-        )
         from al_drift_detection_spark.functions.text import bigram_nll
 
         docs = meta_full.filter(F.col("caption").isNotNull()).select(
             "image_id", "caption", "window_id"
         )
-        scored = bigram_nll(
-            docs, ref_filter=F.col("window_id") < args.ref_windows,
-            text_col="caption", id_col="image_id",
-        )
-        # rank only the non-reference windows (the triage question is
-        # about THIS ingest); TakeOrdered keeps it a top-k heap per
-        # partition, never a global sort
-        lm = propagate_persisted(
-            scored.join(
-                docs.filter(F.col("window_id") >= args.ref_windows).select(
-                    "image_id", "window_id", "caption"
-                ),
-                "image_id",
+        with persist_scope():
+            scored = bigram_nll(
+                docs, ref_filter=F.col("window_id") < args.ref_windows,
+                text_col="caption", id_col="image_id",
             )
-            .orderBy(F.desc("nll"), F.asc("image_id"))
-            .limit(args.caption_lm),
-            scored,
-        )
-        lm.write.mode("overwrite").parquet(f"{args.out}/caption_lm")
-        release(lm)
+            # rank only the non-reference windows (the triage question is
+            # about THIS ingest); TakeOrdered keeps it a top-k heap per
+            # partition, never a global sort
+            lm = (
+                scored.join(
+                    docs.filter(F.col("window_id") >= args.ref_windows).select(
+                        "image_id", "window_id", "caption"
+                    ),
+                    "image_id",
+                )
+                .orderBy(F.desc("nll"), F.asc("image_id"))
+                .limit(args.caption_lm)
+            )
+            lm.write.mode("overwrite").parquet(f"{args.out}/caption_lm")
 
     if args.cond_completeness:
-        from al_drift_detection_spark.functions._persist import (
-            propagate_persisted,
-            release,
-        )
         from al_drift_detection_spark.functions.health import (
             conditional_completeness_drift,
         )
 
-        frames = []
-        for spec in args.cond_completeness:
-            try:
-                cond_col, target_col = spec.split(":", 1)
-            except ValueError:
-                print(f"--cond-completeness expects COND:TARGET, got {spec!r}",
-                      file=sys.stderr)
-                return 2
-            cc = conditional_completeness_drift(
-                meta_full, cond_col, target_col, "window_id",
-                ref_filter=F.col("window_id") < args.ref_windows,
-                threshold=0.1, min_rows=50,
-            )
-            frames.append(
-                propagate_persisted(
+        with persist_scope():
+            frames = []
+            for spec in args.cond_completeness:
+                try:
+                    cond_col, target_col = spec.split(":", 1)
+                except ValueError:
+                    print(f"--cond-completeness expects COND:TARGET, got {spec!r}",
+                          file=sys.stderr)
+                    return 2
+                cc = conditional_completeness_drift(
+                    meta_full, cond_col, target_col, "window_id",
+                    ref_filter=F.col("window_id") < args.ref_windows,
+                    threshold=0.1, min_rows=50,
+                )
+                frames.append(
                     cc.select(
                         F.lit(cond_col).alias("cond_col"),
                         F.lit(target_col).alias("target_col"),
                         "window_id", "category", "n_cur", "null_ratio",
                         "ref_ratio", "delta", "verdict",
-                    ),
-                    cc,
+                    )
                 )
-            )
-        out_cc = frames[0]
-        for fr in frames[1:]:
-            out_cc = out_cc.unionByName(fr)
-        out_cc = propagate_persisted(out_cc, *frames)
-        out_cc.orderBy(
-            "cond_col", "target_col", "window_id", "category"
-        ).write.mode("overwrite").parquet(f"{args.out}/cond_completeness")
-        # release the persisted children (ADVICE r7 — the .select() wrapper
-        # dropped them; same contract as the caption_lm block)
-        release(out_cc)
+            out_cc = frames[0]
+            for fr in frames[1:]:
+                out_cc = out_cc.unionByName(fr)
+            out_cc.orderBy(
+                "cond_col", "target_col", "window_id", "category"
+            ).write.mode("overwrite").parquet(f"{args.out}/cond_completeness")
 
     if args.health:
-        from al_drift_detection_spark.functions._persist import release
         from al_drift_detection_spark.functions.health import (
             completeness_drift,
             volume_anomaly,
         )
 
         in_ref = F.col("window_id") < args.ref_windows
-        vol = volume_anomaly(meta_full, "window_id", ref_filter=in_ref)
-        vol.orderBy("window_id").write.mode("overwrite").parquet(
-            f"{args.out}/health_volume"
-        )
-        release(vol)
-        comp = completeness_drift(
-            meta_full, ["caption", "phash", "w", "h", "fmt"], "window_id",
-            ref_filter=in_ref,
-        )
-        comp.orderBy("window_id", "column").write.mode("overwrite").parquet(
-            f"{args.out}/health_completeness"
-        )
-        release(comp)
+        with persist_scope():
+            vol = volume_anomaly(meta_full, "window_id", ref_filter=in_ref)
+            vol.orderBy("window_id").write.mode("overwrite").parquet(
+                f"{args.out}/health_volume"
+            )
+        with persist_scope():
+            comp = completeness_drift(
+                meta_full, ["caption", "phash", "w", "h", "fmt"], "window_id",
+                ref_filter=in_ref,
+            )
+            comp.orderBy("window_id", "column").write.mode("overwrite").parquet(
+                f"{args.out}/health_completeness"
+            )
         from al_drift_detection_spark.functions.health import uniqueness_drift
 
-        uniq = uniqueness_drift(
-            meta_full, "image_id", "window_id", ref_filter=in_ref
-        )
-        uniq.orderBy("window_id").write.mode("overwrite").parquet(
-            f"{args.out}/health_uniqueness"
-        )
-        release(uniq)
+        with persist_scope():
+            uniq = uniqueness_drift(
+                meta_full, "image_id", "window_id", ref_filter=in_ref
+            )
+            uniq.orderBy("window_id").write.mode("overwrite").parquet(
+                f"{args.out}/health_uniqueness"
+            )
 
     if args.salted_stats:
-        from al_drift_detection_spark.functions._persist import release
         from al_drift_detection_spark.skew import salted_agg_auto, skew_profile
 
-        prof = skew_profile(meta_full, "fmt", max_salts=32)
-        prof_rows = prof.orderBy(F.desc("cnt"))
-        prof_rows.write.mode("overwrite").parquet(f"{args.out}/skew_profile")
-        stats_df, n_salts = salted_agg_auto(
-            meta_full,
-            group_cols=["fmt"],
-            aggs={
-                "n": F.count(F.lit(1)),
-                "sum_w": F.sum(F.col("w").cast("double")),
-                "min_h": F.min("h"),
-                "max_h": F.max("h"),
-            },
-            row_key="image_id",
-            profile=spark.read.parquet(f"{args.out}/skew_profile"),
-        )
-        release(prof)
+        with persist_scope():
+            prof = skew_profile(meta_full, "fmt", max_salts=32)
+            prof_rows = prof.orderBy(F.desc("cnt"))
+            prof_rows.write.mode("overwrite").parquet(f"{args.out}/skew_profile")
+            stats_df, n_salts = salted_agg_auto(
+                meta_full,
+                group_cols=["fmt"],
+                aggs={
+                    "n": F.count(F.lit(1)),
+                    "sum_w": F.sum(F.col("w").cast("double")),
+                    "min_h": F.min("h"),
+                    "max_h": F.max("h"),
+                },
+                row_key="image_id",
+                profile=spark.read.parquet(f"{args.out}/skew_profile"),
+            )
         stats_df.withColumn("n_salts_used", F.lit(int(n_salts))).orderBy(
             "fmt"
         ).write.mode("overwrite").parquet(f"{args.out}/fmt_stats")
@@ -1190,17 +1157,15 @@ def main(argv: list[str] | None = None) -> int:
         # windowed DDM on the caption-null rate — the binomial per-window
         # error signal the completeness check already tracks, here with the
         # sequential warn/drift ladder (level 0/1/2)
-        from al_drift_detection_spark.functions._persist import release
-
         nser = meta_full.groupBy("window_id").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("caption").isNull().cast("long")).alias("err"),
         )
-        ddm = ddm_levels(nser, "window_id", "n", "err")
-        ddm.orderBy("window_id").write.mode("overwrite").parquet(
-            f"{args.out}/ddm_nullrate"
-        )
-        release(ddm)
+        with persist_scope():
+            ddm = ddm_levels(nser, "window_id", "n", "err")
+            ddm.orderBy("window_id").write.mode("overwrite").parquet(
+                f"{args.out}/ddm_nullrate"
+            )
         # two-sided CUSUM vs the reference windows' known baseline — the
         # third sequential test (PH = running mean, DDM = error register,
         # CUSUM = known in-control level). The series is standardized by the
@@ -1208,44 +1173,35 @@ def main(argv: list[str] | None = None) -> int:
         # so --ph-threshold keeps its dimensionless std-units meaning here
         # too; cusum_levels then re-derives its baseline on the standardized
         # prefix (mu ≈ 0, k ≈ 0.5 std).
-        from al_drift_detection_spark.functions._persist import (
-            propagate_persisted,
-            release,
-        )
         from al_drift_detection_spark.functions.changepoint import cusum_levels
 
-        cframes = []
-        for col in ("w", "h"):
-            series = meta_full.groupBy("window_id").agg(
-                F.avg(F.col(col).cast("double")).alias("x")
+        with persist_scope():
+            cframes = []
+            for col in ("w", "h"):
+                series = meta_full.groupBy("window_id").agg(
+                    F.avg(F.col(col).cast("double")).alias("x")
+                )
+                ref_ls = series.filter(F.col("window_id") < args.ref_windows).agg(
+                    F.avg("x").alias("_mu0"),
+                    F.coalesce(F.nullif(F.stddev("x"), F.lit(0.0)), F.lit(1.0)).alias(
+                        "_sd0"
+                    ),
+                )
+                norm = series.crossJoin(F.broadcast(ref_ls)).select(
+                    "window_id",
+                    ((F.col("x") - F.col("_mu0")) / F.col("_sd0")).alias("x"),
+                )
+                out = cusum_levels(
+                    norm, "window_id", "x", args.ref_windows,
+                    threshold=args.ph_threshold,
+                )
+                cframes.append(out.withColumn("column", F.lit(col)))
+            cu = cframes[0]
+            for f in cframes[1:]:
+                cu = cu.unionByName(f)
+            cu.orderBy("column", "window_id").write.mode("overwrite").parquet(
+                f"{args.out}/cusum"
             )
-            ref_ls = series.filter(F.col("window_id") < args.ref_windows).agg(
-                F.avg("x").alias("_mu0"),
-                F.coalesce(F.nullif(F.stddev("x"), F.lit(0.0)), F.lit(1.0)).alias(
-                    "_sd0"
-                ),
-            )
-            norm = series.crossJoin(F.broadcast(ref_ls)).select(
-                "window_id",
-                ((F.col("x") - F.col("_mu0")) / F.col("_sd0")).alias("x"),
-            )
-            out = cusum_levels(
-                norm, "window_id", "x", args.ref_windows,
-                threshold=args.ph_threshold,
-            )
-            # withColumn drops the _persisted_children attribute — carry the
-            # cusum_levels series persist onto the appended frame
-            cframes.append(
-                propagate_persisted(out.withColumn("column", F.lit(col)), out)
-            )
-        cu = cframes[0]
-        for f in cframes[1:]:
-            cu = cu.unionByName(f)
-        cu = propagate_persisted(cu, *cframes)
-        cu.orderBy("column", "window_id").write.mode("overwrite").parquet(
-            f"{args.out}/cusum"
-        )
-        release(cu)
 
     if args.expect_schema:
         from al_drift_detection_spark.functions.health import schema_check

@@ -26,9 +26,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so the
-    bench harness can pin parallelism levels for the two-cluster-size scaling
-    measurement (north_rule: N vs 4N executors → local[8] vs local[32]).
+    master defaults to ``local[$SPARK_GRAFT_CPUS]`` so the bench harness can
+    pin parallelism levels for the two-cluster-size scaling measurement
+    (north_rule: N vs 4N executors → local[8] vs local[32]); unset, it is the
+    number of CPUs this process may run on. The driver heap is
+    ``$SPARK_DRIVER_MEM``, unset min(16g, half the host's physical memory).
     """
     # one BLAS thread per Python worker: with N parallel pandas-UDF workers,
     # multi-threaded OpenBLAS/OMP inside each oversubscribes N×threads and
@@ -48,8 +50,10 @@ def get_spark(
         )
 
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
         master = f"local[{cpus}]"
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    heap = os.environ.get("SPARK_DRIVER_MEM") or f"{min(16 * 1024, phys_mb // 2)}m"
     if shuffle_partitions is None:
         # ~1x core count locally; a real cluster submit overrides this.
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
@@ -65,11 +69,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        # 16g + ParallelGC, NOT bigger: on this workload (wide binary rows
-        # through pandas UDFs) a 32-64g G1 heap degrades every job after the
-        # first ~10x (measured 18s → 124s; task metrics showed 45x GC time).
-        # Throughput GC + a bounded heap stays flat across repeated jobs.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # at most 16g + ParallelGC, NOT bigger: on this workload (wide binary
+        # rows through pandas UDFs) a 32-64g G1 heap degrades every job after
+        # the first ~10x (measured 18s → 124s; task metrics showed 45x GC
+        # time). Throughput GC + a bounded heap stays flat across repeated
+        # jobs. Half the host's memory caps it on small hosts.
+        .config("spark.driver.memory", heap)
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", "-XX:+UseParallelGC"),

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from al_drift_detection_spark.persist import persist_scope, scoped
+
 AQE_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -107,13 +109,13 @@ def salted_agg_auto(
     identical to the unsalted aggregate either way (parity pinned in
     tests/test_skew_auto.py and by q_salted_agg_auto's plain-GROUP-BY
     oracle)."""
-    if profile is None:
-        profile = skew_profile(df, group_cols, max_salts=max_salts)
-    if isinstance(profile, DataFrame):
-        from al_drift_detection_spark.functions._persist import release
-
-        row = profile.agg(F.max("suggested_salts").alias("_s")).collect()[0]
-        release(profile)
+    if profile is None or isinstance(profile, DataFrame):
+        # nested scope: a profile measured here frees its count frame as
+        # soon as the fan-out is read
+        with persist_scope():
+            if profile is None:
+                profile = skew_profile(df, group_cols, max_salts=max_salts)
+            row = profile.agg(F.max("suggested_salts").alias("_s")).collect()[0]
         n_salts = int(row["_s"]) if row["_s"] is not None else 1
     else:
         n_salts = int(profile)
@@ -141,17 +143,15 @@ def skew_profile(df: DataFrame, key: str | list[str], max_salts: int = 32) -> Da
     crossJoins its own broadcast single-row total. The count frame is the
     shared child of the totals aggregate AND the join side (the CLAUDE.md
     rule — unpersisted, the raw scan would execute twice), so it is
-    persisted and attached to the returned frame; release via
-    functions._persist.release after materializing. skew_ratio is computed
+    persisted into the caller's persist scope. skew_ratio is computed
     as cnt·n_keys/tot (all integer-valued doubles, exact in IEEE754 below
     2^53) rather than cnt/avg(cnt), so ceil() sits on an
     exactly-reproducible quotient and the suggested fan-out never flips
     across engines or retries from last-bit float drift.
     """
-    from al_drift_detection_spark.functions._persist import attach_persisted
 
     keys = [key] if isinstance(key, str) else list(key)
-    c = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt")).persist()
+    c = scoped(df.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt")).persist())
     t = c.agg(
         F.sum("cnt").cast("double").alias("_tot"),
         F.count(F.lit(1)).cast("double").alias("_nk"),
@@ -166,4 +166,4 @@ def skew_profile(df: DataFrame, key: str | list[str], max_salts: int = 32) -> Da
         .cast("int")
         .alias("suggested_salts"),
     )
-    return attach_persisted(out, c)
+    return out

@@ -56,6 +56,7 @@ def dedup_batch_handler(
     docstring). Returned separately so tests can drive the crash matrix
     without a streaming query around it."""
     from al_drift_detection_spark.functions.dedup import incremental_minhash_pairs
+    from al_drift_detection_spark.persist import persist_scope
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         def sink(pairs: DataFrame) -> None:
@@ -67,10 +68,13 @@ def dedup_batch_handler(
                 .parquet(pairs_dir)
             )
 
-        incremental_minhash_pairs(
-            batch_df, store_path, k=k, bands=bands, n=n, threshold=threshold,
-            text_col=text_col, id_col=id_col, sink=sink,
-        )
+        # foreachBatch runs on its own thread, outside any caller scope:
+        # the batch's pair checkpoint is freed once its sink has written it
+        with persist_scope():
+            incremental_minhash_pairs(
+                batch_df, store_path, k=k, bands=bands, n=n, threshold=threshold,
+                text_col=text_col, id_col=id_col, sink=sink,
+            )
 
     return handle
 

@@ -26,6 +26,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from al_drift_detection_spark.persist import scoped
+
 
 @dataclass(frozen=True)
 class Check:
@@ -212,7 +214,8 @@ class ValidationResult:
     reference's drifts_setN.txt verdict file (/root/reference/gan.py:971-974)
     and log metric rows. Call unpersist() once verdicts/violations have been
     materialized — run() persists shared dup/miss frames that would
-    otherwise occupy executor storage for the session lifetime."""
+    otherwise occupy executor storage for the session lifetime (they are
+    also registered with the caller's persist scope, if one is open)."""
 
     verdicts: DataFrame
     violations: DataFrame
@@ -293,11 +296,11 @@ class CheckSuite:
         table_rows: dict[str, DataFrame] = {}
         for chk in self.checks:
             if chk.kind == "unique":
-                frame = self._dup_rows(df, chk).persist()
+                frame = scoped(self._dup_rows(df, chk).persist())
             elif chk.kind == "referential":
                 if ref is None:
                     raise ValueError(f"check {chk.name} needs a reference DataFrame")
-                frame = self._miss_rows(df, ref, chk).persist()
+                frame = scoped(self._miss_rows(df, ref, chk).persist())
             else:
                 continue
             table_rows[chk.name] = frame

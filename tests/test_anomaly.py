@@ -178,8 +178,8 @@ def test_store_changepoint_planted_level_shift(spark):
     shift and only on series A; a stationary sibling series never alarms;
     a constant series (std 0) and a short series (< min_runs) emit no
     alarms/rows respectively."""
-    from al_drift_detection_spark.functions._persist import release
     from al_drift_detection_spark.functions.anomaly import store_changepoint
+    from al_drift_detection_spark.persist import persist_scope
 
     rows = []
     for t in range(14):
@@ -194,9 +194,9 @@ def test_store_changepoint_planted_level_shift(spark):
         rows, "part int, column string, metric string, value double, "
               "run_ts long, run_id string"
     )
-    out = store_changepoint(hist, delta=0.05, threshold=4.0, min_runs=5)
-    pdf = out.toPandas()
-    release(out)
+    with persist_scope():
+        out = store_changepoint(hist, delta=0.05, threshold=4.0, min_runs=5)
+        pdf = out.toPandas()
     # the short series is excluded entirely
     assert not ((pdf["column"] == "w") & (pdf["metric"] == "nulls")).any()
     a = pdf[(pdf["column"] == "w") & (pdf["metric"] == "mean")].sort_values("run_ts")

@@ -104,7 +104,6 @@ def test_closed_window_health_split_window_parity(spark, tmp_path_factory):
     would verdict differently than the whole window (fragment A all-null,
     fragment B clean: per-fragment scoring fails A and passes B; the closed
     window sees the true 50% ratio)."""
-    from al_drift_detection_spark.functions._persist import release
     from al_drift_detection_spark.functions.health import (
         completeness_drift,
         volume_anomaly,
@@ -278,8 +277,8 @@ def test_closed_window_uniqueness_split_window_parity(spark, tmp_path_factory):
     second fragment of a split window is judged on the window's whole key
     set — under-k windows report the EXACT distinct count, matching
     health.uniqueness_drift(approx=False) on the same rows."""
-    from al_drift_detection_spark.functions._persist import release
     from al_drift_detection_spark.functions.health import uniqueness_drift
+    from al_drift_detection_spark.persist import persist_scope
     from al_drift_detection_spark.streaming.closed import (
         closed,
         window_uniqueness_spec,
@@ -321,12 +320,12 @@ def test_closed_window_uniqueness_split_window_parity(spark, tmp_path_factory):
     full = spark.createDataFrame(
         pd.concat([fa, fb]), "ts timestamp, image_id string"
     ).withColumn("window_id", F.lit(0))
-    bframe = uniqueness_drift(
-        full, "image_id", "window_id", ref_ratio=0.99, threshold=0.1,
-        approx=False,
-    )
-    batch = bframe.toPandas().iloc[0]
-    release(bframe)  # no-op with a literal reference; uniform hygiene
+    with persist_scope():
+        bframe = uniqueness_drift(
+            full, "image_id", "window_id", ref_ratio=0.99, threshold=0.1,
+            approx=False,
+        )
+        batch = bframe.toPandas().iloc[0]
     assert got.loc[0, "n_distinct"] == batch["n_distinct"]
     assert got.loc[0, "ratio"] == pytest.approx(batch["ratio"], abs=1e-9)
     assert got.loc[0, "verdict"] == batch["verdict"]
@@ -692,8 +691,8 @@ def test_closed_referential_drift_split_window_parity(spark, tmp_path_factory):
     dimension keys, fragment B introduces 25% unknown keys; one closed
     verdict for W1 with (n, orphans, rate) equal to health.referential_drift
     on the full row set, and the verdict flips with the reference rate."""
-    from al_drift_detection_spark.functions._persist import release
     from al_drift_detection_spark.functions.health import referential_drift
+    from al_drift_detection_spark.persist import persist_scope
     from al_drift_detection_spark.streaming.closed import (
         closed,
         referential_drift_spec,
@@ -721,12 +720,12 @@ def test_closed_referential_drift_split_window_parity(spark, tmp_path_factory):
 
     full = pd.concat([fa, fb])
     # batch twin (ref = the window itself, so rate == ref_rate -> pass)
-    out_b = referential_drift(
-        spark.createDataFrame(full).withColumn("window_id", F.lit(0)),
-        "fk", dim, "k",
-    )
-    brow = out_b.collect()[0]
-    release(out_b)
+    with persist_scope():
+        out_b = referential_drift(
+            spark.createDataFrame(full).withColumn("window_id", F.lit(0)),
+            "fk", dim, "k",
+        )
+        brow = out_b.collect()[0]
 
     stream = (
         spark.readStream.schema("ts timestamp, fk long")

@@ -130,7 +130,7 @@ def test_point_estimates_single_execution(spark):
     the source: rows seen == n exactly, not 2n."""
     import pandas as pd
 
-    from al_drift_detection_spark.functions._persist import release
+    from al_drift_detection_spark.persist import persist_scope
 
     n = 4_000
     acc = spark.sparkContext.accumulator(0)
@@ -143,9 +143,9 @@ def test_point_estimates_single_execution(spark):
     src = spark.range(n).mapInPandas(counted, "w long, k long")
     cells = cms_cells(src, "k", "w", depth=D, width=W)
     keys = spark.createDataFrame([(3,), (17,)], "k long")
-    est = cms_point_estimates(cells, keys, "k", "w", depth=D, width=W)
-    assert est.count() == 4 * 2  # windows x probe keys
-    assert acc.value == n, (
-        f"cells pipeline ran {acc.value / n:.1f}x — must execute exactly once"
-    )
-    release(est)
+    with persist_scope():
+        est = cms_point_estimates(cells, keys, "k", "w", depth=D, width=W)
+        assert est.count() == 4 * 2  # windows x probe keys
+        assert acc.value == n, (
+            f"cells pipeline ran {acc.value / n:.1f}x — must execute exactly once"
+        )

@@ -105,61 +105,61 @@ def test_crossing_report_golden(spark, planted):
     """Unsmoothed report matches the plain-python reference formulas for
     every scope (per-split, per-drift TEST rows, per-orbit) and table."""
     from al_drift_detection_spark.crossings import crossing_report
-    from al_drift_detection_spark.functions._persist import release
+    from al_drift_detection_spark.persist import persist_scope
 
     df, dm, py, drift_of = planted
-    rep = crossing_report(
-        df, dm, vec_col="emb", orbit_col="ORBIT", order_col="IDX",
-        label_col="LABEL", n_classes=4, smoothing=False,
-    )
-    # expected splits
-    orbit_labels = {}
-    for orbit, _, label, _p in py:
-        orbit_labels.setdefault(orbit, []).append(label)
-    exp_split = _expected_splits(orbit_labels, drift_of)
-    got_splits = {r["orbit"]: r["split"] for r in rep["splits"].collect()}
-    assert got_splits == exp_split
+    with persist_scope():
+        rep = crossing_report(
+            df, dm, vec_col="emb", orbit_col="ORBIT", order_col="IDX",
+            label_col="LABEL", n_classes=4, smoothing=False,
+        )
+        # expected splits
+        orbit_labels = {}
+        for orbit, _, label, _p in py:
+            orbit_labels.setdefault(orbit, []).append(label)
+        exp_split = _expected_splits(orbit_labels, drift_of)
+        got_splits = {r["orbit"]: r["split"] for r in rep["splits"].collect()}
+        assert got_splits == exp_split
 
-    # expected per-scope rows
-    scoped = []
-    for orbit, _, t, p in py:
-        sp = exp_split[orbit]
-        scoped.append(("split", sp, t, p))
-        scoped.append(("orbit", str(orbit), t, p))
-        if sp == "test":
-            scoped.append(("drift", str(drift_of[orbit]), t, p))
-    exp_prf, exp_acc, exp_sdi = _expected_metrics(scoped)
+        # expected per-scope rows
+        scoped = []
+        for orbit, _, t, p in py:
+            sp = exp_split[orbit]
+            scoped.append(("split", sp, t, p))
+            scoped.append(("orbit", str(orbit), t, p))
+            if sp == "test":
+                scoped.append(("drift", str(drift_of[orbit]), t, p))
+        exp_prf, exp_acc, exp_sdi = _expected_metrics(scoped)
 
-    got_prf = {
-        (r["scope_type"], r["scope"], r["label"]):
-            (r["prec"], r["rec"], r["f1"], r["support"])
-        for r in rep["prf"].collect()
-    }
-    assert set(got_prf) == set(exp_prf)
-    for k, v in exp_prf.items():
-        assert got_prf[k] == pytest.approx(v, abs=1e-9), k
+        got_prf = {
+            (r["scope_type"], r["scope"], r["label"]):
+                (r["prec"], r["rec"], r["f1"], r["support"])
+            for r in rep["prf"].collect()
+        }
+        assert set(got_prf) == set(exp_prf)
+        for k, v in exp_prf.items():
+            assert got_prf[k] == pytest.approx(v, abs=1e-9), k
 
-    got_acc = {
-        (r["scope_type"], r["scope"]): r["accuracy"] for r in rep["accuracy"].collect()
-    }
-    assert set(got_acc) == set(exp_acc)
-    for k, v in exp_acc.items():
-        assert got_acc[k] == pytest.approx(v, abs=1e-9), k
+        got_acc = {
+            (r["scope_type"], r["scope"]): r["accuracy"] for r in rep["accuracy"].collect()
+        }
+        assert set(got_acc) == set(exp_acc)
+        for k, v in exp_acc.items():
+            assert got_acc[k] == pytest.approx(v, abs=1e-9), k
 
-    got_sdi = {
-        (r["scope_type"], r["scope"], r["label"]): (r["s"], r["d"], r["i"], r["err_contrib"])
-        for r in rep["sdi"].collect()
-    }
-    assert set(got_sdi) == set(exp_sdi)
-    for k, v in exp_sdi.items():
-        assert got_sdi[k][:3] == v[:3], k
-        assert got_sdi[k][3] == pytest.approx(v[3], abs=1e-9), k
+        got_sdi = {
+            (r["scope_type"], r["scope"], r["label"]): (r["s"], r["d"], r["i"], r["err_contrib"])
+            for r in rep["sdi"].collect()
+        }
+        assert set(got_sdi) == set(exp_sdi)
+        for k, v in exp_sdi.items():
+            assert got_sdi[k][:3] == v[:3], k
+            assert got_sdi[k][3] == pytest.approx(v[3], abs=1e-9), k
 
-    # predictions carry the raw model output too
-    preds = rep["predictions"].toPandas()
-    assert (preds["pred"] == preds["label_pred"]).all()  # smoothing off
-    assert len(preds) == len(py)
-    release(rep["predictions"])
+        # predictions carry the raw model output too
+        preds = rep["predictions"].toPandas()
+        assert (preds["pred"] == preds["label_pred"]).all()  # smoothing off
+        assert len(preds) == len(py)
 
 
 def test_crossing_report_smoothing_composition(spark, planted):
@@ -168,22 +168,22 @@ def test_crossing_report_smoothing_composition(spark, planted):
     composition (grouping, ordering, joins) reproduces the sequential
     reference stencil (ref cnn.py:149-172)."""
     from al_drift_detection_spark.crossings import crossing_report
-    from al_drift_detection_spark.functions._persist import release
+    from al_drift_detection_spark.persist import persist_scope
     from al_drift_detection_spark.operators.smoothing import smooth_sequence
 
-    df, dm, py, _ = planted
-    rep = crossing_report(
-        df, dm, vec_col="emb", orbit_col="ORBIT", order_col="IDX",
-        label_col="LABEL", n_classes=4, smoothing=True,
-        crossing_classes=(1, 3), run=12, gap=6,
-    )
-    preds = rep["predictions"].toPandas().sort_values(["orbit", "order"])
-    for orbit, grp in preds.groupby("orbit"):
-        exp = smooth_sequence(
-            grp["label_pred"].to_numpy(), crossing_classes=(1, 3), run=12, gap=6
+    with persist_scope():
+        df, dm, py, _ = planted
+        rep = crossing_report(
+            df, dm, vec_col="emb", orbit_col="ORBIT", order_col="IDX",
+            label_col="LABEL", n_classes=4, smoothing=True,
+            crossing_classes=(1, 3), run=12, gap=6,
         )
-        assert (grp["pred"].to_numpy() == exp).all(), orbit
-    release(rep["predictions"])
+        preds = rep["predictions"].toPandas().sort_values(["orbit", "order"])
+        for orbit, grp in preds.groupby("orbit"):
+            exp = smooth_sequence(
+                grp["label_pred"].to_numpy(), crossing_classes=(1, 3), run=12, gap=6
+            )
+            assert (grp["pred"].to_numpy() == exp).all(), orbit
 
 
 def test_runner_crossings_cli(spark, tmp_path_factory):

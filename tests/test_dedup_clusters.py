@@ -5,6 +5,13 @@ docs don't."""
 from __future__ import annotations
 
 from al_drift_detection_spark.functions.dedup import dedup_clusters, simhash_pairs
+from al_drift_detection_spark.persist import persist_scope
+
+
+def persistent_ids(spark):
+    # compare RDD ids, not the map's size: the ContextCleaner may free RDDs
+    # that earlier tests left behind while a test runs
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def test_clusters_collapse_planted_chains(spark):
@@ -32,15 +39,10 @@ def test_clusters_release_edge_cache(spark):
     pairs = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("d", "e")], "a_id string, b_id string"
     )
-    # compare RDD ids, not the map's size: the ContextCleaner may free RDDs
-    # that earlier tests left behind while this one runs
-    def persistent_ids():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
-    before = persistent_ids()
+    before = persistent_ids(spark)
     for _ in range(2):
         assert dedup_clusters(nodes, pairs).count() == 5
-    assert persistent_ids() - before == set()
+    assert persistent_ids(spark) - before == set()
 
 
 def test_clusters_long_chain_converges(spark):
@@ -56,6 +58,26 @@ def test_clusters_long_chain_converges(spark):
     assert (out["canonical_id"] == "n00").all()
     assert out[out["keep"]]["doc_id"].tolist() == ["n00"]
     # both paths agree exactly
+    fast = dedup_clusters(nodes, pairs).toPandas()
+    assert fast.sort_values("doc_id").values.tolist() == out.sort_values("doc_id").values.tolist()
+
+
+def test_clusters_fallback_frees_round_checkpoints(spark):
+    """The distributed fallback localCheckpoints a new labels frame every
+    round. Each round frees the previous round's checkpoint once its change
+    count is done, and the caller's persist scope frees the last one: no
+    persistent RDD is left after the scope (a 12-node chain left 12 when
+    no round was freed). The labels equal the driver union-find path's."""
+    ids = [f"n{i:02d}" for i in range(12)]
+    nodes = spark.createDataFrame([(x,) for x in ids], "doc_id string")
+    pairs = spark.createDataFrame(
+        [(ids[i], ids[i + 1]) for i in range(11)], "a_id string, b_id string"
+    )
+    before = persistent_ids(spark)
+    with persist_scope():
+        out = dedup_clusters(nodes, pairs, driver_edge_limit=0).toPandas()
+        assert len(persistent_ids(spark) - before) == 1  # the final round
+    assert persistent_ids(spark) - before == set()
     fast = dedup_clusters(nodes, pairs).toPandas()
     assert fast.sort_values("doc_id").values.tolist() == out.sort_values("doc_id").values.tolist()
 

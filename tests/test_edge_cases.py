@@ -407,21 +407,25 @@ def test_unique_check_heavily_duplicated_column(spark):
 
 
 def test_pair_operators_release_persisted(spark):
-    """Candidate-pair operators persist their shared self-join child; release()
-    must unpersist it so a long session doesn't accumulate executor storage
-    (ADVICE r2)."""
-    from al_drift_detection_spark.functions.dedup import minhash_lsh_pairs, release
+    """Candidate-pair operators persist their shared self-join child; the
+    caller's persist scope must unpersist it on exit so a long session
+    doesn't accumulate executor storage (ADVICE r2)."""
+    from al_drift_detection_spark.functions.dedup import minhash_lsh_pairs
+    from al_drift_detection_spark.persist import persist_scope
+
+    def ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     docs = spark.createDataFrame(
         [(f"d{i}", f"alpha beta gamma delta epsilon zeta {i % 3}") for i in range(30)],
         "doc_id string, text string",
     )
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    pairs = minhash_lsh_pairs(docs)
-    pairs.count()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() > before
-    release(pairs)
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+    before = ids()
+    with persist_scope():
+        pairs = minhash_lsh_pairs(docs)
+        pairs.count()
+        assert ids() - before
+    assert ids() - before == set()
 
 
 def test_train_ivf_centroids_duplicate_corpus(spark):
@@ -460,22 +464,29 @@ def test_build_reference_sample_bounded_sketch(spark):
 
 
 def test_dedup_clusters_releases_composed_persist(spark):
-    """Composition point: dedup_clusters materializes the pair plan into a
-    localCheckpoint and must release() the persisted self-join child the
-    pairs frame carried — derived frames lose the attachment, so the
-    composition point is the last place it can be freed."""
+    """Composition point: dedup_clusters builds the pair frame from its
+    function argument inside a nested persist scope, so the banded
+    self-join child is freed once the edge list is materialized — before
+    any action on the result, with no caller scope open."""
     from al_drift_detection_spark.functions.dedup import dedup_clusters, minhash_lsh_pairs
+
+    def ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     docs = spark.createDataFrame(
         [(f"d{i}", f"alpha beta gamma delta epsilon zeta {i % 3}") for i in range(30)],
         "doc_id string, text string",
     )
-    pairs = minhash_lsh_pairs(docs)
-    assert getattr(pairs, "_persisted_children") != []
+    before = ids()
+    built = []
+
+    def pairs():
+        built.append(minhash_lsh_pairs(docs))
+        return built[-1]
+
     out = dedup_clusters(docs.select("doc_id"), pairs)
-    # release happened inside dedup_clusters (post-checkpoint), before any
-    # action on the result
-    assert getattr(pairs, "_persisted_children") == []
+    assert built  # the banded child was persisted and read ...
+    assert ids() - before == set()  # ... and freed inside dedup_clusters
     assert out.count() == 30
 
 

@@ -249,8 +249,8 @@ def test_correlation_drift_joint_break(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    from al_drift_detection_spark.functions._persist import release
     from al_drift_detection_spark.functions.health import correlation_drift
+    from al_drift_detection_spark.persist import persist_scope
 
     n_per, wins = 2000, 4
     k = F.floor(F.col("id") / wins)
@@ -263,11 +263,11 @@ def test_correlation_drift_joint_break(spark):
         .otherwise(k.cast("double"))
         .alias("b"),
     )
-    out = correlation_drift(
-        df, "a", "b", ref_filter=F.col("window_id") < 2, max_abs_diff=0.2
-    )
-    pdf = out.toPandas().set_index("window_id")
-    release(out)
+    with persist_scope():
+        out = correlation_drift(
+            df, "a", "b", ref_filter=F.col("window_id") < 2, max_abs_diff=0.2
+        )
+        pdf = out.toPandas().set_index("window_id")
     assert pdf.loc[2, "verdict"] == "pass" and abs(pdf.loc[2, "corr"] - 1) < 1e-9
     assert pdf.loc[3, "verdict"] == "fail" and abs(pdf.loc[3, "corr"] + 1) < 1e-9
     # marginal blindness: per-window value multisets of b are identical
@@ -282,11 +282,11 @@ def test_correlation_drift_joint_break(spark):
     dg = df.withColumn(
         "b", F.when(F.col("window_id") == 3, F.lit(7.0)).otherwise(F.col("b"))
     )
-    out2 = correlation_drift(
-        dg, "a", "b", ref_filter=F.col("window_id") < 2, max_abs_diff=0.2
-    )
-    pdf2 = out2.toPandas().set_index("window_id")
-    release(out2)
+    with persist_scope():
+        out2 = correlation_drift(
+            dg, "a", "b", ref_filter=F.col("window_id") < 2, max_abs_diff=0.2
+        )
+        pdf2 = out2.toPandas().set_index("window_id")
     assert pdf2.loc[3, "verdict"] == "fail" and pdf2.loc[3].isna()["corr"]
 
     # degenerate REFERENCE raises loudly
@@ -300,40 +300,40 @@ def test_correlation_drift_joint_break(spark):
 # ---- categorical association (MI + Cramér's V) -------------------------------
 def test_categorical_association_perfect_dependence(spark):
     """b is a function of a (and vice versa): MI = H(a) and V = 1."""
-    from al_drift_detection_spark.functions._persist import release
     from al_drift_detection_spark.functions.health import categorical_association
+    from al_drift_detection_spark.persist import persist_scope
 
     rows = [(f"a{i % 4}", f"b{i % 4}") for i in range(400)]
-    out = categorical_association(
-        spark.createDataFrame(rows, "x string, y string"), "x", "y"
-    )
-    r = out.collect()[0]
-    release(out)
+    with persist_scope():
+        out = categorical_association(
+            spark.createDataFrame(rows, "x string, y string"), "x", "y"
+        )
+        r = out.collect()[0]
     assert r["n"] == 400 and r["ka"] == 4 and r["kb"] == 4
     assert r["mi"] == pytest.approx(np.log(4), abs=1e-9)  # H(uniform over 4)
     assert r["cramers_v"] == pytest.approx(1.0, abs=1e-9)
 
 
 def test_categorical_association_independence_and_degenerate(spark):
-    from al_drift_detection_spark.functions._persist import release
     from al_drift_detection_spark.functions.health import categorical_association
+    from al_drift_detection_spark.persist import persist_scope
 
     # exact independence by construction: every (a, b) combo equally frequent
     rows = [(f"a{i % 3}", f"b{(i // 3) % 5}") for i in range(300)]
-    out = categorical_association(
-        spark.createDataFrame(rows, "x string, y string"), "x", "y"
-    )
-    r = out.collect()[0]
-    release(out)
+    with persist_scope():
+        out = categorical_association(
+            spark.createDataFrame(rows, "x string, y string"), "x", "y"
+        )
+        r = out.collect()[0]
     assert r["mi"] == pytest.approx(0.0, abs=1e-9)
     assert r["cramers_v"] == pytest.approx(0.0, abs=1e-9)
     # constant column: V undefined (NULL), MI exactly 0; nulls excluded
     rows2 = [("only", f"b{i % 3}") for i in range(30)] + [(None, "b0")] * 5
-    out2 = categorical_association(
-        spark.createDataFrame(rows2, "x string, y string"), "x", "y"
-    )
-    r2 = out2.collect()[0]
-    release(out2)
+    with persist_scope():
+        out2 = categorical_association(
+            spark.createDataFrame(rows2, "x string, y string"), "x", "y"
+        )
+        r2 = out2.collect()[0]
     assert r2["n"] == 30 and r2["ka"] == 1
     assert r2["mi"] == pytest.approx(0.0, abs=1e-12)
     assert r2["cramers_v"] is None
@@ -345,8 +345,8 @@ def test_association_drift_catches_pairing_break_marginals_identical(spark):
     a — a bijection, MI stays ln(3), documented invariance → all pass;
     (2) b becomes INDEPENDENT of a in the drift era — MI collapses to ~0
     vs the dependent reference → exactly windows 4-5 fail."""
-    from al_drift_detection_spark.functions._persist import release
     from al_drift_detection_spark.functions.health import association_drift
+    from al_drift_detection_spark.persist import persist_scope
 
     rows = []
     for w in range(6):
@@ -355,13 +355,13 @@ def test_association_drift_catches_pairing_break_marginals_identical(spark):
             b = a if w < 4 else (a + 1) % 3  # same marginals, broken pairing
             rows.append((w, f"a{a}", f"b{b}"))
     df = spark.createDataFrame(rows, "window_id long, x string, y string")
-    out = association_drift(
-        df, "x", "y",
-        cats_a=["a0", "a1", "a2"], cats_b=["b0", "b1", "b2"],
-        ref_filter=F.col("window_id") < 4, max_abs_diff=0.1,
-    )
-    got = {r["window_id"]: r for r in out.collect()}
-    release(out)
+    with persist_scope():
+        out = association_drift(
+            df, "x", "y",
+            cats_a=["a0", "a1", "a2"], cats_b=["b0", "b1", "b2"],
+            ref_filter=F.col("window_id") < 4, max_abs_diff=0.1,
+        )
+        got = {r["window_id"]: r for r in out.collect()}
     # a cyclic shift is a bijection, so MI stays ln(3) in every window —
     # MI-based drift is invariant to relabeling by design; all pass, and
     # per-window MI equals the reference fold exactly
@@ -375,13 +375,13 @@ def test_association_drift_catches_pairing_break_marginals_identical(spark):
             b = a if w < 4 else (i // 100)  # drift era: b independent of a
             rows2.append((w, f"a{a}", f"b{b}"))
     df2 = spark.createDataFrame(rows2, "window_id long, x string, y string")
-    out2 = association_drift(
-        df2, "x", "y",
-        cats_a=["a0", "a1", "a2"], cats_b=["0", "1", "2", "b0", "b1", "b2"],
-        ref_filter=F.col("window_id") < 4, max_abs_diff=0.1,
-    )
-    got2 = {r["window_id"]: r["verdict"] for r in out2.collect()}
-    release(out2)
+    with persist_scope():
+        out2 = association_drift(
+            df2, "x", "y",
+            cats_a=["a0", "a1", "a2"], cats_b=["0", "1", "2", "b0", "b1", "b2"],
+            ref_filter=F.col("window_id") < 4, max_abs_diff=0.1,
+        )
+        got2 = {r["window_id"]: r["verdict"] for r in out2.collect()}
     assert [got2[w] for w in range(6)] == ["pass"] * 4 + ["fail"] * 2
 
 
@@ -473,8 +473,8 @@ def test_referential_drift_planted_orphan_surge(spark):
     """Windows 0-2 reference only known dim keys; window 3's producer starts
     emitting 20% unknown keys — exactly window 3 fails. NULL keys are
     excluded from the rate (FK semantics), and an empty reference raises."""
-    from al_drift_detection_spark.functions._persist import release
     from al_drift_detection_spark.functions.health import referential_drift
+    from al_drift_detection_spark.persist import persist_scope
 
     dim = spark.createDataFrame([(i,) for i in range(100)], "k long")
     rows = []
@@ -487,11 +487,11 @@ def test_referential_drift_planted_orphan_surge(spark):
             rows.append((w, key))
     rows += [(0, None)] * 10  # excluded, not orphans
     df = spark.createDataFrame(rows, "window_id long, fk long")
-    out = referential_drift(
-        df, "fk", dim, "k", ref_filter=F.col("window_id") < 3, max_abs_jump=0.05
-    )
-    got = {r["window_id"]: r for r in out.collect()}
-    release(out)
+    with persist_scope():
+        out = referential_drift(
+            df, "fk", dim, "k", ref_filter=F.col("window_id") < 3, max_abs_jump=0.05
+        )
+        got = {r["window_id"]: r for r in out.collect()}
     assert got[0]["n"] == 200  # nulls excluded from the denominator
     assert all(got[w]["verdict"] == "pass" and got[w]["orphans"] == 0 for w in range(3))
     assert got[3]["verdict"] == "fail" and got[3]["orphans"] == 40

@@ -90,8 +90,8 @@ def test_grid_saturation_and_validation(spark):
 def test_histogram_drift_planted_shift(spark):
     """PSI/hist-KS from sketch rows: a window matching the reference passes,
     a shifted window fails both kernels; statistics track the raw-scan PSI."""
-    from al_drift_detection_spark.functions._persist import release
     from al_drift_detection_spark.functions.histograms import histogram_drift
+    from al_drift_detection_spark.persist import persist_scope
 
     n = 8000
     k = F.floor(F.col("id") / 4)  # window-decorrelated value stream (see _data)
@@ -103,14 +103,13 @@ def test_histogram_drift_planted_shift(spark):
         .alias("x"),
     )
     h = window_histograms(df, "x", "w", LO, HI, NB)
-    out = histogram_drift(h, ref_windows=2, n_bins=NB).toPandas()
+    with persist_scope():
+        out = histogram_drift(h, ref_windows=2, n_bins=NB).toPandas()
     v = out.set_index(["window", "kernel"])["verdict"]
     assert v.loc[(2, "psi")] == "pass" and v.loc[(2, "hist_ks")] == "pass"
     assert v.loc[(3, "psi")] == "fail" and v.loc[(3, "hist_ks")] == "fail"
     s = out.set_index(["window", "kernel"])["statistic"]
     assert s.loc[(3, "psi")] > 10 * s.loc[(2, "psi")]
-    release_df = histogram_drift(h, ref_windows=2, n_bins=NB)
-    release(release_df)
 
 
 def test_histogram_drift_from_store(spark, tmp_path):

@@ -45,8 +45,8 @@ def test_incremental_union_equals_full_recompute(spark, corpus, tmp_path):
     from al_drift_detection_spark.functions.dedup import (
         incremental_minhash_pairs,
         minhash_lsh_pairs,
-        release,
     )
+    from al_drift_detection_spark.persist import persist_scope
 
     b1, b2 = corpus
     store = str(tmp_path / "banded")
@@ -59,11 +59,11 @@ def test_incremental_union_equals_full_recompute(spark, corpus, tmp_path):
         .sort_values(["a_id", "b_id"])
         .reset_index(drop=True)
     )
-    fullf = minhash_lsh_pairs(b1.unionByName(b2), k=16, bands=4)
-    full = (
-        fullf.toPandas().sort_values(["a_id", "b_id"]).reset_index(drop=True)
-    )
-    release(fullf)
+    with persist_scope():
+        fullf = minhash_lsh_pairs(b1.unionByName(b2), k=16, bands=4)
+        full = (
+            fullf.toPandas().sort_values(["a_id", "b_id"]).reset_index(drop=True)
+        )
     pd.testing.assert_frame_equal(inc, full)
     # the planted dups actually surface (non-vacuous parity)
     got_pairs = set(zip(inc["a_id"], inc["b_id"]))
@@ -146,8 +146,8 @@ def test_incremental_hamming_union_equals_full(spark, fp_corpus, tmp_path):
     from al_drift_detection_spark.functions.dedup import (
         hamming_pairs,
         incremental_hamming_pairs,
-        release,
     )
+    from al_drift_detection_spark.persist import persist_scope
 
     b1, b2 = fp_corpus
     store = str(tmp_path / "fp_banded")
@@ -157,11 +157,11 @@ def test_incremental_hamming_union_equals_full(spark, fp_corpus, tmp_path):
         p1.unionByName(p2).select("a_id", "b_id", "hamming")
         .toPandas().sort_values(["a_id", "b_id"]).reset_index(drop=True)
     )
-    fullf = hamming_pairs(
-        b1.unionByName(b2), "phash", "image_id", max_distance=3, bands=4
-    )
-    full = fullf.toPandas().sort_values(["a_id", "b_id"]).reset_index(drop=True)
-    release(fullf)
+    with persist_scope():
+        fullf = hamming_pairs(
+            b1.unionByName(b2), "phash", "image_id", max_distance=3, bands=4
+        )
+        full = fullf.toPandas().sort_values(["a_id", "b_id"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(inc, full)
     got = set(zip(inc["a_id"], inc["b_id"]))
     assert ("a", "b") in got     # in-batch-1, 2 bits
@@ -404,8 +404,8 @@ def test_crashed_append_is_invisible_and_retried(spark, corpus, tmp_path):
         incremental_minhash_pairs,
         minhash_lsh_pairs,
         read_signature_store,
-        release,
     )
+    from al_drift_detection_spark.persist import persist_scope
 
     b1, b2 = corpus
     p1 = incremental_minhash_pairs(b1, str(tmp_path / "banded"), k=16, bands=4)
@@ -439,11 +439,11 @@ def test_crashed_append_is_invisible_and_retried(spark, corpus, tmp_path):
     assert read_signature_store(spark, store).select("id").distinct().count() == 8
 
     # pair parity with the one-shot recompute over the full corpus
-    full = minhash_lsh_pairs(b1.unionByName(b2), k=16, bands=4)
-    want = {
-        (r["a_id"], r["b_id"]) for r in full.select("a_id", "b_id").collect()
-    }
-    release(full)
+    with persist_scope():
+        full = minhash_lsh_pairs(b1.unionByName(b2), k=16, bands=4)
+        want = {
+            (r["a_id"], r["b_id"]) for r in full.select("a_id", "b_id").collect()
+        }
     got = {
         (r["a_id"], r["b_id"])
         for p in (p1, p2)

@@ -23,13 +23,15 @@ def duck():
 
 def test_oracle_sweep_sf0001(spark, duck):
     """Every oracle-paired query matches DuckDB at sf0.001 (fast gate;
-    the driver runs the same comparison at sf0.01)."""
+    the driver runs the same comparison at sf0.01), and leaves no
+    persistent RDD behind once its persist scope exits."""
     import os
     import sys
 
     sys.path.insert(0, "/root/repo")
     import __spark_entry__ as E
-    from tools.check_oracles import normalize
+    from al_drift_detection_spark.persist import persist_scope
+    from tools.check_oracles import normalize, persistent_ids
 
     # lazy oracle builders (q_ivf_topk) must derive literals from THIS
     # sweep's tables, not the driver-gate default sf0.01
@@ -38,13 +40,19 @@ def test_oracle_sweep_sf0001(spark, duck):
         qs, sqls = E.queries(), E.oracle_sql()
     finally:
         os.environ.pop("SPARK_GRAFT_ORACLE_SF", None)
-    failures = []
+    failures, leaks = [], {}
     for name, sql in sqls.items():
-        got = normalize(qs[name](spark, SF).toPandas())
+        before = persistent_ids(spark)
+        with persist_scope():
+            got = normalize(qs[name](spark, SF).toPandas())
+        left = persistent_ids(spark) - before
+        if left:
+            leaks[name] = sorted(left)
         exp = normalize(duck.execute(sql).fetchdf())
         if list(got.columns) != list(exp.columns) or len(got) != len(exp) or not got.equals(exp):
             failures.append(name)
     assert not failures, f"oracle mismatches: {failures}"
+    assert not leaks, f"persistent RDDs left after the scope: {leaks}"
 
 
 def test_entry_smoke(spark):
@@ -161,8 +169,8 @@ def test_hamming_pairs_phash_planted(spark):
     """The band-rotation core on a raw 64-bit fingerprint column (the image
     phash path): planted near-identical hashes pair up, far ones don't, and
     cluster resolution yields one keeper per cluster."""
-    from al_drift_detection_spark.functions._persist import release
     from al_drift_detection_spark.functions.dedup import dedup_clusters, hamming_pairs
+    from al_drift_detection_spark.persist import persist_scope
 
     base = 0x5A5A5A5A5A5A5A5A
     rows = [
@@ -173,14 +181,14 @@ def test_hamming_pairs_phash_planted(spark):
         ("img4", 0x123456789ABCDEF0),    # far away
     ]
     fp = spark.createDataFrame(rows, "image_id string, phash long")
-    pairs = hamming_pairs(fp, "phash", "image_id", max_distance=3, bands=4)
-    got = {(r["a_id"], r["b_id"]): r["hamming"] for r in pairs.collect()}
-    assert got == {("img0", "img1"): 1, ("img0", "img2"): 2, ("img1", "img2"): 3}
+    with persist_scope():
+        pairs = hamming_pairs(fp, "phash", "image_id", max_distance=3, bands=4)
+        got = {(r["a_id"], r["b_id"]): r["hamming"] for r in pairs.collect()}
+        assert got == {("img0", "img1"): 1, ("img0", "img2"): 2, ("img1", "img2"): 3}
 
-    clusters = dedup_clusters(fp.select("image_id"), pairs, id_col="image_id").toPandas()
-    keep = set(clusters[clusters["keep"]]["image_id"])
-    assert keep == {"img0", "img3", "img4"}  # one keeper for the 0-1-2 cluster
-    release(pairs)
+        clusters = dedup_clusters(fp.select("image_id"), pairs, id_col="image_id").toPandas()
+        keep = set(clusters[clusters["keep"]]["image_id"])
+        assert keep == {"img0", "img3", "img4"}  # one keeper for the 0-1-2 cluster
 
 
 def test_pii_scan_planted(spark):

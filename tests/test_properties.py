@@ -6,7 +6,7 @@ in milliseconds and catch boundary inputs the fixtures never produce."""
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import assume, given, settings
 from hypothesis import strategies as st
 
 from al_drift_detection_spark.kernels import (
@@ -79,17 +79,25 @@ def test_wasserstein_symmetric_nonneg_zero_on_identical(a, b):
         assert wasserstein_1d(x, x) == 0.0
 
 
-@given(samples, samples, st.floats(min_value=0.01, max_value=100.0))
+@given(samples, samples, st.integers(min_value=-6, max_value=6))
 @settings(max_examples=40, deadline=None)
-def test_wasserstein_scale_equivariant(a, b, s):
+def test_wasserstein_scale_equivariant(a, b, k):
     # W1(s·x, s·y) = s · W1(x, y) — the mass-weighted metric scales with the
-    # data units (KS does not; this is the distinguishing property)
+    # data units (KS does not; this is the distinguishing property). s is a
+    # power of two, so s·x is exact and every difference, product and sum
+    # inside the kernel scales exactly: the identity holds bit for bit.
+    # Precondition: no intermediate is subnormal. Gradual underflow rounds a
+    # subnormal at a coarser absolute step (W1([0], [0, 5e-324]) is 0.0,
+    # W1 of the doubled inputs 5e-324); nonzero inputs of magnitude
+    # >= 2**-900 keep every difference a multiple of 2**-952 and every
+    # mass-weighted term (ECDF gap >= 1/(200·200) > 2**-16) normal for
+    # every s >= 2**-6.
+    assume(all(v == 0.0 or abs(v) >= 2.0**-900 for v in a + b))
+    s = 2.0**k
     x, y = np.asarray(a), np.asarray(b)
     if len(x) == 0 or len(y) == 0:
         return
-    assert wasserstein_1d(s * x, s * y) == np.float64(s * wasserstein_1d(x, y)) or np.isclose(
-        wasserstein_1d(s * x, s * y), s * wasserstein_1d(x, y), rtol=1e-9, atol=1e-12
-    )
+    assert wasserstein_1d(s * x, s * y) == s * wasserstein_1d(x, y)
 
 
 @given(samples, samples, st.floats(min_value=1e-6, max_value=1e9))

@@ -51,7 +51,8 @@ def test_stream_union_equals_full_recompute(spark, tmp_path):
     """End-to-end: two feed files → two micro-batches; the pairs table's
     union across batch partitions equals the one-shot minhash_lsh_pairs
     over the full corpus, and the planted dups surface."""
-    from al_drift_detection_spark.functions.dedup import minhash_lsh_pairs, release
+    from al_drift_detection_spark.functions.dedup import minhash_lsh_pairs
+    from al_drift_detection_spark.persist import persist_scope
     from al_drift_detection_spark.streaming.dedup import run_dedup_stream
 
     feed = str(tmp_path / "feed")
@@ -69,14 +70,14 @@ def test_stream_union_equals_full_recompute(spark, tmp_path):
     )
 
     got = _read_pairs(spark, str(tmp_path / "pairs"))
-    fullf = minhash_lsh_pairs(
-        _docs(spark, BATCH1 + BATCH2), k=16, bands=4
-    )
-    want = (
-        fullf.select("a_id", "b_id", "est_jaccard").toPandas()
-        .sort_values(["a_id", "b_id"]).reset_index(drop=True)
-    )
-    release(fullf)
+    with persist_scope():
+        fullf = minhash_lsh_pairs(
+            _docs(spark, BATCH1 + BATCH2), k=16, bands=4
+        )
+        want = (
+            fullf.select("a_id", "b_id", "est_jaccard").toPandas()
+            .sort_values(["a_id", "b_id"]).reset_index(drop=True)
+        )
     pd.testing.assert_frame_equal(got, want)
     pairs = set(zip(got["a_id"], got["b_id"]))
     assert {(0, 1), (0, 10), (11, 12)} <= pairs

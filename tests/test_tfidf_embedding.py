@@ -239,31 +239,29 @@ def test_assign_drift_regimes_null_window_key_excluded(spark):
 
 def test_tfidf_releases_persisted_tf(spark):
     """tfidf_top_terms persists the shared tf aggregate (broadcast build +
-    probe sides cannot reuse an exchange); release() must free it."""
-    from al_drift_detection_spark.functions._persist import release
+    probe sides cannot reuse an exchange); the caller's persist scope must
+    free it on exit."""
     from al_drift_detection_spark.functions.text import tfidf_top_terms
+    from al_drift_detection_spark.persist import persist_scope
 
     df = spark.createDataFrame(
         [(f"d{i}", f"alpha beta gamma {i}") for i in range(20)],
         "doc_id string, text string",
     )
+
     def ids():
         # id SET, not size: Spark's ContextCleaner unpersists other tests'
         # GC'd frames on a background thread, so a count comparison flakes
         # under the full suite (observed r6) — only the ids tfidf itself
         # created are this test's business
-        it = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
-        out = set()
-        while it.hasNext():
-            out.add(it.next())
-        return out
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     before = ids()
-    out = tfidf_top_terms(df, k=2)
-    out.count()
-    created = ids() - before
-    assert created
-    release(out)
+    with persist_scope():
+        out = tfidf_top_terms(df, k=2)
+        out.count()
+        created = ids() - before
+        assert created
     assert not (ids() & created)
 
 

@@ -97,8 +97,8 @@ def test_overlap_pairs_containment_score(spark):
     (every fingerprint of the small doc's shingle stream also arises in the
     large one's — containment normalization); the unrelated doc pairs with
     neither."""
-    from al_drift_detection_spark.functions._persist import release
     from al_drift_detection_spark.functions.dedup import winnow_overlap_pairs
+    from al_drift_detection_spark.persist import persist_scope
 
     small = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     big = (
@@ -112,9 +112,9 @@ def test_overlap_pairs_containment_score(spark):
                      "completely different content with zero common runs ok"],
         })
     )
-    pairs = winnow_overlap_pairs(df, threshold=0.1)
-    got = pairs.toPandas()
-    release(pairs)
+    with persist_scope():
+        pairs = winnow_overlap_pairs(df, threshold=0.1)
+        got = pairs.toPandas()
     assert set(map(tuple, got[["a_id", "b_id"]].values)) == {(0, 1)}
     # containment: most of the small doc's fingerprints re-occur in big —
     # boundary windows at the paste seam may select differently, so the

@@ -1,6 +1,9 @@
 """Local replica of the driver's correctness gate: run every queries() entry
 on Spark AND its oracle_sql() on DuckDB at sf0.01, compare row count, column
-names, and order-insensitive value hash. Usage:
+names, and order-insensitive value hash. Each query runs inside a persist
+scope; a query that still leaves a new persistent RDD behind after the scope
+exits is reported on a LEAK line (informational — the pass/fail rule is the
+oracle comparison alone). Usage:
 
     python tools/check_oracles.py [sf_dir] [query ...]
 """
@@ -31,6 +34,12 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
+def persistent_ids(spark) -> set:
+    """Ids of the session's persistent RDDs (an id set, not a count: the
+    ContextCleaner may free unrelated RDDs while a query runs)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     if "/" not in sf:  # bare "sf0.01" → resolve against the testdata root
@@ -52,6 +61,7 @@ def main() -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
 
     from al_drift_detection_spark.operators import REGISTRY
+    from al_drift_detection_spark.persist import persist_scope
 
     qs = E.queries()
     n_fail = 0
@@ -74,12 +84,18 @@ def main() -> int:
             )
             sqls = {}
         spark.catalog.clearCache()  # no cross-query persisted-frame buildup
+        before = persistent_ids(spark)
         try:
-            got = fn(spark, sf).toPandas()
+            with persist_scope():
+                got = fn(spark, sf).toPandas()
         except Exception as ex:
             print(f"FAIL  {name}: spark error: {str(ex).splitlines()[0][:160]}")
             n_fail += 1
             continue
+        finally:
+            left = persistent_ids(spark) - before
+            if left:
+                print(f"LEAK  {name}: {len(left)} persistent RDD(s) left after its scope")
         if name not in sqls:
             print(f"ROWS  {name}: {len(got)} rows (no oracle)")
             continue
