@@ -476,7 +476,7 @@ def ingestion_gaps(
     """
     # parquet NTZ timestamps cannot cast to double directly — hop through
     # TIMESTAMP (session TZ pinned UTC, so values are unchanged; the same
-    # convention as streaming_window_stats)
+    # convention as streaming/closed._windowed)
     sec = F.col(ts_col).cast("timestamp").cast("double")
     src = df.select(
         F.col(window_col).alias("window_id"),

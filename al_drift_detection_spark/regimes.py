@@ -273,9 +273,8 @@ def assign_drift_regimes(
     for r in sk_rows:
         # percentile over an all-NULL window group returns NULL — normalize to
         # an EMPTY sketch so ks_2samp yields (0.0, 1.0) and the window inherits
-        # the current regime, exactly like the streaming form
-        # (stateful_regimes builds np.empty(0) for valueless batches); without
-        # this np.asarray(None) is a 0-d nan array and searchsorted raises
+        # the current regime; without this np.asarray(None) is a 0-d nan
+        # array and searchsorted raises
         cur_sketch = {
             c: np.asarray(r[c] if r[c] is not None else [], dtype=np.float64)
             for c in value_cols

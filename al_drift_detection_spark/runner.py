@@ -47,6 +47,16 @@ def default_suite() -> S.CheckSuite:
     )
 
 
+def _col_pair(value: str) -> tuple[str, str]:
+    """argparse type for the two-column options (--slice-drift SLICE:VALUE,
+    --cond-completeness COND:TARGET): a malformed value exits 2 at parse
+    time, before any Spark work or output write."""
+    left, sep, right = value.partition(":")
+    if not (sep and left and right):
+        raise argparse.ArgumentTypeError(f"expects two columns as A:B, got {value!r}")
+    return left, right
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description="PySpark validation + drift engine")
     ap.add_argument("--images", default=None, help="parquet path or synthetic:N")
@@ -121,6 +131,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument(
         "--slice-drift", action="append", default=None, metavar="SLICE:VALUE",
+        type=_col_pair,
         help="per-SLICE drift drill-down: PSI of VALUE's distribution per "
         "(SLICE value × window) vs the slice's OWN reference-window "
         "distribution (deterministic ref-top-20 + '(other)' universe; "
@@ -133,7 +144,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument(
         "--cond-completeness", action="append", default=None,
-        metavar="COND:TARGET",
+        metavar="COND:TARGET", type=_col_pair,
         help="CONDITIONAL completeness drill-down: null-ratio of TARGET per "
         "(COND category × window) vs the category's OWN reference-window "
         "ratio (deterministic ref-top-20 + '(other)' universe; repeatable, "
@@ -258,12 +269,16 @@ def main(argv: list[str] | None = None) -> int:
         help="run the CLOSED-WINDOW streaming verdict family instead of the "
         "batch pass: stage the images table as an event-time file-source "
         "feed and run KS/PSI/MMD drift + volume/completeness health + KMV "
-        "uniqueness (+ chi-square cat-drift per --cat-drift column) as "
-        "Structured Streaming queries with parquet sinks under --out "
-        "(stream_drift/, stream_health/, stream_uniqueness/, "
-        "stream_cat_drift_<col>/). References come from the same "
-        "window_id < --ref-windows rows the batch pass uses, so verdicts "
-        "are comparable 1:1 (window_id = (window_start - BASE)/W)",
+        "uniqueness + quantiles + association + heavy hitters (+ chi-square "
+        "cat-drift per --cat-drift column) as ONE Structured Streaming query "
+        "over one read of the feed, writing the generic stream_combined/ "
+        "sink and its per-family split under --out (stream_drift/, "
+        "stream_health/, stream_uniqueness/, stream_cat_drift_<col>/, ...). "
+        "A family that raises fails only its own windows (one 'error' row "
+        "each); the run still writes every sink, reports error_rows and "
+        "exits 1. References come from the same window_id < --ref-windows "
+        "rows the batch pass uses, so verdicts are comparable 1:1 "
+        "(window_id = (window_start - BASE)/W)",
     )
     ap.add_argument(
         "--stream-window", type=int, default=300, metavar="SECONDS",
@@ -300,15 +315,6 @@ def main(argv: list[str] | None = None) -> int:
         "history. Atomic marker commit; crash anywhere leaves the store "
         "logically unchanged",
     )
-    ap.add_argument(
-        "--stream-combined", action="store_true",
-        help="run every --stream verdict family in ONE streaming query over "
-        "ONE read of the feed (closed_multi: shared projection + one tagged "
-        "pre-reducer + one stateful dispatcher) instead of one share-nothing "
-        "query per family — N families cost one corpus scan, not N. Writes "
-        "the generic stream_combined/ sink, then splits it into the same "
-        "per-family directories with identical rows",
-    )
     ap.add_argument("--resume", action="store_true", help="skip partitions already passed in checkpoint")
     ap.add_argument("--run-id", default="run1")
     ap.add_argument(
@@ -322,6 +328,8 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.crossings and (args.orbits is None or args.drifts is None):
         ap.error("--crossings requires --orbits CSV_GLOB and --drifts FILE")
+    if args.crossings and args.sets > 1 and "{set}" not in args.drifts:
+        ap.error("--crossings --sets N needs a '{set}' placeholder in --drifts")
 
     spark = get_spark(app_name="al-drift-validation", master=args.master)
     t0 = time.perf_counter()
@@ -333,13 +341,6 @@ def main(argv: list[str] | None = None) -> int:
         from al_drift_detection_spark.orbits import NON_FEATURE_COLS
         from al_drift_detection_spark.sources import read_orbit_csvs
 
-        if args.orbits is None:
-            ap.error("--crossings needs --orbits (the labeled corpus CSVs)")
-        if args.drifts is None:
-            ap.error("--crossings needs --drifts (a '{orbit} {drift}' file, "
-                     "e.g. a previous --orbits run's drifts.txt)")
-        if args.sets > 1 and "{set}" not in args.drifts:
-            ap.error("--crossings --sets N needs a '{set}' placeholder in --drifts")
         corpus = read_orbit_csvs(spark, args.orbits, schema=args.orbit_schema)
         numeric = {"double", "float", "int", "bigint", "smallint", "tinyint", "long"}
         feats = [
@@ -487,43 +488,23 @@ def main(argv: list[str] | None = None) -> int:
         from al_drift_detection_spark.streaming import driver as stream_driver
 
         cat_cols = args.cat_drift or []
-        slice_pairs = []
-        for spec in args.slice_drift or []:
-            try:
-                slice_col, value_col = spec.split(":", 1)
-            except ValueError:
-                print(f"--slice-drift expects SLICE:VALUE, got {spec!r}",
-                      file=sys.stderr)
-                return 2
-            slice_pairs.append((slice_col, value_col))
-        cond_pairs = []
-        for spec in args.cond_completeness or []:
-            try:
-                cond_col, target_col = spec.split(":", 1)
-            except ValueError:
-                print(f"--cond-completeness expects COND:TARGET, got {spec!r}",
-                      file=sys.stderr)
-                return 2
-            cond_pairs.append((cond_col, target_col))
         n_windows = stream_driver.stage_bounded_stream(
             meta_full, f"{args.out}/_stream_input",
             args.stream_window, args.stream_watermark,
         )
         refs = stream_driver.build_references(
-            meta_full, args.ref_windows, cat_cols, slice_pairs=slice_pairs,
-            cond_pairs=cond_pairs,
+            meta_full, args.ref_windows, cat_cols,
+            slice_pairs=args.slice_drift or [],
+            cond_pairs=args.cond_completeness or [],
         )
-        run_streams = (
-            stream_driver.run_closed_streams_combined
-            if args.stream_combined
-            else stream_driver.run_closed_streams
-        )
-        counts = run_streams(
+        counts = stream_driver.run_closed_streams_combined(
             spark, f"{args.out}/_stream_input", args.out, refs, cat_cols,
             window_seconds=args.stream_window,
             watermark=f"{args.stream_watermark} seconds",
             slide_seconds=args.stream_slide,
         )
+        if args.changepoint or args.trend:
+            series = stream_driver.stream_series(spark, args.out, args.stream_window)
         if args.changepoint:
             # sequential detector over the STREAMING verdict series: the
             # closed-window sinks are durable O(windows) tables, so the
@@ -537,36 +518,13 @@ def main(argv: list[str] | None = None) -> int:
                 normalized_page_hinkley,
             )
 
-            wid = (
-                (F.unix_timestamp("window_start")
-                 - F.unix_timestamp(F.lit(stream_driver.BASE_TS)))
-                / args.stream_window
-            ).cast("long").alias("window_id")
-            frames = []
-            vol = (
-                spark.read.parquet(f"{args.out}/stream_health")
-                .select(wid, F.col("n_rows").cast("double").alias("x"))
-                .distinct()  # one n_rows per window, repeated across checks
-            )
-            frames.append(
+            frames = [
                 normalized_page_hinkley(
-                    vol, "window_id", "x", args.ref_windows,
+                    ser, "window_id", "x", args.ref_windows,
                     delta=args.ph_delta, threshold=args.ph_threshold,
-                ).withColumn("signal", F.lit("volume"))
-            )
-            drift_tbl = spark.read.parquet(f"{args.out}/stream_drift").filter(
-                F.col("kernel") == "ks"
-            )
-            for col in ("w", "h"):
-                ser = drift_tbl.filter(F.col("column") == col).select(
-                    wid, F.col("statistic").alias("x")
-                )
-                frames.append(
-                    normalized_page_hinkley(
-                        ser, "window_id", "x", args.ref_windows,
-                        delta=args.ph_delta, threshold=args.ph_threshold,
-                    ).withColumn("signal", F.lit(f"ks:{col}"))
-                )
+                ).withColumn("signal", F.lit(signal))
+                for signal, _, _, ser in series
+            ]
             cp = frames[0]
             for f in frames[1:]:
                 cp = cp.unionByName(f)
@@ -574,41 +532,23 @@ def main(argv: list[str] | None = None) -> int:
                 f"{args.out}/stream_changepoint"
             )
         if args.trend:
-            # retrospective Mann-Kendall over the STREAMING verdict series
-            # (the --changepoint stream-mode pattern): per-window volume and
-            # each drift column's KS statistic, keyed into the repository's
-            # (part, column, metric) series shape so trend_verdicts applies
-            # unchanged — catches a slow creep across windows that neither
-            # the per-window verdicts nor the level-shift detector alarm on
+            # retrospective Mann-Kendall over the same STREAMING series,
+            # keyed into the repository's (part, column, metric) series
+            # shape so trend_verdicts applies unchanged — catches a slow
+            # creep across windows that neither the per-window verdicts nor
+            # the level-shift detector alarm on
             from al_drift_detection_spark.functions.anomaly import (
                 trend_verdicts,
             )
 
-            wid = (
-                (F.unix_timestamp("window_start")
-                 - F.unix_timestamp(F.lit(stream_driver.BASE_TS)))
-                / args.stream_window
-            ).cast("long").alias("run_ts")
             frames = [
-                spark.read.parquet(f"{args.out}/stream_health")
-                .select(wid, F.col("n_rows").cast("double").alias("value"))
-                .distinct()
-                .select(
-                    F.lit(0).alias("part"), F.lit("volume").alias("column"),
-                    F.lit("n_rows").alias("metric"), "value", "run_ts",
+                ser.select(
+                    F.lit(0).alias("part"), F.lit(column).alias("column"),
+                    F.lit(metric).alias("metric"), F.col("x").alias("value"),
+                    F.col("window_id").alias("run_ts"),
                 )
+                for _, column, metric, ser in series
             ]
-            drift_tbl = spark.read.parquet(f"{args.out}/stream_drift").filter(
-                F.col("kernel") == "ks"
-            )
-            for col in ("w", "h"):
-                frames.append(
-                    drift_tbl.filter(F.col("column") == col).select(
-                        F.lit(0).alias("part"), F.lit(col).alias("column"),
-                        F.lit("ks_stat").alias("metric"),
-                        F.col("statistic").alias("value"), wid,
-                    )
-                )
             ser = frames[0]
             for f in frames[1:]:
                 ser = ser.unionByName(f)
@@ -617,11 +557,17 @@ def main(argv: list[str] | None = None) -> int:
                 tr.orderBy("column", "metric").write.mode("overwrite").parquet(
                     f"{args.out}/stream_trend"
                 )
+        error_rows = (
+            spark.read.parquet(f"{args.out}/stream_combined")
+            .filter(F.col("verdict") == "error")
+            .count()
+        )
         print(json.dumps({
             "mode": "stream", "windows": n_windows, "tables": counts,
+            "error_rows": error_rows,
             "wall_sec": round(time.perf_counter() - t0, 2), "out": args.out,
         }))
-        return 0
+        return 1 if error_rows else 0
 
     meta = meta_full
     if args.resume:
@@ -930,13 +876,7 @@ def main(argv: list[str] | None = None) -> int:
 
         with persist_scope():
             frames = []
-            for spec in args.slice_drift:
-                try:
-                    slice_col, value_col = spec.split(":", 1)
-                except ValueError:
-                    print(f"--slice-drift expects SLICE:VALUE, got {spec!r}",
-                          file=sys.stderr)
-                    return 2
+            for slice_col, value_col in args.slice_drift:
                 sd = sliced_psi_drift(
                     meta, value_col, slice_col, "window_id",
                     ref_filter=F.col("window_id") < args.ref_windows,
@@ -988,13 +928,7 @@ def main(argv: list[str] | None = None) -> int:
 
         with persist_scope():
             frames = []
-            for spec in args.cond_completeness:
-                try:
-                    cond_col, target_col = spec.split(":", 1)
-                except ValueError:
-                    print(f"--cond-completeness expects COND:TARGET, got {spec!r}",
-                          file=sys.stderr)
-                    return 2
+            for cond_col, target_col in args.cond_completeness:
                 cc = conditional_completeness_drift(
                     meta_full, cond_col, target_col, "window_id",
                     ref_filter=F.col("window_id") < args.ref_windows,

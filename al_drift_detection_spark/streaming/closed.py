@@ -48,11 +48,16 @@ spec:
   rows back to the family's own schema;
 - `closed(stream_df, ts_col, spec)` is the one-family form —
   `split_closed(closed_multi(..., [spec]), spec)` — used by the
-  share-nothing driver mode (one query and checkpoint per family) and the
-  per-family parity tests. Combined and one-family sinks are therefore the
-  same code; their row-for-row equality is pinned in
-  tests/test_closed_combined.py and each family's sink schema in
-  tests/test_plans.py.
+  share-nothing driver (driver.run_closed_streams: one query and checkpoint
+  per family, the parity reference) and the per-family parity tests.
+  Combined and one-family sinks are therefore the same code; their
+  row-for-row equality is pinned in tests/test_closed_combined.py and each
+  family's sink schema in tests/test_plans.py;
+- a spec that raises fails only its own (check, window): that window
+  closes on time with one 'error' row naming the exception class, and
+  every other family's rows are those of a clean run (closed_multi;
+  pinned in tests/test_closed_combined.py). One poisoned family therefore
+  never halts the single combined query `runner --stream` runs.
 
 Partials and state ride GENERIC mergeable slots (`_n` + long/double/
 double-array vectors) so the combined state store has one schema; every
@@ -89,6 +94,8 @@ first-emission-wins read path for that.
 
 from __future__ import annotations
 
+import sys
+import traceback
 from dataclasses import dataclass
 from typing import Callable
 
@@ -110,13 +117,15 @@ from al_drift_detection_spark.kernels import (
 # generic mergeable slots shared by every family: a count plus one vector of
 # each payload shape. Unused slots ride as empty arrays (a few bytes per
 # partial row / state entry).
+# `_err` / `err` carry the exception class name of a failed spec (NULL on
+# the clean path — closed_multi's fault isolation).
 _PARTIAL_FIELDS = (
     "_n long, _longs array<long>, _dbls array<double>, "
-    "_dblss array<array<double>>, _strs array<string>"
+    "_dblss array<array<double>>, _strs array<string>, _err string"
 )
 GEN_STATE_SCHEMA = (
     "n long, longs array<long>, dbls array<double>, "
-    "dblss array<array<double>>, strs array<string>"
+    "dblss array<array<double>>, strs array<string>, err string"
 )
 GEN_OUT_SCHEMA = (
     "window_start timestamp, window_end timestamp, check string, "
@@ -153,6 +162,15 @@ class ClosedSpec:
     prepare: Callable[[DataFrame], DataFrame] | None = None
 
 
+def _fault(check: str, e: Exception) -> str:
+    """Record a spec's exception (traceback to the Python worker's stderr,
+    i.e. the executor log) and return the class name its 'error' row
+    carries (closed_multi's fault isolation)."""
+    print(f"closed_multi: check {check!r} raised", file=sys.stderr)
+    traceback.print_exception(e, file=sys.stderr)
+    return type(e).__name__
+
+
 def _windowed(stream_df: DataFrame, ts_col: str, window: str, slide: str | None = None):
     """Frame with the event-time window's (start, end) as columns — the
     group key for the stateful close. Tumbling by default; a `slide` <
@@ -163,9 +181,9 @@ def _windowed(stream_df: DataFrame, ts_col: str, window: str, slide: str | None 
     key, the per-window-end timeout — is already window-instance-keyed, so
     each overlapping window closes independently with a verdict over its
     full row set. Parquet NTZ timestamps are cast (session TZ pinned UTC,
-    values unchanged — streaming_window_stats convention). The watermark is
-    declared AFTER the pre-reducer (on `_pre_ts`): mapInPandas mints new
-    attributes, which would sever a watermark declared here."""
+    values unchanged). The watermark is declared AFTER the pre-reducer (on
+    `_pre_ts`): mapInPandas mints new attributes, which would sever a
+    watermark declared here."""
     d = stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     w = F.window(F.col(ts_col), window, slide) if slide else F.window(F.col(ts_col), window)
     return d.withColumn("_w", w).withColumn(
@@ -208,14 +226,21 @@ def _pre_reduce(proj: DataFrame, specs: list[ClosedSpec], watermark: str) -> Dat
                 for name, locals_, reduce_ in plan:
                     gl = g[[f"{name}__{c}" for c in locals_]]
                     gl.columns = locals_
-                    n, longs, dbls, dblss, *rest = reduce_(gl)
+                    try:
+                        n, longs, dbls, dblss, *rest = reduce_(gl)
+                    except Exception as e:
+                        # an error partial: it fails this spec's
+                        # (check, window) state in the dispatcher
+                        rows.append((ws, we, pre_ts, name, 0, [], [], [], [],
+                                     _fault(name, e)))
+                        continue
                     strs = rest[0] if rest else None
                     rows.append((ws, we, pre_ts, name, n, longs or [],
-                                 dbls or [], dblss or [], strs or []))
+                                 dbls or [], dblss or [], strs or [], None))
             yield pd.DataFrame(
                 rows,
                 columns=["_w_start", "_w_end", "_pre_ts", "_check",
-                         "_n", "_longs", "_dbls", "_dblss", "_strs"],
+                         "_n", "_longs", "_dbls", "_dblss", "_strs", "_err"],
             )
 
     schema = (
@@ -252,7 +277,16 @@ def closed_multi(
     entry and close verdict belong to exactly one spec — per-(check, window)
     timeouts fire independently, so each family's emission times match its
     one-family query (`closed`). Output is the generic long format
-    (GEN_OUT_SCHEMA); `split_closed` recovers each family's own frame."""
+    (GEN_OUT_SCHEMA); `split_closed` recovers each family's own frame.
+
+    FAULT ISOLATION: a spec whose reduce, fold or close raises (any
+    `Exception`) fails only its own (check, window). A raising reduce turns
+    the chunk's partial into an error partial, a raising fold marks the
+    state failed (its sums are dropped and later partials ignored), a
+    raising close removes the state. The window still closes once, at its
+    normal time, with ONE generic row: verdict 'error', s1 = the exception
+    class name, every other column NULL. Every other (check, window) runs
+    on untouched."""
     if len({s.name for s in specs}) != len(specs):
         raise ValueError("spec names must be unique")
     # capture only picklable pieces — the specs' `cols` hold JVM Column refs
@@ -262,18 +296,35 @@ def closed_multi(
         check, w_start, w_end = key[0], key[1], key[2]
         init, fold, close, to_generic = impl[check]
         if state.hasTimedOut:
-            rows = close(tuple(state.get), w_start, w_end)
+            *st, err = state.get
             state.remove()
+            rows = []
+            if err is None:
+                try:
+                    rows = [(w_start, w_end, check) + to_generic(r)
+                            for r in close(tuple(st), w_start, w_end)]
+                except Exception as e:
+                    err = _fault(check, e)
+            if err is not None:
+                rows = [(w_start, w_end, check, err) + (None,) * 7 + ("error",)]
             if rows:
-                yield pd.DataFrame(
-                    [(w_start, w_end, check) + to_generic(r) for r in rows],
-                    columns=GEN_OUT_COLUMNS,
-                )
+                yield pd.DataFrame(rows, columns=GEN_OUT_COLUMNS)
             return
-        st = tuple(state.get) if state.exists else init()
+        *st, err = state.get if state.exists else (*init(), None)
+        st = tuple(st)
         for pdf in pdfs:
-            st = fold(st, pdf)
-        state.update(tuple(st))
+            if err is not None:
+                continue  # a failed (check, window) ignores later partials
+            failed = pdf["_err"].dropna()
+            if len(failed):
+                err = failed.iloc[0]
+                continue
+            try:
+                st = fold(st, pdf)
+            except Exception as e:
+                err = _fault(check, e)
+        # a failed state keeps only its error; its partial sums are dropped
+        state.update((0, [], [], [], [], err) if err is not None else tuple(st) + (None,))
         _arm_timeout(state, w_end)
         return
         yield  # pragma: no cover — generator form
@@ -289,10 +340,16 @@ def closed_multi(
 def split_closed(generic_df: DataFrame, spec: ClosedSpec) -> DataFrame:
     """Project one check's rows out of a closed_multi (generic) frame back
     to the family's own schema — the inverse of spec.to_generic; the
-    schema each family's sink gets is pinned in tests/test_plans.py."""
+    schema each family's sink gets is pinned in tests/test_plans.py. A
+    failed window's 'error' row keeps its window bounds and verdict and
+    reads NULL in every other column (a family without a verdict column
+    shows it as an all-NULL row)."""
+    failed = F.col("verdict") == "error"
     cols = [F.col("window_start"), F.col("window_end")]
     for gen, out, cast in spec.split_fields:
         c = F.col(gen)
+        if gen != "verdict":
+            c = F.when(failed, F.lit(None)).otherwise(c)
         cols.append((c.cast(cast) if cast else c).alias(out))
     return generic_df.filter(F.col("check") == spec.name).select(*cols)
 
@@ -513,9 +570,9 @@ def drift_scores_spec(
     Raw rows pre-reduce per chunk to (count, ≤2·max_n-value bounded sample)
     partials before the stateful shuffle (module docstring); the state task
     merges samples under the same 2·max_n cap, above which the merged
-    sorted sample collapses to its even-stride grid (the stateful_drift.py
-    precedent) — the kernels subsample to max_n per side anyway, so the
-    collapse costs no detection power. Windows that fit under the cap score
+    sorted sample collapses to its even-stride grid (kernels.subsample) —
+    the kernels subsample to max_n per side anyway, so the collapse costs
+    no detection power. Windows that fit under the cap score
     on their exact row multiset, so their verdicts equal drift_scores on
     the same rows (split-window parity pinned in
     tests/test_closed_windows.py); n_rows always reports the window's TRUE

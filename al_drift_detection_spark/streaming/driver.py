@@ -273,10 +273,11 @@ def _w_bucket_col(w_lo: float, w_hi: float):
 
 def stream_specs(refs: dict, cat_cols: list[str]) -> list:
     """The CLI stream's verdict families as ClosedSpecs — ONE config list
-    shared verbatim by the share-nothing path (run_closed_streams: one
-    closed.closed query per spec) and the single-scan combined path
-    (run_closed_streams_combined: every spec in one closed_multi query), so
-    the two modes cannot diverge on thresholds, universes, or references.
+    shared verbatim by the single-scan combined path the CLI runs
+    (run_closed_streams_combined: every spec in one closed_multi query) and
+    its share-nothing parity reference (run_closed_streams: one
+    closed.closed query per spec), so the two cannot diverge on thresholds,
+    universes, or references.
     Spec names are the sink directory names."""
     from al_drift_detection_spark.streaming import closed as C
 
@@ -351,15 +352,11 @@ def _stream_state_partitions(
 
     Scale-adaptive rule, not a local constant: N concurrently-running
     queries divide the session's shuffle-partition budget, floor 4 (the
-    fold stays parallel; a deployment with orders of magnitude more
-    in-flight windows per trigger raises the session's
-    spark.sql.shuffle.partitions — or sets
-    SPARK_GRAFT_STREAM_STATE_PARTITIONS — and this scales with it).
-    Returns None when the budget is unparseable (leave the conf alone).
+    fold stays parallel). spark.sql.shuffle.partitions is the one
+    deployment knob: a deployment with orders of magnitude more in-flight
+    windows per trigger raises it and this scales with it. Returns None
+    when the budget is unparseable (leave the conf alone).
     """
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        return max(1, int(env))
     try:
         budget = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
@@ -409,7 +406,8 @@ def run_closed_streams(
     (share-nothing), so a failed sink resumes from its own checkpoint
     without touching the others — the streaming analog of the batch
     checkpoint's per-partition resume. N families therefore cost N corpus
-    scans; run_closed_streams_combined is the single-scan mode."""
+    scans; run_closed_streams_combined is the single-scan mode the CLI
+    runs, and this mode is its parity reference."""
     from al_drift_detection_spark.streaming.closed import closed
 
     window = f"{window_seconds} seconds"
@@ -472,11 +470,13 @@ def run_closed_streams_combined(
     rows — into the SAME per-family directories run_closed_streams writes,
     with identical schemas and rows (parity pinned in
     tests/test_closed_combined.py). The reference analog: the detector
-    scores ALL features in one window pass (gan.py:730-735).
+    scores ALL features in one window pass (gan.py:730-735). This is the
+    path `runner --stream` runs.
 
-    Trade-off vs share-nothing: one checkpoint for all families (a poison
-    row in one family halts the whole pass instead of one sink), which is
-    the price of N× fewer corpus scans and triggers at 100 TB."""
+    A family that raises fails only its own windows: each closes with one
+    'error' row (closed.closed_multi's fault isolation) and every other
+    family's sink is that of a clean run, so one checkpoint for all
+    families costs no isolation."""
     from al_drift_detection_spark.streaming.closed import closed_multi, split_closed
 
     specs = stream_specs(refs, cat_cols)
@@ -492,8 +492,7 @@ def run_closed_streams_combined(
         slide=f"{slide_seconds} seconds" if slide_seconds else None,
     )
     # ONE query, HALF the shuffle-partition budget (n_concurrent=2 in the
-    # _stream_state_partitions formula; SPARK_GRAFT_STREAM_STATE_PARTITIONS
-    # still overrides): the dispatcher's per-trigger input is KB-sized
+    # _stream_state_partitions formula): the dispatcher's per-trigger input is KB-sized
     # partials, so per-partition fixed costs (task launch + fresh Python
     # worker + state-store commit, every trigger) dominate — but unlike a
     # share-nothing query it folds EVERY family's state, so it needs more
@@ -522,3 +521,31 @@ def run_closed_streams_combined(
         )
         counts[spec.name] = spark.read.parquet(f"{out_dir}/{spec.name}").count()
     return counts
+
+
+def stream_series(
+    spark: SparkSession, out_dir: str, window_seconds: int
+) -> list[tuple[str, str, str, DataFrame]]:
+    """The per-window metric series the sequential detectors read from the
+    closed-window sinks (`runner --stream --changepoint` / `--trend`), as
+    (signal, column, metric, frame) with frame = (window_id, x): the
+    volume series (stream_health n_rows, one per window) and each drift
+    column's KS statistic (stream_drift). A failed window's 'error' row
+    carries no metric and stays out of the series."""
+    wid = (
+        (F.unix_timestamp("window_start") - F.unix_timestamp(F.lit(BASE_TS)))
+        / window_seconds
+    ).cast("long").alias("window_id")
+    volume = (
+        spark.read.parquet(f"{out_dir}/stream_health")
+        .filter(~F.col("verdict").eqNullSafe("error"))
+        .select(wid, F.col("n_rows").cast("double").alias("x"))
+        .distinct()  # one n_rows per window, repeated across checks
+    )
+    # error rows have a NULL kernel, so the KS filter already drops them
+    ks = spark.read.parquet(f"{out_dir}/stream_drift").filter(F.col("kernel") == "ks")
+    return [("volume", "volume", "n_rows", volume)] + [
+        (f"ks:{c}", c, "ks_stat",
+         ks.filter(F.col("column") == c).select(wid, F.col("statistic").alias("x")))
+        for c in ("w", "h")
+    ]

@@ -171,25 +171,148 @@ def test_combined_is_one_scan_one_stateful_op(spark, staged):
     assert not audit_streaming_stateful(plan), audit_streaming_stateful(plan)
 
 
-def test_combined_cli(spark, tmp_path_factory):
-    """`runner --stream --stream-combined` end-to-end: same sinks, same
-    golden as the share-nothing CLI (volume passes all 6 windows; the
-    generic stream_combined sink exists)."""
-    from al_drift_detection_spark import runner
+# ---- per-family fault isolation (closed_multi) ----------------------------
+# One closed_multi query runs a clean family next to three families planted
+# to raise on window 1 — in reduce, fold and close respectively — and is
+# compared with the same query where nothing raises. Window 1 arrives as TWO
+# micro-batches (the first carries the poison), so a failed state must also
+# ignore a later partial.
 
-    out = str(tmp_path_factory.mktemp("cli") / "out")
-    rc = runner.main([
-        "--images", "synthetic:6000", "--out", out, "--stream",
-        "--stream-combined", "--cat-drift", "fmt", "--master", "local[8]",
-    ])
-    assert rc == 0
-    gen = spark.read.parquet(f"{out}/stream_combined")
-    assert set(gen.select("check").distinct().toPandas()["check"]) == {
-        "stream_drift", "stream_health", "stream_uniqueness",
-        "stream_quantiles", "stream_association", "stream_frequent",
-        "stream_cat_drift_fmt",
-    }
-    health = spark.read.parquet(f"{out}/stream_health").toPandas()
-    vol = health[health["check"] == "volume"]
-    assert len(vol) == 3  # synthetic:6000 → 3 positional windows
-    assert (vol["verdict"] == "pass").all()
+POISON_WINDOW = BASE + pd.Timedelta(minutes=5)
+POISON_REF = {"png": 0.5, "jpeg": 0.4, "bmp": 0.1}
+STAGES = ("reduce", "fold", "close")
+
+
+@pytest.fixture(scope="module")
+def poison_feed(spark, tmp_path_factory):
+    from tests.test_closed_windows import _write_batches
+
+    rng = np.random.default_rng(11)
+
+    def frag(n, start_s, span_s, poison):
+        return pd.DataFrame({
+            "ts": [BASE + pd.Timedelta(seconds=int(start_s + s))
+                   for s in rng.integers(0, span_s, n)],
+            "fmt": rng.choice(["png", "jpeg", "bmp", "webp"], n,
+                              p=[0.45, 0.35, 0.1, 0.1]),
+            "poison": [poison] * n,
+        })
+
+    feed = str(tmp_path_factory.mktemp("poison") / "in")
+    _write_batches(spark, feed, [
+        frag(300, 0, 290, False),     # window 0
+        frag(150, 300, 140, True),    # window 1, first micro-batch
+        frag(150, 450, 140, False),   # window 1, second micro-batch
+        frag(300, 600, 290, False),   # window 2
+        frag(1, 3600, 1, False),      # sentinel: closes windows 0-2
+    ], schema="ts timestamp, fmt string, poison boolean")
+    return feed
+
+
+def _poisoned_spec(stage, armed):
+    """cat_drift named `poisoned_{stage}` that raises ZeroDivisionError in
+    `stage` on window 1 when `armed`. Closures only — they ship to the
+    Python workers by value."""
+    import dataclasses
+
+    from al_drift_detection_spark.streaming.closed import cat_drift_spec
+
+    base = cat_drift_spec("fmt", POISON_REF, name=f"poisoned_{stage}")
+    reduce_, fold_, close_ = base.reduce, base.fold, base.close
+
+    def reduce(g):
+        if armed and stage == "reduce" and g["_poison"].any():
+            raise ZeroDivisionError("planted")
+        n, longs, dbls, dblss = reduce_(g)
+        return n, longs, dbls, dblss, ["poison"] if g["_poison"].any() else []
+
+    def fold(st, pdf):
+        if armed and stage == "fold" and any("poison" in list(t) for t in pdf["_strs"]):
+            raise ZeroDivisionError("planted")
+        return fold_(st, pdf)
+
+    def close(st, w_start, w_end):
+        if (armed and stage == "close"
+                and pd.Timestamp(w_start).replace(tzinfo=None) == POISON_WINDOW):
+            raise ZeroDivisionError("planted")
+        return close_(st, w_start, w_end)
+
+    return dataclasses.replace(
+        base, cols={**base.cols, "_poison": F.col("poison")},
+        reduce=reduce, fold=fold, close=close,
+    )
+
+
+def _run_poison(spark, feed, armed, query_name):
+    from al_drift_detection_spark.streaming.closed import cat_drift_spec, closed_multi
+
+    stream = (
+        spark.readStream.schema("ts timestamp, fmt string, poison boolean")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed)
+    )
+    specs = [cat_drift_spec("fmt", POISON_REF, name="clean")] + [
+        _poisoned_spec(stage, armed) for stage in STAGES
+    ]
+    q = (
+        closed_multi(stream, "ts", specs, window="5 minutes", watermark="1 minute")
+        .writeStream.outputMode("append").format("memory")
+        .queryName(query_name).trigger(availableNow=True).start()
+    )
+    q.awaitTermination(180)
+    return spark.table(query_name), specs
+
+
+@pytest.fixture(scope="module")
+def poison_runs(spark, poison_feed):
+    """(clean generic rows, poisoned generic rows, the poisoned run's specs)"""
+    clean, _ = _run_poison(spark, poison_feed, False, "poison_clean")
+    poisoned, specs = _run_poison(spark, poison_feed, True, "poison_armed")
+    return clean, poisoned, specs
+
+
+def _rows(gen, check, window=None, skip_window=None):
+    """One family's generic rows as pandas, in window order (filtered in
+    Spark, so an error row elsewhere cannot change the dtypes)."""
+    sel = gen.filter(F.col("check") == check)
+    if window is not None:
+        sel = sel.filter(F.col("window_start") == window)
+    if skip_window is not None:
+        sel = sel.filter(F.col("window_start") != skip_window)
+    return sel.orderBy("window_start").toPandas()
+
+
+@pytest.mark.parametrize("stage", STAGES)
+def test_poisoned_family_fails_only_its_window(poison_runs, stage):
+    """A family raising in `stage` on window 1 does not halt the query: the
+    clean family's rows equal a clean run row for row, the poisoned family
+    emits exactly one 'error' row (naming the exception class) for window 1
+    and its other windows are unchanged, and every (family, window) emits
+    exactly once."""
+    from al_drift_detection_spark.streaming.closed import split_closed
+
+    ref, gen, specs = poison_runs
+    check = f"poisoned_{stage}"
+    windows = [BASE + pd.Timedelta(minutes=5 * i) for i in range(3)]
+
+    for name in ("clean", check):
+        assert _rows(gen, name)["window_start"].tolist() == windows, name
+    pd.testing.assert_frame_equal(_rows(gen, "clean"), _rows(ref, "clean"))
+    bad = _rows(gen, check, window=POISON_WINDOW)
+    assert bad["verdict"].tolist() == ["error"]
+    assert bad["s1"].tolist() == ["ZeroDivisionError"]
+    rest = bad.drop(columns=["window_start", "window_end", "check", "s1", "verdict"])
+    assert rest.isna().all(axis=None)
+    pd.testing.assert_frame_equal(
+        _rows(gen, check, skip_window=POISON_WINDOW),
+        _rows(ref, check, skip_window=POISON_WINDOW),
+    )
+    # non-vacuous: the unarmed twin scores window 1
+    assert _rows(ref, check, window=POISON_WINDOW)["verdict"].tolist() != ["error"]
+
+    # the family's own sink shows the failed window with NULL metrics
+    spec = next(s for s in specs if s.name == check)
+    fam = split_closed(gen, spec).toPandas()
+    row = fam[fam["window_start"] == POISON_WINDOW]
+    assert row["verdict"].tolist() == ["error"]
+    assert row[["n", "chi2_stat", "dof", "p_value"]].isna().all(axis=None)

@@ -371,7 +371,7 @@ def test_global_cumulative_null_sum_values(spark):
 
 def test_assign_drift_regimes_all_null_window(spark):
     """A window whose value column is entirely NULL must inherit the current
-    regime (matching stateful_regimes' empty-sketch behavior), not crash in
+    regime (an empty sketch scores KS (0.0, 1.0)), not crash in
     np.asarray(None) (ADVICE r2, medium)."""
     import numpy as np
 

@@ -596,10 +596,14 @@ def test_runner_cond_completeness_surface(spark, tmp_path):
         for r in rows
         if r["n_cur"] < 50
     )
-    assert runner.main([
-        "--images", "synthetic:3000", "--out", str(tmp_path / "o2"),
-        "--master", "local[8]", "--cond-completeness", "nocolon",
-    ]) == 2
+    # a bad spec is an argparse error: exit 2 before any work or write
+    with pytest.raises(SystemExit) as exc:
+        runner.main([
+            "--images", "synthetic:3000", "--out", str(tmp_path / "o2"),
+            "--master", "local[8]", "--cond-completeness", "nocolon",
+        ])
+    assert exc.value.code == 2
+    assert not (tmp_path / "o2").exists()
 
 
 def test_stream_cond_completeness_surface(spark, tmp_path):

@@ -442,12 +442,24 @@ def test_closed_family_sink_schema(spark, family):
 
 
 def test_streaming_stateful_by_part_passes_audit(spark):
-    """stateful_drift keys by `part` — a bounded physical unit (the orbit
-    rule), not an ingest window — and must NOT be flagged."""
-    s = _rate_stream(spark).selectExpr("CAST(v AS INT) % 8 AS part", "v")
-    from al_drift_detection_spark.streaming.stateful_drift import stateful_drift
+    """A stateful op keyed by `part` — a bounded physical unit (the orbit
+    rule), not an ingest window — is NOT flagged, even with no pre-reducer
+    under it (the audit's physical-unit branch)."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    assert not audit_streaming_stateful(analyzed_of(stateful_drift(s, ["v"])))
+    s = _rate_stream(spark).selectExpr("CAST(v AS INT) % 8 AS part", "v")
+
+    def fn(key, pdfs, state):
+        yield pd.DataFrame({"n": [0]})
+
+    by_part = s.groupBy("part").applyInPandasWithState(
+        fn, "n long", "n long", "append", GroupStateTimeout.NoTimeout
+    )
+    plan = analyzed_of(by_part)
+    assert "FlatMapGroupsInPandasWithState" in plan
+    assert "MapInPandas" not in plan  # the physical-unit branch decides
+    assert not audit_streaming_stateful(plan)
 
 
 def test_streaming_audit_catches_raw_funnel(spark):

@@ -165,8 +165,11 @@ def test_runner_slice_drift_surface(spark, tmp_path):
     assert all(
         r["verdict"] == "no_data" for r in rows if r["slice"] == "(other)"
     )
-    # bad spec fails loudly
-    assert runner.main([
-        "--images", "synthetic:3000", "--out", str(tmp_path / "o2"),
-        "--master", "local[8]", "--slice-drift", "nocolon",
-    ]) == 2
+    # a bad spec is an argparse error: exit 2 before any work or write
+    with pytest.raises(SystemExit) as exc:
+        runner.main([
+            "--images", "synthetic:3000", "--out", str(tmp_path / "o2"),
+            "--master", "local[8]", "--slice-drift", "nocolon",
+        ])
+    assert exc.value.code == 2
+    assert not (tmp_path / "o2").exists()

@@ -33,6 +33,83 @@ def stream_out(spark, tmp_path_factory):
     return out
 
 
+def test_stream_runs_one_combined_query(spark, stream_out):
+    """`runner --stream` runs every family in ONE streaming query (one
+    checkpoint): the generic stream_combined/ sink holds every family's
+    check tag and, on a clean run, no 'error' row."""
+    import os
+
+    assert os.listdir(f"{stream_out}/stream_ckpt") == ["stream_combined"]
+    gen = spark.read.parquet(f"{stream_out}/stream_combined").toPandas()
+    assert set(gen["check"]) == {
+        "stream_drift", "stream_health", "stream_uniqueness",
+        "stream_quantiles", "stream_association", "stream_frequent",
+        "stream_cat_drift_fmt",
+    }
+    assert not (gen["verdict"] == "error").any()
+
+
+def test_stream_poisoned_family_exits_1_and_writes_every_sink(
+    spark, tmp_path_factory, monkeypatch, capsys
+):
+    """A verdict family that raises fails only its own windows: the run
+    still writes every sink (the other families' verdicts intact), reports
+    one error row per failed window, and exits 1."""
+    import dataclasses
+    import json
+    import os
+
+    from al_drift_detection_spark import runner
+    from al_drift_detection_spark.streaming import driver
+
+    specs_of = driver.stream_specs
+
+    def poisoned_specs(refs, cat_cols):
+        def close(st, w_start, w_end):
+            raise ZeroDivisionError("planted")
+
+        return [
+            dataclasses.replace(s, close=close) if s.name == "stream_drift" else s
+            for s in specs_of(refs, cat_cols)
+        ]
+
+    monkeypatch.setattr(driver, "stream_specs", poisoned_specs)
+    out = str(tmp_path_factory.mktemp("poison_cli") / "out")
+    rc = runner.main([
+        "--images", "synthetic:4000", "--out", out, "--stream",
+        "--changepoint", "--trend", "--master", "local[8]",
+    ])
+    assert rc == 1
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["windows"] == 2
+    assert summary["error_rows"] == 2  # stream_drift's two windows
+    for name in [*summary["tables"], "stream_combined", "stream_changepoint",
+                 "stream_trend"]:
+        assert os.path.isdir(f"{out}/{name}"), name
+    drift = spark.read.parquet(f"{out}/stream_drift").toPandas()
+    assert len(drift) == 2 and (drift["verdict"] == "error").all()
+    health = spark.read.parquet(f"{out}/stream_health").toPandas()
+    assert (health["verdict"] == "pass").all()
+    assert len(health[health["check"] == "volume"]) == 2
+
+
+@pytest.mark.parametrize("bad", [
+    ["--stream", "--slice-drift", "fmt:w", "--slice-drift", "fmt:"],
+    ["--stream", "--stream-combined"],
+])
+def test_malformed_args_exit_2_before_any_work(tmp_path, bad):
+    """A malformed option value (an empty column; the no-colon case is in
+    the batch surface tests) or the removed --stream-combined flag is an
+    argparse error: exit 2 before any Spark work, --out never created."""
+    from al_drift_detection_spark import runner
+
+    out = tmp_path / "out"
+    with pytest.raises(SystemExit) as exc:
+        runner.main(["--images", "synthetic:4000", "--out", str(out), *bad])
+    assert exc.value.code == 2
+    assert not out.exists()
+
+
 def test_stream_changepoint_alarms_on_planted_windows(spark, stream_out):
     """--stream --changepoint: the sequential Page-Hinkley over the
     STREAMING verdict series (closed-window sinks) alarms exactly where the

@@ -1,74 +1,6 @@
 from __future__ import annotations
 
-import tempfile
-
-import pytest
 from pyspark.sql import functions as F
-
-
-def test_streaming_suite_runs_batches(spark, tmp_path_factory):
-    from al_drift_detection_spark import suite as S
-    from al_drift_detection_spark.streaming.validate import stream_suite
-
-    base = tmp_path_factory.mktemp("stream")
-    inp, out, ckpt = str(base / "in"), str(base / "out"), str(base / "ckpt")
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").withColumn(
-        "part", (F.col("event_id") % 4).cast("int")
-    )
-    ev.repartition(4).write.parquet(inp)
-
-    suite = S.CheckSuite(
-        checks=[S.not_null("event_type"), S.between("value", -1e6, 1e6)],
-        part_col="part",
-        row_id_col="event_id",
-    )
-    q = stream_suite(spark, inp, ev.schema, suite, out, ckpt, max_files_per_trigger=2)
-    q.awaitTermination(120)
-    verd = spark.read.parquet(out)
-    assert verd.count() > 0
-    assert {"check_name", "verdict", "batch_id"} <= set(verd.columns)
-    # multiple micro-batches processed (maxFilesPerTrigger=2 over 4 files)
-    assert verd.select("batch_id").distinct().count() >= 2
-    assert verd.filter(F.col("verdict") == "fail").count() == 0
-
-
-def test_streaming_window_stats_matches_batch(spark, tmp_path_factory):
-    from al_drift_detection_spark.streaming.validate import streaming_window_stats
-
-    base = tmp_path_factory.mktemp("stream2")
-    inp = str(base / "in")
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    ev.write.parquet(inp)
-
-    stream = spark.readStream.schema(ev.schema).parquet(inp)
-    agg = streaming_window_stats(stream, "ts", "value", window="1 hour", watermark="2 hours")
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("winstats")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT * FROM winstats").toPandas()
-
-    exp = (
-        ev.groupBy(F.window("ts", "1 hour"))
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.avg("value"), 6).alias("avg_v"))
-        .toPandas()
-    )
-    # append mode only emits windows the watermark has closed; all emitted
-    # rows must match the batch computation exactly
-    assert len(got) > 0
-    exp_map = {
-        (r["window"]["start"], r["window"]["end"]): (r["n"], r["avg_v"])
-        for _, r in exp.iterrows()
-    }
-    for _, r in got.iterrows():
-        key = (r["window_start"], r["window_end"])
-        assert key in exp_map
-        assert (r["n"], r["avg_v"]) == exp_map[key]
 
 
 def test_image_features_and_resize(spark):
