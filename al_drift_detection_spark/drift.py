@@ -116,10 +116,15 @@ def _w1_statistic(r: np.ndarray, cur: np.ndarray) -> float:
     small-unit ones). When BOTH sides are constant the distributions are
     two points: statistic 0.0 if they coincide, +inf otherwise (any
     deterministic shift of a constant column is maximal drift at every
-    scale)."""
-    sd = float(np.std(r))
+    scale). Constancy is decided by the range, not by std == 0: the std of
+    a constant float array is often a rounding residue (std([0.1]*3) is
+    1.4e-17), which would divide W1 by noise. An empty side (an all-NULL
+    column, a window with no sample) has no distance to measure: 0.0."""
+    if len(r) == 0 or len(cur) == 0:
+        return 0.0
+    sd = float(np.std(r)) if np.ptp(r) > 0 else 0.0
     if sd == 0.0:
-        sd = float(np.std(cur))
+        sd = float(np.std(cur)) if np.ptp(cur) > 0 else 0.0
     w1_raw = wasserstein_1d(r, cur)
     if sd > 0.0:
         return w1_raw / sd

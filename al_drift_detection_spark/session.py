@@ -7,6 +7,9 @@ and merely *tested* on local[N]:
 - AQE on (runtime re-plan: skew-join splitting, partition coalescing),
 - Arrow on (vectorized pandas UDF transfer),
 - UTC session timezone (oracle/DuckDB comparability),
+- a fresh Python worker per task; on a local master it forks from a
+  daemon that has already imported pandas and pyarrow (worker_daemon.py),
+  so no UDF task pays the library import,
 - shuffle partitions sized to the local core count (overridden on a real
   cluster to ~2-3x total executor cores via spark-submit conf).
 """
@@ -16,6 +19,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+DAEMON_MODULE = "al_drift_detection_spark.worker_daemon"
 
 
 def get_spark(
@@ -81,7 +86,7 @@ def get_spark(
         )
         # fresh Python worker per task: with this pyspark's reused-worker
         # pool, any pandas-UDF job following another ran 3-7x slower with
-        # idle CPUs (measured 12s → 89s); daemon forks are cheap and flat
+        # idle CPUs (measured 12s → 89s); daemon forks are cheap and flat.
         .config("spark.python.worker.reuse", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -90,6 +95,17 @@ def get_spark(
         # task and spills under high task concurrency
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     )
+    if master.startswith("local"):
+        # the daemon forks those fresh workers warm: worker_daemon imports
+        # pandas and pyarrow once, so a worker's CPU before its UDF runs
+        # fell from 0.24 s to 0.13 s and a 40-task mapInPandas job from
+        # 5.7-5.9 s to 2.0-2.4 s (median CPU; local[4] on a 4-vCPU host).
+        # Local executors inherit the PYTHONPATH set above, so the module
+        # imports there. A cluster executor starts its daemon before any
+        # --py-files archive is on its path, so it keeps pyspark.daemon
+        # (a submit that puts the engine on spark.executorEnv.PYTHONPATH
+        # can set this conf itself)
+        builder = builder.config("spark.python.daemon.module", DAEMON_MODULE)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -138,9 +138,9 @@ def build_references(
     reach the driver."""
     from al_drift_detection_spark.drift import build_reference_sample
 
-    # persisted: five bounded folds consume the reference projection (the
-    # quantile grids, the volume/null/uniqueness agg, the per-category
-    # counts, the w range, the fmt x w-bucket joint counts — plus the
+    # persisted: four bounded folds consume the reference projection (the
+    # quantile grids, the volume/null/uniqueness/w-range agg, the
+    # per-category counts, the fmt x w-bucket joint counts — plus the
     # optional sliced/cond builders) and each would otherwise re-scan the
     # full table for the reference windows' rows (r8; the
     # shared-expensive-child rule). All folds consume eagerly in this
@@ -148,11 +148,15 @@ def build_references(
     ref = meta.filter(F.col("window_id") < ref_windows).persist()
     samples = build_reference_sample(ref, ["w", "h"])
 
+    # one job for the scalar references: volume, null ratio, distinct
+    # ratio and the w range the association buckets are cut from
     agg = ref.agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("window_id").alias("nw"),
         F.avg(F.col("caption").isNull().cast("double")).alias("null_caption"),
         F.countDistinct("image_id").alias("n_ids"),
+        F.min(F.col("w").cast("double")).alias("w_lo"),
+        F.max(F.col("w").cast("double")).alias("w_hi"),
     ).collect()[0]
     refs = {
         "samples": samples,
@@ -183,12 +187,8 @@ def build_references(
     # health.association_drift would embed). O(grid) rows collected.
     import math
 
-    wr = ref.agg(
-        F.min(F.col("w").cast("double")).alias("lo"),
-        F.max(F.col("w").cast("double")).alias("hi"),
-    ).collect()[0]
-    w_lo = float(wr["lo"]) if wr["lo"] is not None else 0.0
-    w_hi = float(wr["hi"]) if wr["hi"] is not None else w_lo + 1.0
+    w_lo = float(agg["w_lo"]) if agg["w_lo"] is not None else 0.0
+    w_hi = float(agg["w_hi"]) if agg["w_hi"] is not None else w_lo + 1.0
     if w_hi <= w_lo:
         w_hi = w_lo + 1.0
     wb = _w_bucket_col(w_lo, w_hi)
@@ -345,8 +345,10 @@ def _stream_state_partitions(
     PARTIAL rows — thousands of bytes where one partition wants 100 MB+ —
     so per-partition fixed costs dominate: every trigger pays one task
     launch, one fresh Python worker (spark.python.worker.reuse=false, a
-    measured hard constraint for the batch pandas-UDF jobs), and one
-    state-store commit PER PARTITION PER QUERY. Measured at 1M rows /
+    measured hard constraint for the batch pandas-UDF jobs — a warm fork
+    of worker_daemon, which already holds pandas and pyarrow, not a cold
+    interpreter import), and one state-store commit PER PARTITION PER
+    QUERY. Measured at 1M rows /
     500 windows / 7 share-nothing queries on local[32]: 59.7 s at 32
     state partitions → 25.9 s at 4 — identical verdict rows.
 
@@ -513,14 +515,16 @@ def run_closed_streams_combined(
         )
         q.awaitTermination()
 
+    # every family's row count from one groupBy over the generic sink:
+    # split_closed filters on `check` and projects, so a family directory
+    # holds exactly its check's rows
     gen = spark.read.parquet(f"{out_dir}/stream_combined")
-    counts = {}
+    n_rows = {r["check"]: r["count"] for r in gen.groupBy("check").count().collect()}
     for spec in specs:
         split_closed(gen, spec).write.mode("overwrite").parquet(
             f"{out_dir}/{spec.name}"
         )
-        counts[spec.name] = spark.read.parquet(f"{out_dir}/{spec.name}").count()
-    return counts
+    return {spec.name: n_rows.get(spec.name, 0) for spec in specs}
 
 
 def stream_series(

@@ -62,6 +62,7 @@ def staged(spark, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def both_outputs(spark, staged, tmp_path_factory):
+    from tools.check_oracles import persistent_ids
     from al_drift_detection_spark.streaming.driver import (
         run_closed_streams,
         run_closed_streams_combined,
@@ -71,15 +72,25 @@ def both_outputs(spark, staged, tmp_path_factory):
     out_sep = str(tmp_path_factory.mktemp("sep"))
     out_comb = str(tmp_path_factory.mktemp("comb"))
     c_sep = run_closed_streams(spark, stage, out_sep, refs, ["fmt"])
+    rdds_before = persistent_ids(spark)
     c_comb = run_closed_streams_combined(spark, stage, out_comb, refs, ["fmt"])
-    return out_sep, c_sep, out_comb, c_comb
+    rdds_after = persistent_ids(spark)
+    return out_sep, c_sep, out_comb, c_comb, (rdds_before, rdds_after)
 
 
-def test_combined_counts_match_share_nothing(both_outputs):
-    _, c_sep, _, c_comb = both_outputs
+def test_combined_counts_match_share_nothing(spark, both_outputs):
+    _, c_sep, out_comb, c_comb, (rdds_before, rdds_after) = both_outputs
     assert c_sep == c_comb
     # non-vacuous: every family emitted its windows
     assert all(v > 0 for v in c_sep.values())
+    # the counts come from one groupBy over the generic sink, not from
+    # re-reading each family directory: they must still equal what each
+    # directory holds
+    for name, n in c_comb.items():
+        assert spark.read.parquet(f"{out_comb}/{name}").count() == n, name
+    # the split leaves nothing persisted behind (an id difference: the
+    # ContextCleaner may free earlier tests' RDDs while the query runs)
+    assert rdds_after - rdds_before == set()
 
 
 def test_combined_rows_match_share_nothing_per_family(spark, both_outputs):
@@ -87,7 +98,7 @@ def test_combined_rows_match_share_nothing_per_family(spark, both_outputs):
     share-nothing sinks row-for-row: identical schemas, identical values
     (exact for counts/strings/verdicts; 1e-9 for the float statistics whose
     pairwise-sum order can differ across merge orders)."""
-    out_sep, c_sep, out_comb, _ = both_outputs
+    out_sep, c_sep, out_comb, *_ = both_outputs
     for name in c_sep:
         a = spark.read.parquet(f"{out_sep}/{name}")
         b = spark.read.parquet(f"{out_comb}/{name}")
@@ -111,7 +122,7 @@ def test_combined_verdicts_see_planted_drift(spark, both_outputs):
     """Non-vacuous parity: the planted window-3 drift actually fails in the
     combined output (w shift → drift vote; dup surge → uniqueness;
     caption nulls → completeness; webp mix → cat drift)."""
-    _, _, out_comb, _ = both_outputs
+    _, _, out_comb, *_ = both_outputs
 
     def wid(pdf):
         return ((pdf["window_start"] - BASE).dt.total_seconds() // 300).astype(int)

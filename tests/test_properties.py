@@ -6,7 +6,7 @@ in milliseconds and catch boundary inputs the fixtures never produce."""
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import assume, given, settings
+from hypothesis import assume, example, given, settings
 from hypothesis import strategies as st
 
 from al_drift_detection_spark.kernels import (
@@ -101,6 +101,8 @@ def test_wasserstein_scale_equivariant(a, b, k):
 
 
 @given(samples, samples, st.floats(min_value=1e-6, max_value=1e9))
+@example(a=[1e-05] * 3, b=[0.0, 1.0], s=1e-06)
+@example(a=[0.0], b=[1e-05] * 3, s=1e-06)
 @settings(max_examples=40, deadline=None)
 def test_w1_statistic_scale_invariant(a, b, s):
     """The ADVISORY statistic drift._w1_statistic is UNIT-FREE on every
@@ -121,6 +123,17 @@ def test_w1_statistic_scale_invariant(a, b, s):
     c = np.full(8, 3.0)
     assert _w1_statistic(c, c.copy()) == 0.0
     assert np.isinf(_w1_statistic(c, c + s))
+
+
+def test_w1_statistic_empty_side_is_zero():
+    """An empty side (all-NULL column, window without a sample) scores 0.0
+    and never raises: the drift UDFs call this on such windows."""
+    from al_drift_detection_spark.drift import _w1_statistic
+
+    empty = np.empty(0)
+    assert _w1_statistic(np.full(3, 5.0), empty) == 0.0
+    assert _w1_statistic(empty, np.array([1.0, 2.0])) == 0.0
+    assert _w1_statistic(empty, empty) == 0.0
 
 
 @given(samples, samples)

@@ -43,3 +43,48 @@ def test_pyfiles_zip_reproducible(tmp_path):
     a = build_zip(repo_root, str(tmp_path / "a.zip"))
     b = build_zip(repo_root, str(tmp_path / "b.zip"))
     assert open(a, "rb").read() == open(b, "rb").read()
+
+
+def test_pyfiles_zip_runs_udfs_on_warm_workers(tmp_path):
+    """With the engine importable ONLY from the zip, a get_spark session
+    still starts its Python daemon and runs a pandas UDF: on a local master
+    the daemon module itself is imported from the archive."""
+    import json
+    import os
+
+    from tools.package_pyfiles import build_zip
+    import al_drift_detection_spark
+
+    repo_root = str(
+        __import__("pathlib").Path(al_drift_detection_spark.__file__).parent.parent
+    )
+    out = build_zip(repo_root, str(tmp_path / "engine.zip"))
+    code = """
+import json, sys
+import pandas as pd
+from al_drift_detection_spark.session import get_spark
+
+def probe(batches):
+    import al_drift_detection_spark
+    for _ in batches:
+        pass
+    yield pd.DataFrame({"main": [sys.modules["__main__"].__spec__.name],
+                        "pkg": [al_drift_detection_spark.__file__]})
+
+spark = get_spark(app_name="zip-probe", master="local[1]")
+rows = spark.range(2).mapInPandas(probe, "main string, pkg string").collect()
+print(json.dumps([r.asDict() for r in rows]))
+spark.stop()
+"""
+    env = dict(os.environ, PYTHONPATH=out, SPARK_DRIVER_MEM="512m")
+    r = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    rows = json.loads(r.stdout.strip().splitlines()[-1])
+    assert rows and all(
+        row["main"] == "al_drift_detection_spark.worker_daemon"
+        and row["pkg"].startswith(out)
+        for row in rows
+    ), rows

@@ -8,6 +8,11 @@ The zip contains the pure-python package only (no tests/tools); executors
 unpack it onto sys.path, the driver script ships separately as the
 spark-submit entry. Deterministic member order + zeroed timestamps so the
 artifact hash is reproducible build-to-build.
+
+Executors reach the zip only once a task runs, after their Python daemon has
+started, so on a cluster master `session.get_spark` keeps the stock
+`pyspark.daemon` instead of the engine's warm `worker_daemon` (which it uses
+on a local master, where executors share the driver's PYTHONPATH).
 """
 
 from __future__ import annotations
